@@ -42,7 +42,9 @@ def compare(got, want):
 def check(data_dir, results_dir, oracle_sql):
     """Failure lines for every query whose result differs from DuckDB's."""
     con = duckdb.connect()
-    con.execute("SET threads TO 2")
+    # the benchmark JVM has exited: DuckDB gets every core the run may use
+    cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count()
+    con.execute(f"SET threads TO {cpus}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{os.path.join(data_dir, t)}.parquet'")
     bad = []

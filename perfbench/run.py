@@ -34,7 +34,7 @@ PROGRAM_SRC = os.path.join(ROOT, "src", "main", "scala")
 DRIVER_SRC = os.path.join(BENCH, "src")
 
 WORKLOADS = ("serve_mixed", "analytics")
-END_TO_END = {"setup_s": "s", "ops_per_s": "1/s", "p50_ms": "ms"}
+END_TO_END = {"setup_s": "s", "ops_per_s": "1/s", "light_p50_ms": "ms", "heavy_p50_ms": "ms"}
 PER_LAYER = {
     "exec.jobs_per_op": "count", "exec.tasks_per_op": "count", "exec.task_ms_per_op": "ms",
     "exec.driver_ms_per_op": "ms", "exec.shuffle_bytes_per_op": "B", "exec.spill_bytes": "B",
@@ -230,8 +230,10 @@ def main(argv):
             gen.write_tables(data, args.seed)
             gen_s = time.monotonic() - t0
             cmd += ["--data", data]
+        t0 = time.monotonic()
         with open(os.path.join(work, "jvm.log"), "w") as log:
             rc = run_child(cmd, cwd=work, stdout=log, stderr=subprocess.STDOUT, timeout=JVM_TIMEOUT_S)
+        jvm_s = time.monotonic() - t0
         if rc != 0 or not os.path.exists(out):
             with open(os.path.join(work, "jvm.log")) as fh:
                 sys.stderr.write(fh.read()[-4000:])
@@ -240,12 +242,15 @@ def main(argv):
         failures = list(rec["failures"])
         failed = int(rec["failed"])
         if args.workload == "analytics":
+            t0 = time.monotonic()
             bad = oracle.check(os.path.join(work, "data"), rec["results_dir"], rec["oracle_sql"])
+            rec["oracle_s"] = time.monotonic() - t0
             failures += [f"oracle: {b}" for b in bad]
             failed += len(bad)
             rec["oracle_failures"] = bad
             rec["gen_s"] = gen_s
         rec["environment"] = environment(args, cpus)
+        rec["jvm_s"] = jvm_s
         attempted = int(rec["attempted"])
         rec["failed_frac"] = failed / max(1, attempted)
         names = PER_LAYER if args.trace else END_TO_END

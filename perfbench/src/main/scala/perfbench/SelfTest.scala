@@ -40,6 +40,11 @@ object SelfTest {
     m.deleteEntity("Agent#1")
     check(m.entity("Agent#1").isEmpty && m.deleted("Agent#1"), "delete removes the entity")
 
+    val wl = new ServeWorkload(null, 7, a)
+    val block = wl.blockOrder()
+    check(block.size == 10 && block.count(wl.WriteKinds.contains) == 4 && block.toSet == wl.Kinds.toSet,
+      "a serve block is four writes in ten and has every call kind")
+
     val rows = Array(Row(1, "a"), Row(2, "b"))
     check(Analytics.hash(rows) == Analytics.hash(rows.clone()), "hash is a function of the rows")
     check(Analytics.hash(rows) != Analytics.hash(Array(Row(1, "a"), Row(2, "c"))), "hash sees a changed value")

@@ -5,10 +5,11 @@ package perfbench
   * execution), else a job with no stage running (scheduling, result fetch),
   * else a planning phase, else the driver itself (store file-system work,
   * plan construction, collecting rows). The four self times therefore add up
-  * to the op's duration exactly.
+  * to the op's duration exactly. `outsideMs` is the child time that lay
+  * outside the op's span and was cut off: nonzero means misattribution.
   */
 final case class OpTrace(span: OpSpan, jobs: Seq[JobRec], stages: Seq[StageRec], qes: Seq[QeRec],
-    selfMs: Map[String, Long]) {
+    selfMs: Map[String, Long], outsideMs: Long) {
   def durMs: Long = span.endMs - span.startMs
   def jobCoveredMs: Long = selfMs("stage") + selfMs("scheduler")
   def planningMs: Long = qes.flatMap(_.phases).map { case (_, s, e) => e - s }.sum
@@ -35,12 +36,14 @@ object Trace {
       val js = jobsByOp.getOrElse(o.id, Nil)
       val ss = js.flatMap(j => stagesByJob.getOrElse(j.id, Nil))
       val qs = qeByOp.getOrElse(o.id, Nil)
-      def clip(s: Long, e: Long) = (math.max(s, o.startMs), math.min(if (e < 0) o.endMs else e, o.endMs))
-      val intervals =
-        ss.map(s => (clip(s.startMs, s.endMs), 3)) ++
-          js.map(j => (clip(j.startMs, j.endMs), 2)) ++
-          qs.flatMap(_.phases).map { case (_, s, e) => (clip(s, e), 1) }
-      OpTrace(o, js, ss, qs, selfTimes(o.startMs, o.endMs, intervals.filter { case ((s, e), _) => e > s }))
+      val raw =
+        ss.map(s => ((s.startMs, s.endMs), 3)) ++
+          js.map(j => ((j.startMs, if (j.endMs < 0) o.endMs else j.endMs), 2)) ++
+          qs.flatMap(_.phases).map { case (_, s, e) => ((s, e), 1) }
+      val clipped = raw.map { case ((s, e), pr) => ((math.max(s, o.startMs), math.min(e, o.endMs)), pr) }
+        .filter { case ((s, e), _) => e > s }
+      val outside = raw.map { case ((s, e), _) => math.max(0L, e - s) }.sum - clipped.map { case ((s, e), _) => e - s }.sum
+      OpTrace(o, js, ss, qs, selfTimes(o.startMs, o.endMs, clipped), outside)
     }
   }
 

@@ -92,6 +92,13 @@ class SummaryTest(unittest.TestCase):
             self.assertLessEqual(len(line.encode()), run.SUMMARY_LIMIT)
             self.assertEqual(sorted(json.loads(line)), ["attempted", "correct", "failed", "metrics"])
 
+    def test_metric_names_match_benchmark_json(self):
+        with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
+            spec = json.load(fh)
+        self.assertEqual({m["name"]: m["unit"] for m in spec["end_to_end"]}, run.END_TO_END)
+        self.assertEqual({m["name"]: m["unit"] for m in spec["per_layer"]}, run.PER_LAYER)
+        self.assertEqual([w["name"] for w in spec["workloads"]], list(run.WORKLOADS))
+
     def test_oversized_summary_is_refused(self):
         metrics = {f"m{i}": {"value": 1.0, "unit": "ms"} for i in range(100)}
         with self.assertRaises(run.BenchError):
