@@ -110,17 +110,6 @@ object Bench {
       // reports the -1 sentinel in the machine-readable JSON
       (name, if (ok) secs else -1.0, if (ok) secs2 else -1.0)
     }
-    // 3-decimal floats: the summary line must stay compact enough to
-    // survive a truncated stdout tail (round-16 verdict item 2 — the
-    // 9-decimal line was ~20 KB and never parsed by the driver)
-    def d3(v: Double) = f"$v%.3f"
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + d3(v) }
-      .mkString("{", ",", "}")
-    val qs2 = results.map { case (k, _, v2) => s"\"" + k + "\":" + d3(v2) }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
-    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
-
     // ── per-query regression guard (round-7 verdict item 2) ───────────────
     // bench_floor.json records each query's best observed t1 at sf0.1.
     // Compare min(t1, t2) — the warm rerun exists precisely to strip
@@ -194,28 +183,70 @@ object Bench {
     if (floors.nonEmpty && floorFail.isEmpty)
       System.err.println(s"[bench] floor guard: ${floorChecked} queries checked, " +
         s"${floorWarn.size} warn, ${floorNoise.size} noise, 0 fail")
-    def ratioJson(xs: Seq[(String, Double)]) = xs
-      .map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }.mkString("{", ",", "}")
-    val noiseJson = floorNoise
-      .map { case (k, sr, ir) => "\"" + k + "\":" + f"[$sr%.2f,$ir%.2f]" }
-      .mkString("{", ",", "}")
-
     // Two artifacts (round-16 verdict item 2):
     //  1. BENCH_OUT.json — the FULL per-query record (t1, t2, floor detail,
     //     applied conf overrides) at a fixed path, immune to tail capture.
     //  2. ONE compact stdout JSON line, LAST, with exactly the driver-keyed
     //     fields (value/queries/failed/floor verdicts) — t2 and the floor
     //     noise detail live in the file and on stderr, not in the line.
-    val confJson = extraConf
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"queries_t2":$qs2,"failed":${failed.mkString("[", ",", "]")},"floor_checked":${floorChecked},"floor_warn":${ratioJson(floorWarn)},"floor_fail":${ratioJson(floorFail)},"floor_noise":$noiseJson,"conf_overrides":$confJson,"cpus":$cpus,"sf":"$sfDir"}"""
+    val (fullJson, line) = summaries(results, floorChecked, floorWarn, floorFail,
+      floorNoise, extraConf.toSeq, cpus, sfDir)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_OUT.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_OUT.json write failed: ${e.getMessage}")
     }
-    println(s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"failed":${failed.mkString("[", ",", "]")},"floor_checked":${floorChecked},"floor_warn":${ratioJson(floorWarn)},"floor_fail":${ratioJson(floorFail)},"sf":"$sfDir"}""")
+    println(line)
     spark.stop()
+  }
+
+  /** `v` with `digits` decimals in Locale.ROOT: under a default locale that
+    * writes decimal commas (de_DE) `%.3f` would emit `1,234`, which is not
+    * a JSON number.
+    */
+  private[graft] def fixed(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped.
+    */
+  private[graft] def jsonString(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= String.format(java.util.Locale.ROOT, "\\u%04x", Int.box(c.toInt))
+      case c => b += c
+    }
+    b.append('"').toString
+  }
+
+  /** The run's two JSON summaries from its per-query (name, t1, t2) times
+    * (-1 = failed) and floor verdicts: the full record for BENCH_OUT.json,
+    * and the compact stdout line holding only the fields the driver keys
+    * off. 3-decimal times keep the line small enough to survive a truncated
+    * stdout tail (round-16 verdict item 2: the 9-decimal line was ~20 KB).
+    */
+  private[graft] def summaries(results: Seq[(String, Double, Double)],
+      floorChecked: Int, floorWarn: Seq[(String, Double)],
+      floorFail: Seq[(String, Double)], floorNoise: Seq[(String, Double, Double)],
+      conf: Seq[(String, String)], cpus: String, sfDir: String): (String, String) = {
+    def obj(kvs: Seq[(String, String)]) =
+      kvs.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
+    def ratios(xs: Seq[(String, Double)]) = obj(xs.map { case (k, r) => k -> fixed(r, 2) })
+    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
+    val failed = results.collect { case (k, v, _) if v < 0 => jsonString(k) }
+      .mkString("[", ",", "]")
+    val qs = obj(results.map { case (k, v, _) => k -> fixed(v, 3) })
+    val head = s""""metric":"total","value":${fixed(total, 3)},"unit":"sec","queries":$qs"""
+    val floor = s""""failed":$failed,"floor_checked":$floorChecked,""" +
+      s""""floor_warn":${ratios(floorWarn)},"floor_fail":${ratios(floorFail)}"""
+    val t2 = obj(results.map { case (k, _, v2) => k -> fixed(v2, 3) })
+    val noise = obj(floorNoise.map { case (k, sr, ir) => k -> s"[${fixed(sr, 2)},${fixed(ir, 2)}]" })
+    val confJson = obj(conf.map { case (k, v) => k -> jsonString(v) })
+    val sf = jsonString(sfDir)
+    (s"""{$head,"queries_t2":$t2,$floor,"floor_noise":$noise,""" +
+      s""""conf_overrides":$confJson,"cpus":${jsonString(cpus)},"sf":$sf}""",
+      s"""{$head,$floor,"sf":$sf}""")
   }
 }

@@ -285,7 +285,9 @@ object GraphAnalytics {
       val prev = cur2
       out = trussPeelRound(cur2, k) // edgeSupport settles eagerly inside
       cur2 = out.select("u", "v")
-      Settle.unpersistSettled(prev) // prev round's support blocks are dead
+      // prev round's support blocks are dead; round 1's input is the
+      // CALLER's frame, which this loop did not settle and must not drop
+      if (prev ne cur) Settle.unpersistSettled(prev)
     }
     out
   }

@@ -34,7 +34,6 @@ object Parallelism {
     * subsequent transformations.
     */
   def fanOutScan(df: DataFrame): DataFrame = {
-    if (sys.env.get("GRAFT_AB").exists(_.contains("nofan"))) return df
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val files = df.inputFiles.length

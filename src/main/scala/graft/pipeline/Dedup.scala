@@ -830,8 +830,6 @@ object Dedup {
     // silently-wrong representatives split duplicate clusters undetected —
     // fail loudly and let the caller raise maxIter (rounds needed ≈ the
     // deepest component's diameter)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged=$converged rounds=$rounds")
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge within $maxIter rounds — " +
         "a component's diameter exceeds maxIter; raise it")

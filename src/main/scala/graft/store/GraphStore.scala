@@ -244,19 +244,28 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
 
   // ── reads (facade over GraphOps, mirroring the six MCP tools) ───────────
 
-  /** Point lookup reads ONE FILE of one bucket: bucket pruning picks the
-    * 1/B slice, then the per-file key-range sidecar (buckets are written
-    * sorted by key into range-disjoint files) picks the single file whose
-    * range can hold the name — at B in the thousands a bucket is still
-    * tens of GB, so the in-bucket prune is what keeps a lookup I/O-bounded
-    * by one file/row-group at 100 TB.
+  /** Point lookup in ONE Spark job: the entity's row and its observations
+    * are two file-pruned reads (bucket pruning picks the 1/B slice, the
+    * per-file key-range sidecar the one file whose range can hold the
+    * name), unioned and collected once; the observations are ordered on
+    * the driver. Pruning keeps a lookup I/O-bounded by one file per table
+    * at 100 TB; the single scan-only job keeps it free of a sort's
+    * sampling and shuffle jobs.
     */
   def getEntity(name: String): Entity = {
-    val rows = GraphOps.getEntity(readTableKeys("entities", Seq(name)), name).collect()
-    if (rows.isEmpty) throw new NoSuchElementException(s"Entity not found: $name")
-    val obs = GraphOps.observationsFor(readTableKeys("observations", Seq(name)), name)
-      .orderBy("content").collect().map(_.getString(0)).toSeq
-    Entity(rows.head.getString(0), rows.head.getString(1), obs)
+    val rows = readTableKeys("entities", Seq(name))
+      .filter(col("name") === name)
+      .select(lit(true).as("is_entity"), col("entity_type").as("value"))
+      .union(readTableKeys("observations", Seq(name))
+        .filter(col("entity_name") === name)
+        .select(lit(false).as("is_entity"), col("content").as("value")))
+      .collect()
+    val (entity, obs) = rows.partition(_.getBoolean(0))
+    if (entity.isEmpty) throw new NoSuchElementException(s"Entity not found: $name")
+    // codepoint order (== Spark's UTF-8 string order), not JVM String
+    // UTF-16 order — they differ for supplementary-plane chars
+    Entity(name, entity.head.getString(1),
+      obs.map(_.getString(1)).sorted(CodepointOrdering).toSeq)
   }
 
   def searchNodes(query: String, limit: Int = DefaultSearchResults): (Seq[Entity], Seq[Relation]) = {
@@ -269,33 +278,48 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     graphResult(GraphOps.recentEntities(entities, 10))
 
   /** Execute the (already top-k-limited, relevance/recency-ordered) hit plan
-    * ONCE, then hydrate and fetch edges from the collected names — the
-    * reference returns entities in ranked order (client.ts:241-246) and
-    * re-running the full search scan for the edge lookup would double its
-    * cost. Hydration reads only the hit names' observation buckets.
+    * ONCE — the reference returns entities in ranked order
+    * (client.ts:241-246) — then fetch everything the hits need in ONE more
+    * Spark job: a union of three file-pruned reads keyed by the hit names,
+    * grouped and ordered on the driver.
+    *
+    *  - observations: the hits' buckets of `observations`;
+    *  - out-edges: `relations` (bucketed by source), `source ∈ hits`;
+    *  - in-edges: the target-bucketed mirror `relations_rev`,
+    *    `target ∈ hits ∧ source ∉ hits` — an edge whose source is a hit
+    *    already came in as an out-edge, so every touching edge (self-loops,
+    *    hit-to-hit edges, parallel edges) appears exactly once.
+    *
+    * No read scans a whole table and nothing shuffles. The in-edge read
+    * needs the reverse index in sync, which `initialize()` guarantees; a
+    * store written before round 11 must be opened with `initialize()`
+    * once (it backfills `relations_rev`) before it serves reads.
     */
-  private def graphResult(hits: DataFrame): (Seq[Entity], Seq[Relation]) = {
+  private[graft] def graphResult(hits: DataFrame): (Seq[Entity], Seq[Relation]) = {
     val ranked = hits.select("name", "entity_type").collect()
       .map(r => (r.getString(0), r.getString(1)))
     if (ranked.isEmpty) return (Nil, Nil) // client.ts:460-462 short-circuit
-    val names = ranked.map(_._1)
-    import spark.implicits._
-    val obsByName = readTableKeys("observations", names.toIndexedSeq)
-      .filter(col("entity_name").isin(names.toIndexedSeq: _*))
-      .select("entity_name", "content").collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (k, vs) =>
-        // codepoint order (== Spark sort_array's UTF-8 byte order), not JVM
-        // String UTF-16 order — they differ for supplementary-plane chars
-        k -> vs.map(_._2).sorted(GraphStore.CodepointOrdering).toSeq
-      }
-    val hydrated = ranked.map { case (n, t) =>
-      Entity(n, t, obsByName.getOrElse(n, Nil))
+    val names = ranked.map(_._1).toIndexedSeq
+    def hit(c: String) = col(c).isin(names: _*)
+    val obs = readTableKeys("observations", names).filter(hit("entity_name"))
+      .select(lit(false).as("is_edge"), col("entity_name").as("a"),
+        col("content").as("b"), lit(null).cast(StringType).as("c"))
+    def edges(df: DataFrame) = df.select(lit(true).as("is_edge"),
+      col("source").as("a"), col("target").as("b"), col("relation_type").as("c"))
+    val rows = obs
+      .union(edges(readTableKeys("relations", names).filter(hit("source"))))
+      .union(edges(readTableKeys("relations_rev", names)
+        .filter(hit("target") && !hit("source"))))
+      .collect()
+    val (edgeRows, obsRows) = rows.partition(_.getBoolean(0))
+    val obsByName = obsRows.groupBy(_.getString(1)).map { case (k, vs) =>
+      k -> vs.map(_.getString(2)).sorted(CodepointOrdering).toSeq
     }
-    val edges = GraphOps.relationsForEntities(relations, names.toSeq.toDF("name"))
-      .orderBy("from_entity", "to_entity", "relation_type").collect()
-      .map(r => Relation(r.getString(0), r.getString(1), r.getString(2)))
-    (hydrated.toSeq, edges.toSeq)
+    val hydrated = ranked.map { case (n, t) => Entity(n, t, obsByName.getOrElse(n, Nil)) }
+    val rels = edgeRows.map(r => Relation(r.getString(1), r.getString(2), r.getString(3)))
+      .sortBy(r => (r.from, r.to, r.relationType))(
+        Ordering.Tuple3(CodepointOrdering, CodepointOrdering, CodepointOrdering))
+    (hydrated.toSeq, rels.toSeq)
   }
 
   /** Register the three graph tables as temp views so the full Spark SQL

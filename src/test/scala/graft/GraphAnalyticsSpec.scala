@@ -650,6 +650,21 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
       k5.toSet)
   }
 
+  test("trussEdges/trussEdgesConverged leave the caller's localCheckpointed edge frame readable") {
+    // the loops drop each round's settled frame once the next settles; the
+    // round-1 input is the CALLER's frame, whose checkpoint blocks must
+    // survive (a dropped checkpoint block fails every later read)
+    val k5 = for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)
+    val pendant = Seq((5L, 11L), (5L, 12L), (11L, 12L))
+    val edges = (k5 ++ pendant).toDF("u", "v").localCheckpoint(true)
+    val want = (k5 ++ pendant).toSet
+    assert(GraphAnalytics.trussEdges(edges, k = 4, rounds = 2).count() == k5.size)
+    assert(edges.as[(Long, Long)].collect().toSet == want)
+    val fp = GraphAnalytics.trussEdgesConverged(edges, k = 4, maxRounds = 10)
+    assert(fp.converged && fp.result.count() == k5.size)
+    assert(edges.as[(Long, Long)].collect().toSet == want)
+  }
+
   test("lpaConverged: stable labels on a triangle in 3 rounds; bipartite 2-cycle hits the cap loudly") {
     // triangle {1,2,3}: l1 = (2,1,1) — each adopts its smallest-label
     // neighbor; l2 = (1,1,1) — 1's neighbors both carry 1 now; l3 confirms

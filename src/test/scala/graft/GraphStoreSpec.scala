@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.GraphOps
 import graft.store.{Entity, GraphStore, Relation}
 
 /** Port of the reference's behavioral test matrix
@@ -808,6 +809,33 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
       s"expected a loud missing-file failure, got: $err")
   }
 
+  /** Run `body` and count the Spark jobs it submitted. Listener delivery
+    * is async but ORDERED: once the event of one tagged sentinel job run
+    * after `body` arrives, every job `body` ran has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tag = s"jobsDuring-sentinel-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(_.getProperty("spark.job.description") == tag))
+          sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(tag)
+      try sc.parallelize(1 to 2, 1).count() finally sc.setJobDescription(null)
+      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "sentinel job event never arrived")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("metaRowCount: exact counts from sidecars, ZERO Spark jobs, footer fallback") {
     val st = freshStore()
     seed(st)
@@ -820,26 +848,10 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
         case "observations" => st.observations.count()
         case "relations" => st.relations.count()
       })).toMap
-    // count jobs submitted while metaRowCount runs — must be zero
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val got = Seq("entities", "observations", "relations")
-        .map(t => t -> st.metaRowCount(t)).toMap
-      // listener delivery is async but ORDERED: run one sentinel job and
-      // wait for its event — any job metaRowCount ran would be counted first
-      spark.sparkContext.parallelize(1 to 2, 1).count()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(got == want, s"meta counts $got != scan counts $want")
-      assert(jobs.get() == 1,
-        s"metaRowCount must not run Spark jobs (1 sentinel expected), saw ${jobs.get()}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (got, jobs) = jobsDuring(Seq("entities", "observations", "relations")
+      .map(t => t -> st.metaRowCount(t)).toMap)
+    assert(got == want, s"meta counts $got != scan counts $want")
+    assert(jobs == 0, s"metaRowCount must not run Spark jobs, saw $jobs")
     // footer fallback: delete every sidecar; counts must still be exact
     import java.nio.file.{Files => JFiles, Paths => JPaths}
     import scala.jdk.CollectionConverters._
@@ -1048,5 +1060,93 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     st2.deleteEntity("Bob")
     assert(st2.relations.count() == 1)
     assertRevMirror(st2)
+  }
+
+  test("serve reads run one Spark job each: getEntity hit and miss, readGraph's hydration, a search hit set's hydration") {
+    import spark.implicits._
+    // one bucket: every name shares the bucket, so a miss that sorts
+    // between stored names still reads a file (the worst case for a miss)
+    val st = new GraphStore(spark, Files.createTempDirectory("graft-store-").toString,
+      numBuckets = 1)
+    st.initialize()
+    seed(st)
+    st.createRelations(Seq(Relation("Alice", "Bob", "knows"),
+      Relation("Bob", "Acme Corp", "works_at")))
+    val (alice, hitJobs) = jobsDuring(st.getEntity("Alice"))
+    assert(alice == Entity("Alice", "person", Seq("software engineer")))
+    assert(hitJobs == 1, s"getEntity hit ran $hitJobs jobs")
+    assert(st.filesForKeys("entities", Seq("Alicia")).nonEmpty)
+    val (_, missJobs) = jobsDuring(intercept[NoSuchElementException](st.getEntity("Alicia")))
+    assert(missJobs == 1, s"getEntity miss ran $missJobs jobs")
+    // readGraph: one job for the top-10 recent hits, one for their rows
+    val ((ents, rels), graphJobs) = jobsDuring(st.readGraph())
+    assert(ents.map(_.name).toSet == Set("Alice", "Bob", "Acme Corp"))
+    assert(rels == Seq(Relation("Alice", "Bob", "knows"), Relation("Bob", "Acme Corp", "works_at")))
+    assert(graphJobs == 2, s"readGraph ran $graphJobs jobs")
+    // a search's hit set, collected to the driver (a local relation runs
+    // no job of its own): hydrating it — observations and edges — is 1 job
+    val hits = GraphOps.searchEntities(st.entities, st.observations, "person")
+      .select("name", "entity_type").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq.toDF("name", "entity_type")
+    val ((hitEnts, hitRels), hydrateJobs) = jobsDuring(st.graphResult(hits))
+    assert(hitEnts.map(_.name) == Seq("Alice", "Bob"))
+    assert(hitRels == rels)
+    assert(hydrateJobs == 1, s"hydrating a search hit set ran $hydrateJobs jobs")
+    assert(st.searchNodes("person") == (hitEnts, hitRels))
+  }
+
+  test("searchNodes/readGraph edges equal relationsForEntities over the hits, across mixed generations; codepoint order") {
+    import spark.implicits._
+    import GraphStore.Bucket
+    val st = new GraphStore(spark, Files.createTempDirectory("graft-store-").toString,
+      numBuckets = 2)
+    st.initialize()
+    // X and Y are created first, so readGraph's ten most recent are the
+    // second batch: A, B and eight fillers
+    st.createEntities(Seq(Entity("X", "other", Seq("x")), Entity("Y", "other", Seq("y"))))
+    // U+FF21 (fullwidth A) sorts before U+1F600 by codepoint, after it by
+    // UTF-16 unit (the emoji's high surrogate is 0xD83D)
+    val wide = "\uFF21 fullwidth"
+    val grin = "\uD83D\uDE00 grin"
+    st.createEntities(Seq(Entity("A", "kindA", Seq(grin, wide)), Entity("B", "kindA", Seq("b"))) ++
+      (1 to 8).map(i => Entity(s"f$i", "filler", Seq(s"f$i"))))
+    st.createRelations(Seq(
+      Relation("A", "A", "self"), // self-loop
+      Relation("A", "B", "ab"), Relation("B", "A", "ba"), // hit to hit, both ways
+      Relation("A", "B", "par"), Relation("A", "B", "par"), // parallel edges
+      Relation("A", "B", grin), Relation("A", "B", wide),
+      Relation("X", "A", "in"), // in-edge from a non-hit
+      Relation("B", "X", "out"), // out-edge to a non-hit
+      Relation("X", "Y", "none"), // touches no hit
+      Relation("Y", "f3", "in"), Relation("f5", "Y", "out")))
+    val byCodepoint = Ordering.Tuple3(GraphStore.CodepointOrdering,
+      GraphStore.CodepointOrdering, GraphStore.CodepointOrdering)
+    def check(stage: String): Unit = {
+      def want(names: Seq[String]) =
+        GraphOps.relationsForEntities(st.relations, names.toDF("name")).collect()
+          .map(r => Relation(r.getString(0), r.getString(1), r.getString(2)))
+          .sortBy(r => (r.from, r.to, r.relationType))(byCodepoint).toSeq
+      val (hits, rels) = st.searchNodes("kinda")
+      assert(hits.map(_.name).toSet == Set("A", "B"), stage)
+      assert(rels == want(hits.map(_.name)), stage)
+      assert(rels.count(_ == Relation("A", "A", "self")) == 1, stage)
+      assert(rels.count(_ == Relation("A", "B", "par")) == 2, stage)
+      assert(rels.contains(Relation("X", "A", "in")) && !rels.exists(_.relationType == "none"), stage)
+      assert(rels.indexOf(Relation("A", "B", wide)) < rels.indexOf(Relation("A", "B", grin)), stage)
+      assert(hits.find(_.name == "A").get.observations == Seq(wide, grin), stage)
+      val (recent, graphRels) = st.readGraph()
+      assert(recent.map(_.name).toSet == Set("A", "B") ++ (1 to 8).map(i => s"f$i"), stage)
+      assert(graphRels == want(recent.map(_.name)), stage)
+      assert(graphRels.contains(Relation("Y", "f3", "in")), stage)
+      assert(st.getEntity("A").observations == Seq(wide, grin), stage)
+    }
+    assert(Seq(wide, grin).sorted != Seq(wide, grin)) // the two orders differ
+    check("generation 0")
+    // split one bucket of each edge table: gen-0 and gen-1 buckets coexist
+    st.splitBucket("relations", Bucket(0, GraphStore.bucketFor("A", 2)))
+    st.splitBucket("relations_rev", Bucket(0, GraphStore.bucketFor("B", 2)))
+    assert(st.liveBuckets("relations").map(_.gen).toSet == Set(0, 1))
+    assert(st.liveBuckets("relations_rev").map(_.gen).toSet == Set(0, 1))
+    check("mixed generations")
   }
 }
