@@ -40,6 +40,7 @@ object Bench {
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietRddLogs()
     // Untimed warmup: JVM/codegen/parquet-footer costs land here instead of
     // inflating whichever query the map iterates first.
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -52,7 +53,7 @@ object Bench {
     // this explicit prepare step may run outside the timers.
     try SparkEntry.prepareSetups(spark, sfDir)
     catch { case e: Throwable =>
-      System.err.println(s"[bench] prepareSetups failed: ${e.getMessage}")
+      System.err.println(s"[bench] prepareSetups failed: ${failure(e)}")
     }
     spark.catalog.clearCache()
     // Local profiling aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run to a
@@ -87,7 +88,7 @@ object Bench {
           val b = if (twice) timedRun(fn) else -1.0
           (true, a, b)
         } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+          System.err.println(s"[bench] $name FAILED: ${failure(e)}")
           (false, -1.0, -1.0)
         }
       // Suite hygiene: a query's cached/checkpoint blocks must not tax the
@@ -152,7 +153,7 @@ object Bench {
         System.err.println(f"[bench] floor-adjudicate $name%-24s isolated best-of-2 ${t}%.2fs")
         t
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] floor-adjudicate $name rerun FAILED: ${e.getMessage}")
+        System.err.println(s"[bench] floor-adjudicate $name rerun FAILED: ${failure(e)}")
         -1.0
       }
     }
@@ -194,11 +195,32 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_OUT.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_OUT.json write failed: ${e.getMessage}")
+      System.err.println(s"[bench] BENCH_OUT.json write failed: ${failure(e)}")
     }
     println(line)
     spark.stop()
   }
+
+  /** A failure as one log line: exception class, message (often null for
+    * NPEs and assertion errors) and the top stack frame — enough to find
+    * the fault without rerunning the query.
+    */
+  private[graft] def failure(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage} at " +
+      e.getStackTrace.headOption.map(_.toString).getOrElse("<no frame>")
+
+  /** Lower `org.apache.spark.rdd` to ERROR for this process: the operators
+    * unpersist settled checkpoints on purpose, and each unpersist would
+    * otherwise log a "lineage has been truncated" warning into the suite
+    * log. The warning's logger is named after the RDD's runtime subclass,
+    * hence the package target. Harness mains only: library code leaves
+    * logging alone. Call after the session exists — Spark's own log setup
+    * would otherwise reset it.
+    */
+  private[graft] def quietRddLogs(): Unit =
+    try org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    catch { case _: Throwable => () }
 
   /** `v` with `digits` decimals in Locale.ROOT: under a default locale that
     * writes decimal commas (de_DE) `%.3f` would emit `1,234`, which is not

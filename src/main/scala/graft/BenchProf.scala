@@ -66,13 +66,14 @@ object BenchProf {
     val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Bench.quietRddLogs()
     val col = new Collector
     spark.sparkContext.addSparkListener(col)
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     catch { case _: Throwable => () }
     try SparkEntry.prepareSetups(spark, sfDir)
     catch { case e: Throwable =>
-      System.err.println(s"[prof] prepareSetups failed: ${e.getMessage}")
+      System.err.println(s"[prof] prepareSetups failed: ${Bench.failure(e)}")
     }
     spark.catalog.clearCache()
     val names = if (args.nonEmpty) args.toSeq else Seq("graph_ktruss")

@@ -28,6 +28,7 @@ object Explain {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Bench.quietRddLogs()
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -23,6 +23,7 @@ object Verify {
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Bench.quietRddLogs()
     new java.io.File(outDir).mkdirs()
     // Local iteration aid (mirrors Bench): SPARK_GRAFT_ONLY=q1,q2 restricts
     // the dump to a subset. Unset for the driver, which needs all queries.
@@ -34,7 +35,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.failure(e)}")
       }
       // suite hygiene (mirrors Bench): deterministically unpersist every
       // block the finished query left behind (safe: frames are query-scoped)

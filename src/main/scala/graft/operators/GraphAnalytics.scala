@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Settle.{Fixpoint, fixpoint, noneWhere, settleCounted, unchanged}
+
 /** Iterative graph analytics beyond connected components (Dedup.scala).
   *
   * PageRank here is FIXED-POINT INTEGER PageRank: ranks are scaled longs and
@@ -19,32 +21,33 @@ import org.apache.spark.sql.functions._
   *  - each iteration is exactly one shuffle: the groupBy(dst) that sums the
   *    received contributions. Out-degrees are computed once.
   *  - the rank frame stays (node, long) — O(V) rows, never the edge list.
-  *  - iterations are fixed and small (3–20); lineage stays shallow so no
-  *    checkpointing is needed (contrast the unbounded CC loop, Dedup.scala,
-  *    which checkpoints per round).
+  *  - PageRank's iterations are fixed and small (≤ 50) and carry only the
+  *    O(V) received-mass frame, so it runs without a per-round settle. The
+  *    peel, label and distance loops instead settle (local-checkpoint and
+  *    count) EVERY round through the one round loop, [[Settle.fixpoint]]:
+  *    lineage stays one round deep and round N−1's blocks are dropped as
+  *    soon as round N settles (the same loop runs Dedup's CC).
   */
 object GraphAnalytics {
 
-  /** Materialize-and-count in ONE job: lazy local checkpoint, then count
-    * the checkpointed InternalRows directly — an RDD count, so the job
-    * that produces the count IS the job that persists the partitions.
-    * The eager-checkpoint-then-count pairs it replaces cost two to three
-    * jobs per round (rdd.count to materialize, then a separate SQL count
-    * with its own single-partition exchange) across every iterative loop
-    * here — pure scheduler overhead at any scale, and the dominant cost
-    * of a round on small per-round frames.
-    */
-  private def settleCounted(df: DataFrame): (DataFrame, Long) = {
-    val cp = df.localCheckpoint(false)
-    (cp, cp.queryExecution.toRdd.count())
-  }
-
   /** Size-gate from an ALREADY-KNOWN row count — the loops below track
-    * each round's frame size from [[settleCounted]], so the per-round
-    * `broadcastGated` count jobs (one more job per round) are unnecessary.
+    * each round's frame size from [[Settle.settleCounted]], so the
+    * per-round `broadcastGated` count jobs (one more job per round) are
+    * unnecessary.
     */
   private def bcRows(rows: Long): DataFrame => DataFrame =
     df => Hints.broadcastIfUnder(df, rows)
+
+  /** Both orientations (a, b) of every undirected (u, v) edge, ids cast to
+    * long; each `carry` column (cast to long) rides along on both arcs.
+    */
+  private def arcs(edges: DataFrame, carry: String*): DataFrame = {
+    val e = edges.select(col("u").cast("long").as("u") +: col("v").cast("long").as("v") +:
+      carry.map(c => col(c).cast("long").as(c)): _*)
+    val rest = carry.map(col)
+    e.select(col("u").as("a") +: col("v").as("b") +: rest: _*)
+      .union(e.select(col("v").as("a") +: col("u").as("b") +: rest: _*))
+  }
 
   /** PageRank over directed `edges` with columns (src: long, dst: long).
     * Multi-edges count once per occurrence (out-degree counts edges, and each
@@ -269,27 +272,7 @@ object GraphAnalytics {
   def trussEdges(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1 && rounds <= 10,
       s"need k >= 3 and rounds in [1, 10], got k=$k rounds=$rounds")
-    val cur = edges.select(
-      least(col("u"), col("v")).cast("long").as("u"),
-      greatest(col("u"), col("v")).cast("long").as("v"))
-    // Each round is a full edgeSupport re-enumeration of the (shrinking)
-    // survivor set. A decremental formulation (trussDecRound) was measured
-    // at sf0.1 and LOST on this workload: with ~10^6 survivors and sliver
-    // removals, the per-round anti-join + checkpoint + closure joins cost
-    // as much as re-enumerating — the decremental operator is kept for its
-    // real use case (maintaining supports under edge DELETIONS, the
-    // removal-side sibling of incrementalTriangleCounts), not the peel loop.
-    var cur2 = cur
-    var out: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val prev = cur2
-      out = trussPeelRound(cur2, k) // edgeSupport settles eagerly inside
-      cur2 = out.select("u", "v")
-      // prev round's support blocks are dead; round 1's input is the
-      // CALLER's frame, which this loop did not settle and must not drop
-      if (prev ne cur) Settle.unpersistSettled(prev)
-    }
-    out
+    truss(edges, k, rounds, converge = false).result
   }
 
   /** O(batch) incremental triangle-count maintenance: given per-node
@@ -508,49 +491,13 @@ object GraphAnalytics {
     * ONCE and cached; each round is (a) a semi-join of adjacency against
     * the current survivor set on BOTH endpoints and (b) one groupBy(count)
     * — 2–3 exchanges of an O(V) frame per round, never a re-shuffle of the
-    * O(E) adjacency. Lineage grows linearly in R (small, ≤ ~12), so no
-    * checkpointing is needed; the cache is released before returning.
+    * O(E) adjacency. Each round's survivor frame is settled (checkpointed
+    * and counted in one job) by [[Settle.fixpoint]], so lineage stays one
+    * round deep; the cache is released before returning.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 30)
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-      .repartition(col("a"))
-      .cache()
-    // survivors carried as (node) — O(V); degree recomputed per round from
-    // the cached adjacency restricted to surviving endpoints on both sides.
-    // Each round references the previous survivor frame TWICE (both
-    // endpoint semi-joins), so an unmaterialized lineage would recompute
-    // early rounds 2^R times; the per-round eager localCheckpoint (same
-    // discipline as the CC loop, Dedup.scala) keeps every round O(1) jobs
-    // over an O(V) frame.
-    // The survivor frame is O(V) and shrinks every round — BROADCAST it
-    // into both semi-joins so the O(E) cached adjacency is probed in place
-    // (map-side) instead of being re-sorted/re-shuffled twice per round.
-    // The hint is gated on the INITIAL node count (survivors only shrink):
-    // past the cap it drops out and every round plans shuffled semi-joins.
-    val (surv0, vRows) = settleCounted(
-      adj.select(col("a").as("node")).distinct())
-    var surv = surv0
-    def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    for (_ <- 1 to rounds) {
-      val prev = surv
-      surv = kCorePeelRound(adj, surv, k, bc).localCheckpoint(true)
-      // round N's survivors are dead the moment round N+1 settles — drop
-      // the blocks now instead of waiting for a GC-driven ContextCleaner
-      // pass (round-16 suite-state discipline)
-      Settle.unpersistSettled(prev)
-    }
-    // final pass re-attaches the in-core degree for the output frame
-    val out = adj
-      .join(bc(surv.withColumnRenamed("node", "a")), Seq("a"), "left_semi")
-      .join(bc(surv.withColumnRenamed("node", "b")), Seq("b"), "left_semi")
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))
-      .filter(col("core_deg") >= k)
-    val mat = out.localCheckpoint(true)
-    adj.unpersist(false)
-    mat
+    kCoreRun(edges, k, rounds, converge = false).result
   }
 
   /** Personalized PageRank (Haveliwala, "Topic-Sensitive PageRank", WWW
@@ -649,36 +596,7 @@ object GraphAnalytics {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds must be in [1, 20], got $rounds")
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val adjRaw = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-    val (labels0, vRows) = settleCounted(
-      adjRaw.select(col("a").as("node")).distinct()
-        .withColumn("lbl", col("node")))
-    var labels = labels0
-    def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    // Cache partitioning picks the round's ZERO-exchange key (the kCore
-    // discipline): while the label frame rides the broadcast (vRows under
-    // the gate), the b-join is map-side and partitioning by the AGGREGATION
-    // key `a` lets both per-round groupBys reuse the cache's partitioning —
-    // no data exchange per round at all. Past the gate the label join goes
-    // shuffled on b, so b-partitioning (the old layout) keeps the O(E)
-    // adjacency from re-shuffling every round instead.
-    val underGate = vRows <= Hints.maxRows(edges)
-    val adj = adjRaw
-      .repartition(if (underGate) col("a") else col("b"))
-      .cache()
-    // past the gate the (a,lbl) census shuffles O(E) partials per round —
-    // pack the key into one long when ids fit 31 bits (§2.3); under the
-    // gate the rounds are exchange-free and packing would break that
-    val pack = !underGate && lpaIdsPackable(labels0)
-    for (_ <- 1 to rounds) {
-      val prev = labels
-      labels = lpaRound(adj, labels, bc, pack).localCheckpoint(true)
-      Settle.unpersistSettled(prev) // round N-1's labels are dead now
-    }
-    adj.unpersist(false)
-    labels
+    lpa(edges, rounds, converge = false).result
   }
 
   /** Fixed-round breadth-first shortest distances from a single source over
@@ -717,62 +635,36 @@ object GraphAnalytics {
     */
   def sssp(edges: DataFrame, src: Long, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 30)
-    val e = edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v"), col("w").cast("long").as("w"))
-    val adj = e.select(col("u").as("a"), col("v").as("b"), col("w"))
-      .union(e.select(col("v").as("a"), col("u").as("b"), col("w")))
-      .repartition(col("a"))
-      .cache()
-    val spark = edges.sparkSession
-    var dist = spark.range(1)
-      .select(lit(src).as("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    // the O(≤V) frame broadcasts into the relaxation join, size-gated per
-    // round from the PREVIOUS round's settled count (the frontier GROWS;
-    // past the cap the round plans a shuffled join). Threading the count
-    // through settleCounted removes two jobs per round vs the old
-    // eager-checkpoint + broadcastGated(count) pair.
-    var n = 1L
-    for (_ <- 1 to rounds) {
-      val (d2, n2) = settleCounted(ssspRelaxRound(adj, dist, bcRows(n)))
-      Settle.unpersistSettled(dist) // prev round's frame is dead once d2 settles
-      dist = d2; n = n2
-    }
-    adj.unpersist(false)
-    dist
+    ssspRun(edges, src, rounds, converge = false).result
   }
 
-  // ── convergence-guarded variants of the fixed-round family ─────────────
+  // ── one loop, two entry points per algorithm ───────────────────────────
   //
-  // The fixed-round operators above are the ORACLE-REPLAYABLE form: the
-  // DuckDB twin unrolls the identical R rounds as chained CTEs, so results
-  // hash-match whether or not R reached the fixpoint. At 100× the data the
-  // tuned R may stop short — the query silently becomes "R rounds of peel,"
-  // not "the k-truss." These variants close that gap: they run the same
-  // per-round step with a CHEAP early-exit (survivor-count equality for the
-  // monotone peels — nested sets make count equality ⇔ set equality — and a
-  // changed-rows count for the non-monotone label/distance maps) under a
-  // hard `maxRounds` cap, and report how many rounds they used and whether
-  // the fixpoint was actually reached. The early-exit check is O(1) (a
-  // count over an eagerly-checkpointed O(V) frame) or one O(V) join per
-  // round — negligible against the round's own shuffle. The declared
-  // `graph_*_fixpoint` queries pin this machinery against oracles that
-  // replay the capped unroll and compute rounds_used/converged in SQL.
-
-  /** Result of a run-to-fixpoint iteration: the final frame, the number of
-    * rounds executed (the confirming round — the first whose output equals
-    * its input — counts), and whether the fixpoint was reached within the
-    * cap. `converged = false` means `result` is the capped approximation
-    * and the caller must widen `maxRounds` (or accept R-rounds semantics).
-    */
-  final case class Fixpoint(result: DataFrame, roundsUsed: Int, converged: Boolean)
-
-  // The per-round STEPS below are shared verbatim between each fixed-round
-  // operator and its *Converged twin, so "the converged variant runs the
-  // identical per-round plan" is true by construction — the convergence
-  // guard adds only a count over the round's eager checkpoint (monotone
-  // peels) or one O(V) broadcast join against the previous checkpointed
-  // frame (labels/distances), never a different round dataflow. PlanSpec
+  // kCore, trussEdges, labelPropagation and sssp/bfs above are the
+  // ORACLE-REPLAYABLE form: the DuckDB twin unrolls the identical R rounds
+  // as chained CTEs, so results hash-match whether or not R reached the
+  // fixpoint. At 100× the data the tuned R may stop short — the query
+  // silently becomes "R rounds of peel," not "the k-truss." The *Converged
+  // entry points below close that gap. Each pair shares ONE private body
+  // (kCoreRun, truss, lpa, ssspRun) that supplies the seed, the per-round
+  // step and its exit test, and runs it through the one round loop,
+  // [[Settle.fixpoint]], which owns the settle, the round cap, the stop
+  // test and the unpersist of each dead round. A fixed-round entry point
+  // passes no stop test and runs exactly R rounds; a converged one passes a
+  // CHEAP exit test under a hard `maxRounds` cap — survivor-count equality
+  // for the monotone peels (nested sets make count equality ⇔ set
+  // equality), a changed-rows count over the settled round for the
+  // non-monotone label/distance maps — and the Fixpoint record reports how
+  // many rounds ran and whether the fixpoint was reached. The declared
+  // `graph_*_fixpoint` queries pin this against oracles that replay the
+  // capped unroll and compute rounds_used/converged in SQL.
+  //
+  // The per-round STEPS below are the same functions in both forms, so
+  // "the converged variant runs the identical per-round plan" is true by
+  // construction — the exit test adds only a count over the round's
+  // settled frame (monotone peels: the settle's own count) or a change
+  // flag riding the round's plan plus one filter-count over the settled
+  // blocks (labels/distances), never a different round dataflow. PlanSpec
   // pins each step's physical shape (broadcast joins, no sort-merge, no
   // extra exchange) and that the changed-rows probe plans no data shuffle.
 
@@ -944,39 +836,42 @@ object GraphAnalytics {
 
   /** Run-to-fixpoint [[kCore]]: identical per-round peel, stops at the
     * first round that drops no node. Survivor sets are nested, so the
-    * count-equality exit is exact, costing one metadata-count per round.
+    * count-equality exit is exact and costs nothing beyond the settle's
+    * own count.
     */
   def kCoreConverged(edges: DataFrame, k: Int, maxRounds: Int): Fixpoint = {
     require(k >= 1 && maxRounds >= 1 && maxRounds <= 200)
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-      .repartition(col("a"))
-      .cache()
-    // settleCounted fuses each round's materialization with its
-    // convergence count — one job where checkpoint-then-count was two
-    var (surv, prevN) = settleCounted(
-      adj.select(col("a").as("node")).distinct())
-    val vRows = prevN
+    kCoreRun(edges, k, maxRounds, converge = true)
+  }
+
+  /** The peel loop behind [[kCore]] and [[kCoreConverged]]. The symmetric
+    * adjacency is partitioned and cached once; survivors are carried as
+    * (node) — O(V) — and each round recomputes degrees from the cached
+    * adjacency restricted to surviving endpoints on both sides. A round
+    * reads the previous survivor frame TWICE (both endpoint semi-joins), so
+    * an unsettled lineage would recompute early rounds 2^R times.
+    */
+  private def kCoreRun(edges: DataFrame, k: Int, maxRounds: Int,
+      converge: Boolean): Fixpoint = {
+    val adj = arcs(edges).repartition(col("a")).cache()
+    // The survivor frame is O(V) and shrinks every round — BROADCAST it
+    // into both semi-joins so the O(E) cached adjacency is probed in place
+    // (map-side) instead of being re-sorted/re-shuffled twice per round.
+    // The hint is gated on the INITIAL node count (survivors only shrink):
+    // past the cap it drops out and every round plans shuffled semi-joins.
+    val (surv0, vRows) = settleCounted(adj.select(col("a").as("node")).distinct())
     def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    var used = 0
-    var converged = false
-    while (used < maxRounds && !converged) {
-      used += 1
-      val (s2, n) = settleCounted(kCorePeelRound(adj, surv, k, bc))
-      Settle.unpersistSettled(surv)
-      surv = s2
-      if (n == prevN) converged = true
-      prevN = n
-    }
+    val fp = fixpoint(surv0, vRows, maxRounds, Option.when(converge)(unchanged))(
+      (surv, _) => kCorePeelRound(adj, surv, k, bc))
+    // final pass re-attaches the in-core degree for the output frame
     val out = adj
-      .join(bc(surv.withColumnRenamed("node", "a")), Seq("a"), "left_semi")
-      .join(bc(surv.withColumnRenamed("node", "b")), Seq("b"), "left_semi")
+      .join(bc(fp.result.withColumnRenamed("node", "a")), Seq("a"), "left_semi")
+      .join(bc(fp.result.withColumnRenamed("node", "b")), Seq("b"), "left_semi")
       .groupBy(col("a").as("node")).agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k)
     val mat = out.localCheckpoint(true)
     adj.unpersist(false)
-    Fixpoint(mat, used, converged)
+    fp.copy(result = mat)
   }
 
   /** Run-to-fixpoint [[trussEdges]]: identical cascading support peel,
@@ -988,87 +883,86 @@ object GraphAnalytics {
   def trussEdgesConverged(edges: DataFrame, k: Int, maxRounds: Int): Fixpoint = {
     require(k >= 3 && maxRounds >= 1 && maxRounds <= 50,
       s"need k >= 3 and maxRounds in [1, 50], got k=$k maxRounds=$maxRounds")
-    val cur = edges.select(
+    truss(edges, k, maxRounds, converge = true)
+  }
+
+  /** The peel loop behind [[trussEdges]] and [[trussEdgesConverged]]. Each
+    * round is a full edgeSupport re-enumeration of the (shrinking) survivor
+    * set. A decremental formulation (trussDecRound) was measured at sf0.1
+    * and LOST on this workload: with ~10^6 survivors and sliver removals,
+    * the per-round anti-join + checkpoint + closure joins cost as much as
+    * re-enumerating — the decremental operator is kept for its real use
+    * case (maintaining supports under edge DELETIONS, the removal-side
+    * sibling of incrementalTriangleCounts), not the peel loop.
+    *
+    * edgeSupport settles each round eagerly inside the step, so the fixed
+    * form's settle is the identity and counts nothing; its seed is a
+    * projection over the CALLER's frame, which the loop must not drop. The
+    * converged form settles and counts its own seed, then counts each
+    * round's survivors over the settled support blocks (one RDD job).
+    */
+  private def truss(edges: DataFrame, k: Int, maxRounds: Int, converge: Boolean): Fixpoint = {
+    val canon = edges.select(
       least(col("u"), col("v")).cast("long").as("u"),
       greatest(col("u"), col("v")).cast("long").as("v"))
-      .localCheckpoint(false)
-    // toRdd.count: one RDD job materializes the lazy checkpoint AND counts
-    // it (the SQL count it replaces planned its own single-partition
-    // exchange — an extra job per call)
-    var prevM = cur.queryExecution.toRdd.count()
-    // identical round structure to [[trussEdges]] (full re-enumeration per
-    // round — see the measured note there on why not decremental)
-    var cur2: DataFrame = cur
-    var out: DataFrame = null
-    var used = 0
-    var converged = false
-    while (used < maxRounds && !converged) {
-      used += 1
-      val prev = cur2
-      out = trussPeelRound(cur2, k)
-      cur2 = out.select("u", "v")
-      // edgeSupport eagerly checkpointed inside the peel — this counts the
-      // support filter over those cached blocks in one cheap RDD job
-      val m = cur2.queryExecution.toRdd.count()
-      Settle.unpersistSettled(prev) // prev round's support blocks are dead
-      if (m == prevM) converged = true
-      prevM = m
+    val peel = (cur: DataFrame, _: Long) => trussPeelRound(cur.select("u", "v"), k)
+    if (!converge) fixpoint(canon, 0L, maxRounds, settle = df => (df, 0L), seedOwned = false)(peel)
+    else {
+      val (seed, m) = settleCounted(canon)
+      fixpoint(seed, m, maxRounds, Some(unchanged),
+        settle = df => (df, df.queryExecution.toRdd.count()))(peel)
     }
-    Fixpoint(out, used, converged)
   }
 
   /** Run-to-fixpoint [[labelPropagation]]: identical synchronous round,
     * stops when no node changes its label. Labels are NOT monotone, so the
-    * exit is a changed-rows count — one O(V) equi-join per round against
-    * the previous (checkpointed) label frame. Synchronous LPA can 2-cycle
-    * on bipartite structure; the cap turns that into a loud
+    * exit is a changed-rows count. Synchronous LPA can 2-cycle on
+    * bipartite structure; the cap turns that into a loud
     * `converged = false` instead of an infinite loop.
     */
   def lpaConverged(edges: DataFrame, maxRounds: Int): Fixpoint = {
     require(maxRounds >= 1 && maxRounds <= 100)
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val adjRaw = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
+    lpa(edges, maxRounds, converge = true)
+  }
+
+  /** The label loop behind [[labelPropagation]] and [[lpaConverged]]. The
+    * converged form's changed-rows probe rides the round plan itself: the
+    * previous label is attached by one broadcast join INSIDE the round, the
+    * round settles once, and the change count is read off the settled
+    * frame — no separate probe execution (broadcast build + join + count)
+    * per round.
+    */
+  private def lpa(edges: DataFrame, maxRounds: Int, converge: Boolean): Fixpoint = {
+    val adjRaw = arcs(edges)
     val (labels0, vRows) = settleCounted(
       adjRaw.select(col("a").as("node")).distinct()
         .withColumn("lbl", col("node")))
-    var labels = labels0
-    var settledPrev = labels0
     def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    // zero-exchange round key while labels broadcast — see labelPropagation
+    // Cache partitioning picks the round's ZERO-exchange key (the kCore
+    // discipline): while the label frame rides the broadcast (vRows under
+    // the gate), the b-join is map-side and partitioning by the AGGREGATION
+    // key `a` lets both per-round groupBys reuse the cache's partitioning —
+    // no data exchange per round at all. Past the gate the label join goes
+    // shuffled on b, so b-partitioning (the old layout) keeps the O(E)
+    // adjacency from re-shuffling every round instead.
     val underGate = vRows <= Hints.maxRows(edges)
     val adj = adjRaw
       .repartition(if (underGate) col("a") else col("b"))
       .cache()
-    // packed (a,lbl) census key past the gate — see labelPropagation
+    // past the gate the (a,lbl) census shuffles O(E) partials per round —
+    // pack the key into one long when ids fit 31 bits (§2.3); under the
+    // gate the rounds are exchange-free and packing would break that
     val pack = !underGate && lpaIdsPackable(labels0)
-    var used = 0
-    var converged = false
-    while (used < maxRounds && !converged) {
-      used += 1
-      // the changed-rows probe rides the round plan itself: attach the
-      // previous label via one broadcast join INSIDE the round (labels are
-      // not monotone, so a count-equality exit is not available), settle
-      // once, and read the changed count off the settled frame — where the
-      // old shape paid a whole separate probe execution (broadcast build +
-      // join + count) per round
-      val flagged = lpaRound(adj, labels, bc, pack)
-        .join(bc(labels.select(col("node"), col("lbl").as("prev_lbl"))),
-          Seq("node"))
-        .select(col("node"), col("lbl"),
-          (col("lbl") =!= col("prev_lbl")).as("_chg"))
-      val (next, _) = settleCounted(flagged)
-      // RDD count over the settled blocks — one job, no agg exchange
-      val changed = next.filter(col("_chg")).queryExecution.toRdd.count()
-      if (changed == 0) converged = true
-      // `labels` is a projection over the previous settled frame — drop
-      // that frame's blocks now that `next` has settled
-      Settle.unpersistSettled(settledPrev)
-      settledPrev = next
-      labels = next.select("node", "lbl")
+    val fp = fixpoint(labels0, vRows, maxRounds,
+        Option.when(converge)(noneWhere(col("_chg")))) { (prev, _) =>
+      val labels = prev.select("node", "lbl")
+      val next = lpaRound(adj, labels, bc, pack)
+      if (!converge) next
+      else next.join(bc(labels.select(col("node"), col("lbl").as("prev_lbl"))), Seq("node"))
+        .select(col("node"), col("lbl"), (col("lbl") =!= col("prev_lbl")).as("_chg"))
     }
     adj.unpersist(false)
-    Fixpoint(labels, used, converged)
+    fp.copy(result = fp.result.select("node", "lbl"))
   }
 
   /** Run-to-fixpoint [[sssp]]: identical min-plus relaxation, stops when a
@@ -1082,36 +976,29 @@ object GraphAnalytics {
     */
   def ssspConverged(edges: DataFrame, src: Long, maxRounds: Int): Fixpoint = {
     require(maxRounds >= 1 && maxRounds <= 200)
-    val e = edges.select(col("u").cast("long").as("u"),
-      col("v").cast("long").as("v"), col("w").cast("long").as("w"))
-    val adj = e.select(col("u").as("a"), col("v").as("b"), col("w"))
-      .union(e.select(col("v").as("a"), col("u").as("b"), col("w")))
-      .repartition(col("a"))
-      .cache()
-    val spark = edges.sparkSession
-    var dist = spark.range(1)
+    ssspRun(edges, src, maxRounds, converge = true)
+  }
+
+  /** The relaxation loop behind [[sssp]] and [[ssspConverged]]: adjacency
+    * partitioned and cached once, O(≤V) distance frame per round. The frame
+    * broadcasts into the relaxation join, size-gated per round from the
+    * PREVIOUS round's settled count (the frontier GROWS; past the cap the
+    * round plans a shuffled join) — no per-round count job.
+    */
+  private def ssspRun(edges: DataFrame, src: Long, maxRounds: Int,
+      converge: Boolean): Fixpoint = {
+    val adj = arcs(edges, "w").repartition(col("a")).cache()
+    val seed = edges.sparkSession.range(1)
       .select(lit(src).as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    var settledPrev = dist
-    var n = 1L
-    var used = 0
-    var converged = false
-    while (used < maxRounds && !converged) {
-      used += 1
-      val (next, n2) = settleCounted(ssspRelaxRoundFlagged(adj, dist, bcRows(n)))
-      // RDD count of the filter over the settled blocks: one job, no
-      // single-partition aggregate exchange
-      val changed = next
-        .filter(col("prev").isNull || col("prev") =!= col("dist"))
-        .queryExecution.toRdd.count()
-      if (changed == 0) converged = true
-      Settle.unpersistSettled(settledPrev)
-      settledPrev = next
-      dist = next.select("node", "dist")
-      n = n2
+    val relax: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame =
+      if (converge) ssspRelaxRoundFlagged else ssspRelaxRound
+    val fp = fixpoint(seed, 1L, maxRounds,
+        Option.when(converge)(noneWhere(col("prev").isNull || col("prev") =!= col("dist")))) {
+      (dist, n) => relax(adj, dist.select("node", "dist"), bcRows(n))
     }
     adj.unpersist(false)
-    Fixpoint(dist, used, converged)
+    fp.copy(result = fp.result.select("node", "dist"))
   }
 
   /** Run-to-fixpoint [[bfs]]: [[ssspConverged]] with unit weights — stops
@@ -1121,9 +1008,7 @@ object GraphAnalytics {
   def bfsConverged(edges: DataFrame, src: Long, maxRounds: Int): Fixpoint = {
     val fp = ssspConverged(
       edges.select(col("u"), col("v"), lit(1L).as("w")), src, maxRounds)
-    Fixpoint(
-      fp.result.select(col("node"), col("dist").cast("int").as("dist")),
-      fp.roundsUsed, fp.converged)
+    fp.copy(result = fp.result.select(col("node"), col("dist").cast("int").as("dist")))
   }
 
   /** Deterministic independent-cascade influence spread (Kempe-Kleinberg-
@@ -1139,9 +1024,7 @@ object GraphAnalytics {
   def influenceSpread(
       edges: DataFrame, seeds: Seq[Long], pNum: Long, rounds: Int): DataFrame = {
     require(seeds.nonEmpty && rounds >= 1 && rounds <= 30 && pNum > 0)
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val act = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
+    val act = arcs(edges)
       .filter(conv(substring(md5(concat_ws(":",
         col("a"), col("b"), lit("ic")).cast("binary")), 1, 13), 16, 10)
         .cast("long") < pNum)
@@ -1149,23 +1032,18 @@ object GraphAnalytics {
       .cache()
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = seeds.toDF("node")
+    val seed = seeds.toDF("node")
       .select(col("node").cast("long").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
-    // size gate threaded through settleCounted — no per-round count jobs
-    var n = seeds.size.toLong
-    for (_ <- 1 to rounds) {
-      val relaxed = act
-        .join(bcRows(n)(dist.withColumnRenamed("node", "a")), "a")
-        .select(col("b").as("node"), (col("dist") + 1L).as("dist"))
-      val (d2, n2) = settleCounted(
-        dist.union(relaxed)
-          .groupBy("node").agg(min("dist").as("dist")))
-      Settle.unpersistSettled(dist)
-      dist = d2; n = n2
+    // size gate threaded from each round's settled count — no count jobs
+    val fp = fixpoint(seed, seeds.size.toLong, rounds) { (dist, n) =>
+      dist.union(act
+          .join(bcRows(n)(dist.withColumnRenamed("node", "a")), "a")
+          .select(col("b").as("node"), (col("dist") + 1L).as("dist")))
+        .groupBy("node").agg(min("dist").as("dist"))
     }
     act.unpersist(false)
-    dist
+    fp.result
   }
 
   /** Harmonic centrality (Boldi & Vigna, "Axioms for centrality", Internet
@@ -1201,31 +1079,22 @@ object GraphAnalytics {
   def multiSourceDistances(
       edges: DataFrame, seeds: Seq[Long], rounds: Int): DataFrame = {
     require(seeds.nonEmpty && rounds >= 1 && rounds <= 15)
-    val e = edges.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
-    val adj = e.select(col("u").as("a"), col("v").as("b"))
-      .union(e.select(col("v").as("a"), col("u").as("b")))
-      .repartition(col("a"))
-      .cache()
+    val adj = arcs(edges).repartition(col("a")).cache()
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = seeds.toDF("seed")
+    val seed = seeds.toDF("seed")
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
       .localCheckpoint(true)
     // O(S·V) frame, size-gated broadcast into the cached adjacency; the
-    // gate rows thread through settleCounted (no per-round count jobs)
-    var n = seeds.size.toLong
-    for (_ <- 1 to rounds) {
-      val relaxed = adj
-        .join(bcRows(n)(dist.withColumnRenamed("node", "a")), "a")
-        .select(col("seed"), col("b").as("node"), (col("dist") + lit(1L)).as("dist"))
-      val (d2, n2) = settleCounted(
-        dist.union(relaxed)
-          .groupBy("seed", "node").agg(min("dist").as("dist")))
-      Settle.unpersistSettled(dist)
-      dist = d2; n = n2
+    // gate rows thread from each round's settled count (no count jobs)
+    val fp = fixpoint(seed, seeds.size.toLong, rounds) { (dist, n) =>
+      dist.union(adj
+          .join(bcRows(n)(dist.withColumnRenamed("node", "a")), "a")
+          .select(col("seed"), col("b").as("node"), (col("dist") + lit(1L)).as("dist")))
+        .groupBy("seed", "node").agg(min("dist").as("dist"))
     }
     adj.unpersist(false)
-    dist
+    fp.result
   }
 
   /** Resource-allocation link-prediction index (Zhou, Lü & Zhang,
@@ -1308,8 +1177,8 @@ object GraphAnalytics {
     var settled = f0.select("seed", "node").localCheckpoint(true)
     // frontier size gate threaded from each level's settled count
     var fRows = seeds.size.toLong
-    for (_ <- 1 to rounds) {
-      val frontier = levels.last
+    for (level <- 1 to rounds) {
+      val frontier = levels(level - 1)
       val (next, nn) = settleCounted(adj
         .join(bcRows(fRows)(frontier.withColumnRenamed("node", "a")), "a")
         .groupBy(col("seed"), col("b").as("node"))

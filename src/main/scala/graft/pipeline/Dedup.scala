@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Settle
+
 /** Deduplication operators for large-scale training-data pipelines (north
   * star in /root/repo/BASELINE.json; the reference itself dropped near-dup /
   * vector capability in v0.0.16, /root/reference/CHANGELOG.md:11-16).
@@ -770,9 +772,6 @@ object Dedup {
       // count to the data — few at test scale, many at 100 TB)
       .repartition(col("dst"))
     val undC = ckpt(und, eager = true)
-    // seed with the first hop folded in: rep = min(self, neighbors)
-    var labels = ckpt(undC.groupBy(col("src").as("node"))
-      .agg(least(col("src"), min(col("dst"))).as("rep")), eager = false)
     // labels only ever decrease, so sum(rep) is strictly monotone until the
     // fixpoint — an O(labels) pass per round instead of a join+count.
     // (rows, Σrep) in ONE RDD job over the (lazily checkpointed) label
@@ -792,48 +791,44 @@ object Dedup {
         Iterator.single((n, s))
       }.fold((0L, 0L)) { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) }
     }
-    val (seedRows, seedSum) = sumRep(labels)
-    if (seedRows == 0L) // no pairs at all → no components
-      return (labels.select(col("node").as("doc_id"), col("rep").as("rep_id")), 0)
-    var prevSum = seedSum
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxIter) {
-      val prevLabels = labels
-      val prop = undC.join(labels, undC("dst") === labels("node"))
-        .select(undC("src").as("node"), labels("rep").as("rep"))
-      val merged = prop.unionByName(labels.select("node", "rep"))
-        .groupBy("node").agg(min("rep").as("rep"))
-      // pointer jumping (path halving): follow each node's new rep to that
-      // node's previous rep in the same round — long chains collapse in
-      // O(log diameter) rounds instead of O(diameter). Reps are always node
-      // ids inside the component, so the jump can never undershoot the
-      // component minimum; `least` keeps the label decrease monotone (the
-      // convergence certificate). The jump join keys on the unique `node`
-      // side, so one-row-per-node is preserved without another aggregate.
-      val jump = labels.select(col("node").as("_jn"), col("rep").as("_jr"))
-      labels = ckpt(merged
-        .join(jump, merged("rep") === col("_jn"), "left")
-        .select(merged("node"),
-          least(merged("rep"), coalesce(col("_jr"), merged("rep"))).as("rep")),
-        // lazy: the convergence pass below materializes the checkpoint in
-        // the SAME job — one job per round instead of checkpoint + agg
-        eager = false)
-      val s = sumRep(labels)._2
-      // sumRep just materialized the new checkpoint — round N-1's label
-      // blocks are dead now (round-16 suite-state discipline)
-      graft.operators.Settle.unpersistSettled(prevLabels)
-      converged = s == prevSum
-      prevSum = s
-      rounds += 1
-    }
+    // seed with the first hop folded in: rep = min(self, neighbors)
+    val labels0 = ckpt(undC.groupBy(col("src").as("node"))
+      .agg(least(col("src"), min(col("dst"))).as("rep")), eager = false)
+    val (seedRows, seedSum) = sumRep(labels0)
+    // Settle.fixpoint owns the round loop: each round's label frame is
+    // checkpointed lazily and the Σrep job materializes it (one job per
+    // round), round N-1's blocks are dropped once round N settles, and the
+    // loop stops when Σrep stops falling. No pairs at all → no components.
+    val fp =
+      if (seedRows == 0L) Settle.Fixpoint(labels0, 0, converged = true)
+      else Settle.fixpoint(labels0, seedSum, maxIter, Some(Settle.unchanged),
+          settle = df => { val cp = ckpt(df, eager = false); (cp, sumRep(cp)._2) }) {
+        (labels, _) =>
+          val prop = undC.join(labels, undC("dst") === labels("node"))
+            .select(undC("src").as("node"), labels("rep").as("rep"))
+          val merged = prop.unionByName(labels.select("node", "rep"))
+            .groupBy("node").agg(min("rep").as("rep"))
+          // pointer jumping (path halving): follow each node's new rep to
+          // that node's previous rep in the same round — long chains
+          // collapse in O(log diameter) rounds instead of O(diameter). Reps
+          // are always node ids inside the component, so the jump can never
+          // undershoot the component minimum; `least` keeps the label
+          // decrease monotone (the convergence certificate). The jump join
+          // keys on the unique `node` side, so one-row-per-node is
+          // preserved without another aggregate.
+          val jump = labels.select(col("node").as("_jn"), col("rep").as("_jr"))
+          merged
+            .join(jump, merged("rep") === col("_jn"), "left")
+            .select(merged("node"),
+              least(merged("rep"), coalesce(col("_jr"), merged("rep"))).as("rep"))
+      }
     // silently-wrong representatives split duplicate clusters undetected —
     // fail loudly and let the caller raise maxIter (rounds needed ≈ the
     // deepest component's diameter)
-    if (!converged) throw new IllegalStateException(
+    if (!fp.converged) throw new IllegalStateException(
       s"connectedComponents did not converge within $maxIter rounds — " +
         "a component's diameter exceeds maxIter; raise it")
-    (labels.select(col("node").as("doc_id"), col("rep").as("rep_id")), rounds)
+    (fp.result.select(col("node").as("doc_id"), col("rep").as("rep_id")), fp.roundsUsed)
   }
 
   /** Incremental connected-components maintenance: merge a BATCH of new

@@ -39,4 +39,14 @@ class BenchSummarySpec extends AnyFunSuite {
       assert(!l.has("queries_t2") && !l.has("conf_overrides") && !l.has("cpus"))
     } finally Locale.setDefault(saved)
   }
+
+  test("failure names the exception class and its top frame even when the message is null") {
+    val npe = try { val s: String = null; s.length; null } catch { case e: Throwable => e }
+    val line = Bench.failure(npe)
+    assert(line.startsWith("java.lang.NullPointerException: "))
+    assert(line.contains(" at graft.BenchSummarySpec"), line)
+    val bare = new AssertionError()
+    bare.setStackTrace(Array.empty)
+    assert(Bench.failure(bare) == "java.lang.AssertionError: null at <no frame>")
+  }
 }

@@ -73,6 +73,13 @@ class CCSpec extends AnyFunSuite with SparkTestBase {
     assert(durable == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
   }
 
+  test("connectedComponents leaves the caller's localCheckpointed pair frame readable") {
+    val raw = Seq((1L, 2L), (2L, 3L), (10L, 11L))
+    val pairs = raw.toDF("a_id", "b_id").localCheckpoint(true)
+    assert(Dedup.connectedComponents(pairs).count() == 5)
+    assert(pairs.as[(Long, Long)].collect().toSet == raw.toSet)
+  }
+
   test("mergeComponents: batch merge equals from-scratch on every shape") {
     // old graph: {1,2,3} (rep 1) and {10,11} (rep 10), singleton-free
     val oldPairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a_id", "b_id")
@@ -128,5 +135,16 @@ class CCSpec extends AnyFunSuite with SparkTestBase {
     val merged = Dedup.mergeComponents(oldLabels, empty)
       .as[(Long, Long)].collect().toSet
     assert(merged == Set((1L, 1L), (2L, 1L)))
+  }
+
+  test("connectedComponents runs no more Spark jobs than its pinned count") {
+    // the GraphAnalyticsSpec loop fixture as a<b pairs: K5, a pendant
+    // triangle off node 5, a tail path off node 12
+    val pairs = ((for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)) ++
+      Seq((5L, 11L), (5L, 12L), (11L, 12L)) ++ (12L until 18L).map(i => (i, i + 1)))
+      .toDF("a_id", "b_id")
+    val (_, jobs) = jobsDuring(Dedup.connectedComponents(pairs))
+    // measured before the loop moved onto Settle.fixpoint
+    assert(jobs <= 23, s"connectedComponents ran $jobs jobs, pinned at 23")
   }
 }

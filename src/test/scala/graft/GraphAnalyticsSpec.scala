@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.DataFrame
+
 import graft.operators.GraphAnalytics
 
 /** Pins the fixed-point PageRank arithmetic to hand-computed values, so the
@@ -665,6 +667,31 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     assert(edges.as[(Long, Long)].collect().toSet == want)
   }
 
+  test("every other fixpoint loop leaves the caller's localCheckpointed input frame readable") {
+    // the same lifecycle rule for each operator on Settle.fixpoint: rounds
+    // are dropped as the next settles, the caller's blocks never are
+    val edges = loopEdges.toDF("u", "v").localCheckpoint(true)
+    val weighted = loopEdges.map { case (u, v) => (u, v, u % 3 + 1) }
+      .toDF("u", "v", "w").localCheckpoint(true)
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "kCore" -> (() => GraphAnalytics.kCore(edges, k = 3, rounds = 3)),
+      "kCoreConverged" -> (() => GraphAnalytics.kCoreConverged(edges, k = 3, maxRounds = 10).result),
+      "labelPropagation" -> (() => GraphAnalytics.labelPropagation(edges, rounds = 3)),
+      "lpaConverged" -> (() => GraphAnalytics.lpaConverged(edges, maxRounds = 10).result),
+      "sssp" -> (() => GraphAnalytics.sssp(weighted, src = 1L, rounds = 3)),
+      "ssspConverged" -> (() => GraphAnalytics.ssspConverged(weighted, src = 1L, maxRounds = 20).result),
+      "bfs" -> (() => GraphAnalytics.bfs(edges, src = 1L, rounds = 3)),
+      "bfsConverged" -> (() => GraphAnalytics.bfsConverged(edges, src = 1L, maxRounds = 20).result),
+      "influenceSpread" -> (() => GraphAnalytics.influenceSpread(edges, Seq(1L), 1L << 52, 3)),
+      "multiSourceDistances" -> (() => GraphAnalytics.multiSourceDistances(edges, Seq(1L, 12L), 3)))
+    for ((name, run) <- runs) withClue(name) {
+      assert(run().count() > 0)
+      assert(edges.as[(Long, Long)].collect().toSet == loopEdges.toSet)
+      assert(weighted.as[(Long, Long, Long)].collect().toSet ==
+        loopEdges.map { case (u, v) => (u, v, u % 3 + 1) }.toSet)
+    }
+  }
+
   test("lpaConverged: stable labels on a triangle in 3 rounds; bipartite 2-cycle hits the cap loudly") {
     // triangle {1,2,3}: l1 = (2,1,1) — each adopts its smallest-label
     // neighbor; l2 = (1,1,1) — 1's neighbors both carry 1 now; l3 confirms
@@ -707,5 +734,28 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     assert(fp.converged && fp.roundsUsed == 3)
     assert(fp.result.as[(Long, Long)].collect().toMap ==
       Map(1L -> 0L, 2L -> 4L, 3L -> 2L))
+  }
+
+  // K5, a pendant triangle off node 5 and a tail path off node 12: every
+  // peel, label and relaxation round below has work to do
+  private val loopEdges: Seq[(Long, Long)] =
+    (for (i <- 1L to 5L; j <- (i + 1) to 5L) yield (i, j)) ++
+      Seq((5L, 11L), (5L, 12L), (11L, 12L)) ++ (12L until 18L).map(i => (i, i + 1))
+
+  test("fixed-round loops run no more Spark jobs than their pinned counts") {
+    // pins measured on this fixture before the loops moved onto
+    // Settle.fixpoint; a fixed-round run may only get cheaper
+    import org.apache.spark.sql.functions.lit
+    val g = loopEdges.toDF("u", "v")
+    val pinned = Seq(
+      ("kCore(R=3)", 11, () => GraphAnalytics.kCore(g, k = 3, rounds = 3)),
+      ("labelPropagation(R=3)", 10, () => GraphAnalytics.labelPropagation(g, rounds = 3)),
+      ("sssp(R=3)", 12,
+        () => GraphAnalytics.sssp(g.withColumn("w", lit(1L)), src = 1L, rounds = 3)),
+      ("trussEdges(R=2)", 21, () => GraphAnalytics.trussEdges(g, k = 4, rounds = 2)))
+    for ((name, pin, run) <- pinned) {
+      val (_, jobs) = jobsDuring(run())
+      assert(jobs <= pin, s"$name ran $jobs jobs, pinned at $pin")
+    }
   }
 }

@@ -809,33 +809,6 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
       s"expected a loud missing-file failure, got: $err")
   }
 
-  /** Run `body` and count the Spark jobs it submitted. Listener delivery
-    * is async but ORDERED: once the event of one tagged sentinel job run
-    * after `body` arrives, every job `body` ran has been counted.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val tag = s"jobsDuring-sentinel-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit =
-        if (Option(s.properties).exists(_.getProperty("spark.job.description") == tag))
-          sentinel.countDown()
-        else jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(tag)
-      try sc.parallelize(1 to 2, 1).count() finally sc.setJobDescription(null)
-      assert(sentinel.await(10, java.util.concurrent.TimeUnit.SECONDS),
-        "sentinel job event never arrived")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("metaRowCount: exact counts from sidecars, ZERO Spark jobs, footer fallback") {
     val st = freshStore()
     seed(st)

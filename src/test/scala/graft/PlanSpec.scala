@@ -510,17 +510,19 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("fixpoint round steps: one shared per-round plan; the convergence probe adds no data shuffle") {
-    // The *Converged operators call the SAME private round-step functions
-    // as their fixed-round (oracle-replayable) twins — kCorePeelRound,
+    // Each fixed-round (oracle-replayable) operator and its *Converged
+    // entry point run ONE private body through the one round loop,
+    // Settle.fixpoint, with the SAME round-step function — kCorePeelRound,
     // lpaRound, ssspRelaxRound, trussPeelRound — so their per-round plans
-    // are identical BY CONSTRUCTION. This test pins the two halves of that
-    // contract against regression: (a) the shared round step keeps its
-    // scale shape — broadcast joins against the cached adjacency, the
-    // aggregation reusing the adjacency's repartition key, never a
-    // sort-merge join or a second data exchange; (b) the convergence
-    // probe (the only thing the Converged loop ADDS per round) plans zero
-    // hash-partitioned exchange — just a broadcast join over two O(V)
-    // checkpointed frames and the count's single-partition collapse.
+    // are identical BY CONSTRUCTION; the converged form only adds its exit
+    // test. This test pins the two halves of that contract against
+    // regression: (a) the shared round step keeps its scale shape —
+    // broadcast joins against the cached adjacency, the aggregation
+    // reusing the adjacency's repartition key, never a sort-merge join or
+    // a second data exchange; (b) the convergence probe (the only thing
+    // the converged form ADDS per round) plans zero hash-partitioned
+    // exchange — just a broadcast join over two O(V) checkpointed frames
+    // and the count's single-partition collapse.
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions._
