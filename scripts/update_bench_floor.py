@@ -1,8 +1,10 @@
 #!/usr/bin/env python3
 """Min-merge a Bench JSON line into bench_floor.json.
 
-Usage: python3 scripts/update_bench_floor.py bench_output.json
-The input is the one-line JSON Bench prints ({"metric":"total",...,"queries":{...}}).
+Usage: python3 scripts/update_bench_floor.py BENCH_OUT_c<cpus>.json
+The input is the one-line record Bench writes to BENCH_OUT_c<cpus>.json
+({"metric":"total",...,"queries":{...}}); the stdout line carries no
+per-query times.
 Floors are each query's best observed t1 at sf0.1. Bench compares min(t1, t2)
 vs max(floor, 0.3s): warn at ratio>1.5 & excess>0.3s, fail at ratio>2.5 &
 excess>1.0s.

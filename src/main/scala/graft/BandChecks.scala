@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Machine-checkable error bands for the rows-only queries.
   *
@@ -72,33 +73,16 @@ object BandChecks {
       }
   }
 
-  /** JSON string escape — same contract as Verify's oracle_sql.json
-    * escaper: a crash-path detail embeds a raw Spark exception message,
-    * which routinely contains quotes and newlines that would otherwise
-    * break the driver-side json.load.
-    */
-  private def jsonEsc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  /** Render as the JSON object Verify writes. */
+  /** Render as the JSON object Verify writes: query → {band_ok, detail}. */
   def toJson(bands: Seq[Band]): String =
-    bands.map { b =>
-      s""""${jsonEsc(b.query)}": {"band_ok": ${b.ok}, "detail": "${jsonEsc(b.detail)}"}"""
-    }.mkString("{", ", ", "}")
+    Harness.json(ListMap(bands.map(b => b.query -> Map("band_ok" -> b.ok, "detail" -> b.detail)): _*))
 
   private def events(s: SparkSession, d: String) = s.read.parquet(s"$d/events.parquet")
   private def lineitem(s: SparkSession, d: String) = s.read.parquet(s"$d/lineitem.parquet")
   private def documents(s: SparkSession, d: String) = s.read.parquet(s"$d/documents.parquet")
   private def embeddings(s: SparkSession, d: String) = s.read.parquet(s"$d/embeddings.parquet")
 
-  private def fmt(x: Double): String = f"$x%.4f"
+  private def fmt(x: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, x)
 
   /** The q_sketch_overlap verdict as a pure function, so the spec can
     * prove the harness FALSIFIABLE (feed it a corrupted estimate and see

@@ -1,46 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 object Bench {
+  /** One query's two back-to-back wall times and what its first run ran. */
+  final case class Run(t1: Double, t2: Double, profile: Harness.Profile)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // local A/B hook: SPARK_GRAFT_CONF="k=v;k2=v2" overlays session confs
-    // (unset in the driver's environment — the defaults below are the
-    // benched configuration)
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      // 99 queries share this JVM: without a periodic GC the ContextCleaner
-      // never learns that checkpoint/broadcast blocks from earlier queries
-      // are unreachable, and accumulated state taxes every later query (the
-      // round-4 suite-wide 1.7× inflation — isolated reruns were fine).
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // honor write-time sortBy on bucketed scans (safe: Layout.writeBucketed
-      // writes one file per bucket from one job) — q_bucketed_join then
-      // plans zero Exchange AND zero Sort
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // identical session TZ across Bench/Verify/Explain (system TZ is UTC
-      // too) so dumped plans mirror benched plans under constant folding
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    // reproducibility: any overlay is logged loudly and recorded in the
-    // BENCH_OUT artifact — a benched run is explainable from its output
-    extraConf.foreach { case (k, v) =>
-      System.err.println(s"[bench] SPARK_GRAFT_CONF override: $k=$v")
-    }
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    quietRddLogs()
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+    Harness.quietRddLogs()
     // Untimed warmup: JVM/codegen/parquet-footer costs land here instead of
     // inflating whichever query the map iterates first.
     try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -53,63 +23,39 @@ object Bench {
     // this explicit prepare step may run outside the timers.
     try SparkEntry.prepareSetups(spark, sfDir)
     catch { case e: Throwable =>
-      System.err.println(s"[bench] prepareSetups failed: ${failure(e)}")
+      System.err.println(s"[bench] prepareSetups failed: ${Harness.failure(e)}")
     }
     spark.catalog.clearCache()
-    // Local profiling aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run to a
-    // subset (and repeats it SPARK_GRAFT_REPS times). Unset for the driver.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Noise guard: run each query TWICE back-to-back and report both times —
-    // t1 is the like-for-like headline (and feeds "value"/"queries", the
-    // fields the driver keys off); t2 distinguishes suite-position noise
-    // from a real plan regression without anyone needing a rerun. Opt out
-    // with SPARK_GRAFT_TWICE=0.
-    val twice = sys.env.getOrElse("SPARK_GRAFT_TWICE", "1") == "1"
-    var sinceGc = 0
+    val collector = new Harness.Collector(spark.sparkContext)
+    val catalog = SparkEntry.queries
     // The WHOLE query is timed, construction included — iterative
     // operators (pagerank/kcore/cc/sssp) execute eagerly during
     // construction, so excluding it would untime their actual work.
     // Setup maintenance is already memoized by the prepare phase above.
-    def timedRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timedRun(name: String): Double = {
       val t0 = System.nanoTime()
       // toRdd.count() forces FULL evaluation of every projected expression —
       // df.count() lets Catalyst prune unreferenced projections, so map-only
       // queries (s1_sanitize, text_*) would be timed as bare scans.
-      fn(spark, sfDir).queryExecution.toRdd.count()
+      catalog(name)(spark, sfDir).queryExecution.toRdd.count()
       (System.nanoTime() - t0) / 1e9
     }
-    val results = Seq.fill(reps)(selected.toSeq).flatten.map { case (name, fn) =>
-      val (ok, secs, secs2) =
-        try {
-          val a = timedRun(fn)
-          val b = if (twice) timedRun(fn) else -1.0
-          (true, a, b)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${failure(e)}")
-          (false, -1.0, -1.0)
-        }
-      // Suite hygiene: a query's cached/checkpoint blocks must not tax the
-      // NEXT query. Settle.sweep unpersists EVERY block the finished query
-      // left behind (cache + checkpoint), deterministically — waiting for
-      // the periodic-GC ContextCleaner path left each query taxed by its
-      // predecessors' dead blocks (round-16 suite-tail slowdown). Safe
-      // because no frame outlives its query (Setup memoizes paths only).
-      // The GC nudge stays for driver-heap/broadcast hygiene. One storage
-      // line per query keeps any future leak visible in the artifact.
-      graft.operators.Settle.sweep(spark)
-      sinceGc += 1
-      if (sinceGc >= 8) { System.gc(); sinceGc = 0 }
-      val storage = spark.sparkContext.getRDDStorageInfo
-      val memMb = storage.map(_.memSize).sum / (1024 * 1024)
-      val diskMb = storage.map(_.diskSize).sum / (1024 * 1024)
-      System.err.println(
-        f"[bench] $name%-28s ${secs}%8.2fs  t2=${secs2}%8.2fs  storage=${memMb}MB mem/${diskMb}MB disk, ${storage.length} rdds")
-      // a failed query must NOT bench as ~0s and flatter the total — it
-      // reports the -1 sentinel in the machine-readable JSON
-      (name, if (ok) secs else -1.0, if (ok) secs2 else -1.0)
+    // Noise guard: run each query TWICE back-to-back and report both times —
+    // t1 is the like-for-like headline (and feeds "value"/"queries", the
+    // fields the driver keys off); t2 distinguishes suite-position noise
+    // from a real plan regression without anyone needing a rerun.
+    val runs = Harness.eachQuery(spark, catalog.keys) { name =>
+      val (t1, p) = collector.during(timedRun(name))
+      val t2 = timedRun(name)
+      System.err.println(f"[bench] $name%-28s ${t1}%8.2fs  t2=${t2}%8.2fs  " +
+        s"${p.jobs} jobs, ${p.stages} stages, ${p.compiles} compiles")
+      Run(t1, t2, p)
+    }
+    // a failed query must NOT bench as ~0s and flatter the total — it
+    // reports the -1 sentinel in the machine-readable JSON
+    val results = runs.map {
+      case (name, Right(r)) => (name, r.t1, r.t2)
+      case (name, Left(_)) => (name, -1.0, -1.0)
     }
     // ── per-query regression guard (round-7 verdict item 2) ───────────────
     // bench_floor.json records each query's best observed t1 at sf0.1.
@@ -118,18 +64,8 @@ object Bench {
     // with > 0.3s absolute excess, FAIL at ratio > 2.5 with > 1.0s excess.
     // A fail means a real plan/code regression the total-time metric would
     // hide; the absolute term keeps sub-second jitter out of the verdicts.
-    val floorPath = sys.env.getOrElse("SPARK_GRAFT_FLOOR", "bench_floor.json")
-    val floors: Map[String, Double] =
-      if (new java.io.File(floorPath).exists()) {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(floorPath)))
-        val body = txt.indexOf("\"floors\"") match {
-          case -1 => txt
-          case i => txt.substring(i + 8)
-        }
-        "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.eE+-]*)".r
-          .findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
+    val floorPath = Paths.get(sys.env.getOrElse("SPARK_GRAFT_FLOOR", "bench_floor.json"))
+    val floors = if (Files.exists(floorPath)) readFloors(Files.readString(floorPath)) else Map.empty[String, Double]
     // thresholds and rationale live in FloorGuard (ratio AND absolute
     // excess required; sub-second queries jitter 2-3x with suite position)
     val (floorChecked, suiteWarn, suiteFail) = FloorGuard.grade(results, floors)
@@ -146,14 +82,14 @@ object Bench {
     // t1): a single rep right after clearCache() measures the cold-cache
     // penalty the clear just forced, not the plan.
     def isolatedRerun(name: String): Double = {
-      graft.operators.Settle.sweep(spark)
+      Harness.sweep(spark)
       System.gc()
       try {
-        val t = math.min(timedRun(selected(name)), timedRun(selected(name)))
+        val t = math.min(timedRun(name), timedRun(name))
         System.err.println(f"[bench] floor-adjudicate $name%-24s isolated best-of-2 ${t}%.2fs")
         t
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] floor-adjudicate $name rerun FAILED: ${failure(e)}")
+        System.err.println(s"[bench] floor-adjudicate $name rerun FAILED: ${Harness.failure(e)}")
         -1.0
       }
     }
@@ -184,91 +120,57 @@ object Bench {
     if (floors.nonEmpty && floorFail.isEmpty)
       System.err.println(s"[bench] floor guard: ${floorChecked} queries checked, " +
         s"${floorWarn.size} warn, ${floorNoise.size} noise, 0 fail")
-    // Two artifacts (round-16 verdict item 2):
-    //  1. BENCH_OUT.json — the FULL per-query record (t1, t2, floor detail,
-    //     applied conf overrides) at a fixed path, immune to tail capture.
-    //  2. ONE compact stdout JSON line, LAST, with exactly the driver-keyed
-    //     fields (value/queries/failed/floor verdicts) — t2 and the floor
-    //     noise detail live in the file and on stderr, not in the line.
-    val (fullJson, line) = summaries(results, floorChecked, floorWarn, floorFail,
-      floorNoise, extraConf.toSeq, cpus, sfDir)
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_OUT.json"),
-      (fullJson + "\n").getBytes("UTF-8"))
+    val (record, line) = summaries(runs, floorChecked, floorWarn, floorFail,
+      floorNoise, cpus, sfDir)
+    val out = s"BENCH_OUT_c$cpus.json"
+    try Files.writeString(Paths.get(out), record + "\n")
     catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_OUT.json write failed: ${failure(e)}")
+      System.err.println(s"[bench] $out write failed: ${Harness.failure(e)}")
     }
     println(line)
     spark.stop()
   }
 
-  /** A failure as one log line: exception class, message (often null for
-    * NPEs and assertion errors) and the top stack frame — enough to find
-    * the fault without rerunning the query.
+  /** The per-query floors of a `bench_floor.json` text: the numeric fields
+    * of its `floors` object, or of the whole document when it has none.
     */
-  private[graft] def failure(e: Throwable): String =
-    s"${e.getClass.getName}: ${e.getMessage} at " +
-      e.getStackTrace.headOption.map(_.toString).getOrElse("<no frame>")
-
-  /** Lower `org.apache.spark.rdd` to ERROR for this process: the operators
-    * unpersist settled checkpoints on purpose, and each unpersist would
-    * otherwise log a "lineage has been truncated" warning into the suite
-    * log. The warning's logger is named after the RDD's runtime subclass,
-    * hence the package target. Harness mains only: library code leaves
-    * logging alone. Call after the session exists — Spark's own log setup
-    * would otherwise reset it.
-    */
-  private[graft] def quietRddLogs(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
-
-  /** `v` with `digits` decimals in Locale.ROOT: under a default locale that
-    * writes decimal commas (de_DE) `%.3f` would emit `1,234`, which is not
-    * a JSON number.
-    */
-  private[graft] def fixed(v: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-
-  /** `s` as a JSON string literal: quotes, backslashes and control
-    * characters escaped.
-    */
-  private[graft] def jsonString(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b ++= "\\\""
-      case '\\' => b ++= "\\\\"
-      case c if c < ' ' => b ++= String.format(java.util.Locale.ROOT, "\\u%04x", Int.box(c.toInt))
-      case c => b += c
-    }
-    b.append('"').toString
+  private[graft] def readFloors(text: String): Map[String, Double] = {
+    val root = Harness.readJson(text)
+    val body = if (root.has("floors")) root.get("floors") else root
+    body.properties.asScala.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+    }.toMap
   }
 
-  /** The run's two JSON summaries from its per-query (name, t1, t2) times
-    * (-1 = failed) and floor verdicts: the full record for BENCH_OUT.json,
-    * and the compact stdout line holding only the fields the driver keys
-    * off. 3-decimal times keep the line small enough to survive a truncated
-    * stdout tail (round-16 verdict item 2: the 9-decimal line was ~20 KB).
+  /** The run's two JSON summaries: the full record for BENCH_OUT_c<cpus>.json
+    * (per-query t1 and t2 with -1 for a failed query, each query's profile
+    * or failure, floor verdicts), and the stdout line of scalars only, which
+    * stays small enough for a truncated stdout tail. Times keep 3 decimals.
     */
-  private[graft] def summaries(results: Seq[(String, Double, Double)],
+  private[graft] def summaries(runs: Seq[(String, Either[String, Run])],
       floorChecked: Int, floorWarn: Seq[(String, Double)],
       floorFail: Seq[(String, Double)], floorNoise: Seq[(String, Double, Double)],
-      conf: Seq[(String, String)], cpus: String, sfDir: String): (String, String) = {
-    def obj(kvs: Seq[(String, String)]) =
-      kvs.map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
-    def ratios(xs: Seq[(String, Double)]) = obj(xs.map { case (k, r) => k -> fixed(r, 2) })
-    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
-    val failed = results.collect { case (k, v, _) if v < 0 => jsonString(k) }
-      .mkString("[", ",", "]")
-    val qs = obj(results.map { case (k, v, _) => k -> fixed(v, 3) })
-    val head = s""""metric":"total","value":${fixed(total, 3)},"unit":"sec","queries":$qs"""
-    val floor = s""""failed":$failed,"floor_checked":$floorChecked,""" +
-      s""""floor_warn":${ratios(floorWarn)},"floor_fail":${ratios(floorFail)}"""
-    val t2 = obj(results.map { case (k, _, v2) => k -> fixed(v2, 3) })
-    val noise = obj(floorNoise.map { case (k, sr, ir) => k -> s"[${fixed(sr, 2)},${fixed(ir, 2)}]" })
-    val confJson = obj(conf.map { case (k, v) => k -> jsonString(v) })
-    val sf = jsonString(sfDir)
-    (s"""{$head,"queries_t2":$t2,$floor,"floor_noise":$noise,""" +
-      s""""conf_overrides":$confJson,"cpus":${jsonString(cpus)},"sf":$sf}""",
-      s"""{$head,$floor,"sf":$sf}""")
+      cpus: Int, sfDir: String): (String, String) = {
+    def secs(f: Run => Double) = ListMap(runs.map { case (k, r) =>
+      k -> Harness.decimals(r.fold(_ => -1.0, f), 3) }: _*)
+    def ratios(xs: Seq[(String, Double)]) =
+      ListMap(xs.map { case (k, r) => k -> Harness.decimals(r, 2) }: _*)
+    val failed = runs.collect { case (k, Left(_)) => k }
+    val total = runs.collect { case (_, Right(r)) => r.t1 }.sum
+    val head = ListMap("metric" -> "total", "value" -> Harness.decimals(total, 3), "unit" -> "sec")
+    val record = head ++ ListMap(
+      "queries" -> secs(_.t1), "queries_t2" -> secs(_.t2), "failed" -> failed,
+      "floor_checked" -> floorChecked, "floor_warn" -> ratios(floorWarn),
+      "floor_fail" -> ratios(floorFail),
+      "floor_noise" -> ListMap(floorNoise.map { case (k, sr, ir) =>
+        k -> Seq(Harness.decimals(sr, 2), Harness.decimals(ir, 2)) }: _*),
+      "per_query" -> ListMap(runs.map {
+        case (k, Right(r)) => k -> r.profile
+        case (k, Left(f)) => k -> Map("failure" -> f) }: _*),
+      "cpus" -> cpus, "sf" -> sfDir)
+    val line = head ++ ListMap("failed" -> failed.size, "floor_checked" -> floorChecked,
+      "floor_warn" -> floorWarn.size, "floor_fail" -> floorFail.size,
+      "floor_noise" -> floorNoise.size, "sf" -> sfDir, "cpus" -> cpus)
+    (Harness.json(record), Harness.json(line))
   }
 }

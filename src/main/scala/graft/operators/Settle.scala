@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lifecycle discipline for settled (checkpointed/persisted) frames
@@ -15,20 +15,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * round-16 suite-tail slowdown: per-query plans fine in isolation, suite
   * total ×0.86).
   *
-  * Three tools:
+  * Two tools (the harness's `graft.Harness.sweep` clears whatever is left
+  * between queries):
   *  - [[fixpoint]] — the one round loop every iterative operator runs
   *    through (settle → count → unpersist, optional stop test, round cap).
   *  - [[unpersistSettled]] — drop ONE settled frame's blocks the moment its
   *    last consumer inside an operator is done (iterative loops: round N's
   *    labels are dead as soon as round N+1 settles).
-  *  - [[sweep]] — harness hygiene between queries: unpersist every block the
-  *    finished query left behind. Safe precisely because of the
-  *    query-scoped invariant above; called by Bench/BenchProf/Verify only,
-  *    never from inside an operator.
   *
   * Unpersisting a locally-checkpointed RDD logs a per-RDD "lineage has been
   * truncated" warning; the harness mains lower `org.apache.spark.rdd` to
-  * ERROR for their own process ([[graft.Bench.quietRddLogs]]). This object
+  * ERROR for their own process ([[graft.Harness.quietRddLogs]]). This object
   * leaves logging alone.
   */
 object Settle {
@@ -120,16 +117,4 @@ object Settle {
     */
   def unpersistSettled(df: DataFrame): Unit =
     rddsOf(df).foreach { r => try r.unpersist(false) catch { case _: Throwable => () } }
-
-  /** Drop EVERY persisted RDD (cache and checkpoint blocks alike) plus
-    * catalog-cached plans. Harness-only: correct between queries because no
-    * frame outlives its query; inside a query it would destroy settled
-    * frames mid-plan.
-    */
-  def sweep(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-      try r.unpersist(false) catch { case _: Throwable => () }
-    }
-  }
 }

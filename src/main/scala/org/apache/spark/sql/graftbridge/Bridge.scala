@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -9,11 +10,15 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, FloatType}
   * libraries need (the same pattern public Spark extensions use): wrapping a
   * Catalyst Expression into a user-facing Column, and typing
   * `ExpectsInputTypes.inputTypes` whose signature mentions the
-  * `private[sql]` AbstractDataType.
+  * `private[sql]` AbstractDataType. Also drains the `private[spark]`
+  * listener bus for the harness's profile collector.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until every posted listener event is delivered (at most 10 s). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(10000)
 }
 
 /** Input-type contract `(array<float>, array<float>)` for binary vector

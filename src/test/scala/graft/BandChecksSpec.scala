@@ -24,8 +24,8 @@ class BandChecksSpec extends AnyFunSuite with SparkTestBase {
     val json = BandChecks.toJson(Seq(
       BandChecks.Band("q_x", ok = true, "detail a"),
       BandChecks.Band("q_y", ok = false, "detail b")))
-    assert(json == """{"q_x": {"band_ok": true, "detail": "detail a"}, """ +
-      """"q_y": {"band_ok": false, "detail": "detail b"}}""")
+    assert(json == """{"q_x":{"band_ok":true,"detail":"detail a"},""" +
+      """"q_y":{"band_ok":false,"detail":"detail b"}}""")
   }
 
   test("band checks detect a broken estimate (the harness is falsifiable)") {

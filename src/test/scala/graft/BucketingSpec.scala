@@ -62,10 +62,11 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     // disable broadcast: at 100 TB neither side fits, so the pin must be the
     // big-data shape — SMJ over co-bucketed scans, not a small-sf BHJ
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val savedOrdering = spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // honor the write-time sortBy: safe because writeBucketed writes each
     // bucket as ONE file from one job (the case the default guards against
-    // is multi-job appends); Bench/Verify set the same flag
+    // is multi-job appends); the harness session sets the same flag
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try {
       val q = SparkEntry.queries("q_bucketed_join")(spark, sf)
@@ -81,7 +82,7 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
       assert(plan.contains("TakeOrderedAndProject"), s"expected top-k operator:\n$plan")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "false")
+      spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", savedOrdering)
     }
   }
 }

@@ -1,31 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The disjunctive-semi-join rewrite needs its own session (extensions bind
-  * at session build), so this suite builds one with GraftExtensions.
+/** The disjunctive-semi-join rewrite and the SQL functions GraftExtensions
+  * injects, on the shared harness session.
   */
-class RewriteRuleSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    // getOrCreate would return another suite's session and silently drop the
-    // extensions — clear the default/active handles first (their holders keep
-    // working; sessions share the one SparkContext)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RewriteRuleSpec extends AnyFunSuite with SparkTestBase {
 
   test("OR-of-equi semi join plans as equi joins, not BroadcastNestedLoopJoin") {
     import spark.implicits._

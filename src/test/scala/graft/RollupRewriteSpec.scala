@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.BeforeAndAfterAll
@@ -18,22 +17,7 @@ import graft.plans.RollupRegistry
   * against the decimal ground truth; avg to float tolerance). Queries outside
   * the contract (non-algebraic agg, non-dim filter) must NOT be rewritten.
   */
-class RollupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-mv-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class RollupRewriteSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val tmp = Files.createTempDirectory("mvspec").toString
   private val basePath = s"$tmp/fact"

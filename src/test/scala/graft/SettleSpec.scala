@@ -15,6 +15,7 @@ class SettleSpec extends AnyFunSuite with SparkTestBase {
   test("touching Settle leaves the org.apache.spark.rdd log level as it was") {
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     def rddLevel = ctx.getConfiguration.getLoggerConfig("org.apache.spark.rdd").getLevel
+    spark // the session's own log setup runs before the level is read
     val before = rddLevel
     Settle.unpersistSettled(Seq(1L, 2L).toDF("x"))
     assert(rddLevel == before)

@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session per suite (lazy), local[4], UTC, AQE on. */
+/** The shared test session: the harness session (the engine's one
+  * configuration, extensions included) on local[4].
+  */
 trait SparkTestBase {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -35,15 +37,5 @@ trait SparkTestBase {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Harness.session(4)
 }
