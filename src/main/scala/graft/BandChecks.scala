@@ -73,6 +73,14 @@ object BandChecks {
       }
   }
 
+  /** Verify's stdout line for one verdict, ASCII only (any other char
+    * becomes its Java-style unicode escape) so it reads the same under
+    * every stdout charset.
+    */
+  def line(b: Band): String =
+    s"[band] ${b.query}: ${if (b.ok) "ok" else "FAIL"} - ${b.detail}"
+      .flatMap(c => if (c < 0x80) c.toString else f"\\u${c.toInt}%04x")
+
   /** Render as the JSON object Verify writes: query → {band_ok, detail}. */
   def toJson(bands: Seq[Band]): String =
     Harness.json(ListMap(bands.map(b => b.query -> Map("band_ok" -> b.ok, "detail" -> b.detail)): _*))

@@ -22,8 +22,7 @@ object Verify {
     val bands = BandChecks.run(spark, sfDir, Harness.only, dumpDir = Some(outDir))
     Files.writeString(Paths.get(s"$outDir/band_checks.json"),
       BandChecks.toJson(bands))
-    bands.foreach(b => println(s"[band] ${b.query}: " +
-      s"${if (b.ok) "ok" else "FAIL"} — ${b.detail}"))
+    bands.foreach(b => println(BandChecks.line(b)))
     spark.stop()
   }
 }

@@ -69,7 +69,6 @@ object TextFns {
   /** Sanitize-then-truncate pipelines used on every write path. */
   def cleanName(c: Column): Column = truncate(sanitizeInput(c), MaxNameLength)
   def cleanEntityType(c: Column): Column = truncate(sanitizeInput(c), MaxEntityTypeLength)
-  def cleanRelationType(c: Column): Column = truncate(sanitizeInput(c), MaxRelationTypeLength)
   def cleanObservation(c: Column): Column = truncate(sanitizeInput(c), MaxObservationLength)
 
   /** S3 non-empty validation, in-plan form (client.ts:68-81). */

@@ -670,11 +670,6 @@ object Dedup {
       path: String): graft.store.VersionedDocTable.Stats =
     graft.store.VersionedDocTable.stats(spark, path, MinhashTable)
 
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, outPath: String, targetFiles: Int = 8): Unit =
-    graft.store.VersionedDocTable.compact(spark, path, outPath, MinhashTable,
-      targetFiles)
-
   /** Maintenance policy: the deleted-fraction estimate divides tombstones
     * by docs (each doc contributes exactly `bands` band rows — pass the
     * SAME bands as the build or the gate drifts by that ratio).

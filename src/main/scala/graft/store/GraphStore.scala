@@ -40,10 +40,14 @@ case class Relation(from: String, to: String, relationType: String)
   *
   * Atomicity is unchanged from the flat layout: stage all new bucket
   * versions and snapshot descriptors for every table in the batch, then flip
-  * `_MANIFEST` once (temp-write + ATOMIC_MOVE). Readers resolve the manifest
-  * → snapshot → immutable bucket dirs, so they see the whole old or whole
-  * new cross-table state, never a mix; a crash mid-stage leaves only orphan
-  * dirs/descriptors the next `vacuum` removes.
+  * `_MANIFEST` once (temp-write + ATOMIC_MOVE). Each public call reads
+  * `_MANIFEST` once into one [[GraphStore.State]] and resolves every table
+  * it touches through it (manifest → snapshot → immutable bucket dirs), so
+  * a call sees the whole old or whole new cross-table state, never a mix; a
+  * crash mid-stage leaves only orphan dirs/descriptors the next `vacuum`
+  * removes. Each of [[entities]], [[observations]] and [[relations]] is its
+  * own call: a caller that joins tables and needs one cross-table point
+  * reads [[storeVersions]] and then [[readTableAt]] per table.
   *
   * Sizing: `numBuckets` fixes GENERATION 0 at `initialize()`; a store that
   * outgrows it doubles progressively via [[splitBucket]] /
@@ -80,16 +84,15 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * empty snapshot descriptors — no Spark job runs until the first row.
     */
   def initialize(): Unit = withWriteLock {
-    val missing = Tables.filter(t => currentSnapshot(t).isEmpty)
+    val s = state()
+    val missing = Tables.filter(s.snapshotId(_).isEmpty)
     if (missing.nonEmpty) {
       // a store whose relations table has never held a row is born with an
       // in-sync (empty) reverse-edge index — set the `revsync` marker in
       // the SAME bootstrap commit so fresh stores keep a single-version
       // manifest history (time-travel consumers count store versions)
       val marker =
-        if (currentSnapMap("relations").isEmpty &&
-          !readManifest().exists(_.contains("revsync")))
-          Map("revsync" -> "1")
+        if (s.snap("relations").isEmpty && !s.revsync) Map("revsync" -> "1")
         else Map.empty[String, String]
       commitBuckets(missing.map(t => t -> BucketWrite(Set.empty, null)).toMap,
         extraManifest = marker)
@@ -107,30 +110,27 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * instead of a full projected scan of relations.
     */
   def ensureRevIndex(): Unit = withWriteLock {
-    if (readManifest().exists(_.contains("revsync"))) return
-    require(currentSnapshot("relations").isDefined,
-      "Table relations not initialized — call initialize() first")
-    if (currentSnapMap("relations").isEmpty)
-      // no relations row was ever committed: empty index is already in sync
-      commitBuckets(Map("relations_rev" -> BucketWrite(Set.empty, null)),
-        extraManifest = Map("revsync" -> "1"))
-    else
-      // full rebuild into the generation-0 grid, retiring any stale rev
-      // buckets; one atomic commit, after which the mirror is incremental
-      commitBuckets(Map("relations_rev" -> BucketWrite(
-        (0 until bucketCount).map(Bucket(0, _)).toSet,
-        alignTo(RelationsSchema, relations),
-        retired = currentSnapMap("relations_rev").keySet)),
+    val s = state()
+    if (!s.revsync)
+      commitBuckets(Map("relations_rev" ->
+        // no relations row was ever committed: empty index is already in
+        // sync; else a full rebuild into the generation-0 grid, retiring
+        // any stale rev buckets — one atomic commit, after which the
+        // mirror is incremental
+        (if (s.live("relations").isEmpty) BucketWrite(Set.empty, null)
+        else BucketWrite((0 until s.buckets).map(Bucket(0, _)).toSet,
+          alignTo(RelationsSchema, readTable(s, "relations")),
+          retired = s.snap("relations_rev").keySet))),
         extraManifest = Map("revsync" -> "1"))
   }
 
-  def entities: DataFrame = readTable("entities")
-  def observations: DataFrame = readTable("observations")
-  def relations: DataFrame = readTable("relations")
+  def entities: DataFrame = readTable(state(), "entities")
+  def observations: DataFrame = readTable(state(), "observations")
+  def relations: DataFrame = readTable(state(), "relations")
   /** The reverse-edge index: same rows as [[relations]], bucketed by
     * `target` (exposed for specs/ops; queries should read [[relations]]).
     */
-  private[graft] def relationsRev: DataFrame = readTable("relations_rev")
+  private[graft] def relationsRev: DataFrame = readTable(state(), "relations_rev")
 
   // ── time travel over the versioned store ────────────────────────────────
 
@@ -139,9 +139,11 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * manifest's current snapshot are staged/orphaned writes — commits stage
     * descriptors before flipping the manifest — and are never listed.
     */
-  def tableVersions(table: String): Seq[Long] = {
+  def tableVersions(table: String): Seq[Long] = versionsOf(state(), table)
+
+  private def versionsOf(s: State, table: String): Seq[Long] = {
     schemaFor(table) // validates the table name
-    val current = currentSnapshot(table).getOrElse(-1L)
+    val current = s.snapshotId(table).getOrElse(-1L)
     snapshotsOnDisk(table).filter(_ <= current)
   }
 
@@ -150,8 +152,11 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * committed snapshot is a consistent point-in-time read (per table;
     * cross-table consistency is what the CURRENT manifest provides).
     */
-  def readTableVersion(table: String, version: Long): DataFrame = {
-    require(tableVersions(table).contains(version),
+  def readTableVersion(table: String, version: Long): DataFrame =
+    readVersion(state(), table, version)
+
+  private def readVersion(s: State, table: String, version: Long): DataFrame = {
+    require(versionsOf(s, table).contains(version),
       s"Version v$version of $table is not a committed on-disk version " +
         "(vacuumed, never written, or an in-flight commit)")
     readDirs(schemaFor(table),
@@ -186,7 +191,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       case "relations" | "relations_rev" => Seq("source", "target", "relation_type")
       case other => throw new IllegalArgumentException(s"Unknown table: $other")
     }
-    val (oldDirs, newDirs) = changedBucketDirs(table, fromVersion, toVersion)
+    val (oldDirs, newDirs) = changedBucketDirs(table, fromVersion, toVersion, state())
     val oldT = readDirs(schemaFor(table), oldDirs)
     val newT = readDirs(schemaFor(table), newDirs)
     val rest = oldT.columns.filterNot(keys.contains).toSeq
@@ -208,9 +213,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * both sides and are pruned before any file is read.
     */
   private[graft] def changedBucketDirs(table: String, fromVersion: Long,
-      toVersion: Long): (Seq[Path], Seq[Path]) = {
-    require(tableVersions(table).contains(fromVersion) &&
-      tableVersions(table).contains(toVersion),
+      toVersion: Long, s: State = state()): (Seq[Path], Seq[Path]) = {
+    val committed = versionsOf(s, table)
+    require(committed.contains(fromVersion) && committed.contains(toVersion),
       s"Both v$fromVersion and v$toVersion of $table must be committed on-disk versions")
     val oldSnap = readSnapshot(table, fromVersion)
     val newSnap = readSnapshot(table, toVersion)
@@ -253,10 +258,11 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * sampling and shuffle jobs.
     */
   def getEntity(name: String): Entity = {
-    val rows = readTableKeys("entities", Seq(name))
+    val s = state()
+    val rows = readTableKeys(s, "entities", Seq(name))
       .filter(col("name") === name)
       .select(lit(true).as("is_entity"), col("entity_type").as("value"))
-      .union(readTableKeys("observations", Seq(name))
+      .union(readTableKeys(s, "observations", Seq(name))
         .filter(col("entity_name") === name)
         .select(lit(false).as("is_entity"), col("content").as("value")))
       .collect()
@@ -270,12 +276,15 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
 
   def searchNodes(query: String, limit: Int = DefaultSearchResults): (Seq[Entity], Seq[Relation]) = {
     TextFns.validateQuery(query) // non-empty + ≤512 chars (index.ts:40)
-    val hits = GraphOps.searchEntities(entities, observations, query, limit)
-    graphResult(hits)
+    val s = state()
+    graphResult(GraphOps.searchEntities(readTable(s, "entities"),
+      readTable(s, "observations"), query, limit), s)
   }
 
-  def readGraph(): (Seq[Entity], Seq[Relation]) =
-    graphResult(GraphOps.recentEntities(entities, 10))
+  def readGraph(): (Seq[Entity], Seq[Relation]) = {
+    val s = state()
+    graphResult(GraphOps.recentEntities(readTable(s, "entities"), 10), s)
+  }
 
   /** Execute the (already top-k-limited, relevance/recency-ordered) hit plan
     * ONCE — the reference returns entities in ranked order
@@ -295,20 +304,21 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * store written before round 11 must be opened with `initialize()`
     * once (it backfills `relations_rev`) before it serves reads.
     */
-  private[graft] def graphResult(hits: DataFrame): (Seq[Entity], Seq[Relation]) = {
+  private[graft] def graphResult(hits: DataFrame,
+      s: State = state()): (Seq[Entity], Seq[Relation]) = {
     val ranked = hits.select("name", "entity_type").collect()
       .map(r => (r.getString(0), r.getString(1)))
     if (ranked.isEmpty) return (Nil, Nil) // client.ts:460-462 short-circuit
     val names = ranked.map(_._1).toIndexedSeq
     def hit(c: String) = col(c).isin(names: _*)
-    val obs = readTableKeys("observations", names).filter(hit("entity_name"))
+    val obs = readTableKeys(s, "observations", names).filter(hit("entity_name"))
       .select(lit(false).as("is_edge"), col("entity_name").as("a"),
         col("content").as("b"), lit(null).cast(StringType).as("c"))
     def edges(df: DataFrame) = df.select(lit(true).as("is_edge"),
       col("source").as("a"), col("target").as("b"), col("relation_type").as("c"))
     val rows = obs
-      .union(edges(readTableKeys("relations", names).filter(hit("source"))))
-      .union(edges(readTableKeys("relations_rev", names)
+      .union(edges(readTableKeys(s, "relations", names).filter(hit("source"))))
+      .union(edges(readTableKeys(s, "relations_rev", names)
         .filter(hit("target") && !hit("source"))))
       .collect()
     val (edgeRows, obsRows) = rows.partition(_.getBoolean(0))
@@ -327,9 +337,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * works over the store: `SELECT ... FROM graft_entities e JOIN ...`.
     */
   def createOrReplaceViews(prefix: String = "graft_"): Unit = {
-    entities.createOrReplaceTempView(s"${prefix}entities")
-    observations.createOrReplaceTempView(s"${prefix}observations")
-    relations.createOrReplaceTempView(s"${prefix}relations")
+    val s = state()
+    Seq("entities", "observations", "relations")
+      .foreach(t => readTable(s, t).createOrReplaceTempView(prefix + t))
   }
 
   // ── writes ──────────────────────────────────────────────────────────────
@@ -364,6 +374,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     require(cleaned.map(_.name).distinct.size == cleaned.size,
       "Duplicate entity names in one batch")
 
+    val s = state()
     import spark.implicits._
     val incoming = cleaned.map(e => (e.name, e.entityType))
       .toDF("name", "in_type")
@@ -371,10 +382,10 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     val names = cleaned.map(_.name)
     // owning buckets are PER TABLE: entities and observations may sit at
     // different split generations
-    val touchedE = names.map(owningBucket(currentSnapMap("entities").keySet, _)).toSet
-    val touchedO = names.map(owningBucket(currentSnapMap("observations").keySet, _)).toSet
+    val touchedE = names.map(s.owner("entities", _)).toSet
+    val touchedO = names.map(s.owner("observations", _)).toSet
 
-    val existing = readTableBuckets("entities", touchedE)
+    val existing = readTable(s, "entities", touchedE)
     val kept = existing.join(incoming, Seq("name"), "left_anti")
     val updated = existing.join(incoming, Seq("name"))
       .select(col("name"), col("in_type").as("entity_type"), col("created_at"))
@@ -383,9 +394,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
 
     val newObs = cleaned.flatMap(e => e.observations.map(o => (e.name, o)))
       .toDF("entity_name", "content")
-    val survivors = readTableBuckets("observations", touchedO)
+    val survivors = readTable(s, "observations", touchedO)
       .filter(!col("entity_name").isin(names: _*))
-    val base = nextIdBase("observations", observations)
+    val base = nextIdBase(s, "observations")
     val fresh = newObs
       .withColumn("id", monotonically_increasing_id() + lit(base + 1))
       .withColumn("created_at", now)
@@ -413,6 +424,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * batch degenerates to the full rewrite it genuinely is.
     */
   def upsertEntitiesDf(batch: DataFrame): Unit = withWriteLock {
+    val s = state()
     // dedup by name must be DETERMINISTIC: dropDuplicates keeps an arbitrary
     // row per key, and `cleaned` is evaluated independently by the entities
     // and observations plans below — a nondeterministic pick could commit
@@ -440,13 +452,12 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     // aggregation), but per table: each table's snapshot may sit at a
     // different split generation
     def touchedIn(table: String): Set[Bucket] =
-      cleaned.select(
-          bucketTokenCol(currentSnapMap(table).keySet, col("name")).as("b"))
+      cleaned.select(s.tokenCol(s.snap(table).keySet, col("name")).as("b"))
         .distinct().collect().map(r => Bucket.fromToken(r.getString(0))).toSet
     val touchedE = touchedIn("entities")
     val touchedO = touchedIn("observations")
 
-    val existing = readTableBuckets("entities", touchedE)
+    val existing = readTable(s, "entities", touchedE)
     val kept = existing.join(cleaned, Seq("name"), "left_anti")
     val updated = existing.join(cleaned.select("name", "in_type"), Seq("name"))
       .select(col("name"), col("in_type").as("entity_type"), col("created_at"))
@@ -454,9 +465,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       .select(col("name"), col("in_type").as("entity_type"), now.as("created_at"))
 
     val updNames = cleaned.select(col("name").as("_upd_name"))
-    val survivors = readTableBuckets("observations", touchedO).join(updNames,
+    val survivors = readTable(s, "observations", touchedO).join(updNames,
       col("entity_name") === col("_upd_name"), "left_anti")
-    val base = nextIdBase("observations", observations)
+    val base = nextIdBase(s, "observations")
     val fresh = cleaned
       .select(col("name").as("entity_name"), explode(col("obs")).as("content"))
       .withColumn("id", monotonically_increasing_id() + lit(base + 1))
@@ -500,11 +511,10 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       Relation(from, to, tpe)
     }
     ensureRevIndex()
-    val relBuckets = currentSnapMap("relations").keySet
-    val revBuckets = currentSnapMap("relations_rev").keySet
-    val touched = cleaned.map(r => owningBucket(relBuckets, r.from)).toSet
-    val touchedRev = cleaned.map(r => owningBucket(revBuckets, r.to)).toSet
-    val base = nextIdBase("relations", relations)
+    val s = state() // taken after ensureRevIndex, which may have committed
+    val touched = cleaned.map(r => s.owner("relations", r.from)).toSet
+    val touchedRev = cleaned.map(r => s.owner("relations_rev", r.to)).toSet
+    val base = nextIdBase(s, "relations")
     // the batch is materialized as LITERAL rows (ids and timestamp assigned
     // driver-side, bounded by the ≤100 cap): the forward and reverse-index
     // commits each run their own Spark job over this frame, and a
@@ -519,10 +529,10 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     commitBuckets(Map(
       "relations" -> BucketWrite(touched,
         alignTo(RelationsSchema,
-          readTableBuckets("relations", touched).unionByName(fresh))),
+          readTable(s, "relations", touched).unionByName(fresh))),
       "relations_rev" -> BucketWrite(touchedRev,
         alignTo(RelationsSchema,
-          readTableBuckets("relations_rev", touchedRev).unionByName(fresh)))),
+          readTable(s, "relations_rev", touchedRev).unionByName(fresh)))),
       Map("relations" -> (base + cleaned.size)))
   }
 
@@ -547,37 +557,33 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     */
   def deleteEntity(name: String): Unit = withWriteLock {
     ensureRevIndex()
-    val nbE = owningBucket(currentSnapMap("entities").keySet, name)
-    val nbO = owningBucket(currentSnapMap("observations").keySet, name)
-    val relSnapBuckets = currentSnapMap("relations").keySet
-    val revSnapBuckets = currentSnapMap("relations_rev").keySet
-    val nbR = owningBucket(relSnapBuckets, name)
-    val nbRev = owningBucket(revSnapBuckets, name)
-    val entBucket = readTableBuckets("entities", Set(nbE))
+    val s = state() // taken after ensureRevIndex, which may have committed
+    val nbE = s.owner("entities", name)
+    val nbO = s.owner("observations", name)
+    val entBucket = readTable(s, "entities", Set(nbE))
     // existence probe on the file-pruned read; the rewrite keeps the bucket
-    if (!GraphOps.entityExists(readTableKeys("entities", Seq(name)), name))
+    if (!GraphOps.entityExists(readTableKeys(s, "entities", Seq(name)), name))
       throw new NoSuchElementException(s"Entity not found: $name")
-    // in-edge discovery: ONE pruned file of rev-bucket(name), never a scan
-    val targetSideBuckets = readTableKeys("relations_rev", Seq(name))
-      .filter(col("target") === name)
-      .select(bucketTokenCol(relSnapBuckets, col("source")).as("b")).distinct()
-      .collect().map(r => Bucket.fromToken(r.getString(0))).toSet
-    // out-edge rev cleanup: targets of name's out-edges → their rev buckets
-    val sourceSideRevBuckets = readTableKeys("relations", Seq(name))
-      .filter(col("source") === name)
-      .select(bucketTokenCol(revSnapBuckets, col("target")).as("b")).distinct()
-      .collect().map(r => Bucket.fromToken(r.getString(0))).toSet
-    val relTouched = targetSideBuckets + nbR
-    val revTouched = sourceSideRevBuckets + nbRev
+    // the bucket tokens of the `other` side of `name`'s edges in `table`,
+    // probed through ONE pruned file of `probe` (never a scan): in-edge
+    // discovery reads rev-bucket(name), out-edge rev cleanup fwd-bucket(name)
+    def sideBuckets(probe: String, self: String, other: String, table: String) =
+      readTableKeys(s, probe, Seq(name)).filter(col(self) === name)
+        .select(s.tokenCol(s.snap(table).keySet, col(other)).as("b")).distinct()
+        .collect().map(r => Bucket.fromToken(r.getString(0))).toSet
+    val relTouched =
+      sideBuckets("relations_rev", "target", "source", "relations") + s.owner("relations", name)
+    val revTouched =
+      sideBuckets("relations", "source", "target", "relations_rev") + s.owner("relations_rev", name)
     val keep = !(col("source") === name || col("target") === name)
     commitBuckets(Map(
       "observations" -> BucketWrite(Set(nbO),
-        readTableBuckets("observations", Set(nbO))
+        readTable(s, "observations", Set(nbO))
           .filter(col("entity_name") =!= name)),
       "relations" -> BucketWrite(relTouched,
-        readTableBuckets("relations", relTouched).filter(keep)),
+        readTable(s, "relations", relTouched).filter(keep)),
       "relations_rev" -> BucketWrite(revTouched,
-        readTableBuckets("relations_rev", revTouched).filter(keep)),
+        readTable(s, "relations_rev", revTouched).filter(keep)),
       "entities" -> BucketWrite(Set(nbE),
         entBucket.filter(col("name") =!= name))))
   }
@@ -589,19 +595,20 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     ensureRevIndex()
     val cond = col("source") === from && col("target") === to &&
       col("relation_type") === relationType
-    val b = Set(owningBucket(currentSnapMap("relations").keySet, from))
-    val bRev = Set(owningBucket(currentSnapMap("relations_rev").keySet, to))
-    val bucket = readTableBuckets("relations", b)
+    val s = state() // taken after ensureRevIndex, which may have committed
+    val b = Set(s.owner("relations", from))
+    val bRev = Set(s.owner("relations_rev", to))
+    val bucket = readTable(s, "relations", b)
     // the existence probe prunes to the file(s) whose source range can hold
     // `from`; the rewrite below still reads the whole (one) bucket — plus
     // the ONE rev bucket keyed by `to`, under the same manifest flip
-    val n = readTableKeys("relations", Seq(from)).filter(cond).limit(1).count()
+    val n = readTableKeys(s, "relations", Seq(from)).filter(cond).limit(1).count()
     if (n == 0) throw new NoSuchElementException(
       s"Relation not found: $from -$relationType-> $to")
     commitBuckets(Map(
       "relations" -> BucketWrite(b, bucket.filter(!cond)),
       "relations_rev" -> BucketWrite(bRev,
-        readTableBuckets("relations_rev", bRev).filter(!cond))))
+        readTable(s, "relations_rev", bRev).filter(!cond))))
   }
 
   // ── storage: bucketed CoW parquet with one atomic manifest flip ─────────
@@ -615,8 +622,8 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     *    OverlappingFileLockException instead of waiting). This is the fast
     *    path: serialized writers never waste optimistic work.
     * 2. The COMMIT itself is a compare-and-swap that does not trust the
-    *    lock: each transaction pins the manifest version it read
-    *    (`txBase`), reads repeatably from that pinned manifest, and
+    *    lock: each transaction pins the manifest version it read (its
+    *    base) and reads repeatably from that manifest's [[State]], and
     *    commits by hard-LINKING its fully-written new manifest into the
     *    exclusive history slot `_manifests/m(base+1)` — link(2) is an
     *    atomic put-if-absent, so of two racing writers exactly one wins;
@@ -645,36 +652,26 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * protocol into the other forfeits its granularity; guarantee changes
     * must keep the shared contract spec green for BOTH.
     */
-  // depth lives in the COMPANION keyed by normalized root (like jvmLock):
-  // two GraphStore instances over the same root must share one reentrancy
-  // counter, or a nested write through the second instance would attempt a
-  // second FileChannel.lock() and throw OverlappingFileLockException
-  private def lockDepth = GraphStore.lockDepthFor(root)
-
-  // pinned base for the current transaction (thread-confined): the
-  // manifest-history id the body's reads are based on + that manifest's
-  // content (repeatable reads). Advanced after each successful commit so a
-  // multi-commit transaction (e.g. ensureRevIndex + the mutation) chains.
-  // Companion-keyed by root (like lockDepth): a nested same-thread write
-  // through a SECOND instance of the same root must see the outer tx.
-  private def txBase = GraphStore.txBaseFor(root)
-  private def txManifest = GraphStore.txManifestFor(root)
+  // the transaction record lives in the COMPANION, keyed by normalized
+  // root: two GraphStore instances over the same root share it, so a nested
+  // same-thread write through the second instance joins the outer
+  // transaction (it neither re-takes the FileChannel lock, which would throw
+  // OverlappingFileLockException, nor reads past the outer pin)
+  private val perRoot = GraphStore.perRoot(root)
 
   // instance-local monitor used when the advisory lock is off: it protects
-  // only this instance's thread-locals/reentrancy, NOT cross-writer
-  // serialization (that's the CAS's job)
+  // only this instance's reentrancy, NOT cross-writer serialization (that's
+  // the CAS's job)
   private val instanceMonitor = new Object
 
   def withWriteLock[T](body: => T): T = {
-    val monitor = if (advisoryLock) GraphStore.jvmLock(root) else instanceMonitor
+    val monitor = if (advisoryLock) perRoot else instanceMonitor
     monitor.synchronized {
       // reentrant: the monitor above is, but a second FileChannel.lock() on
       // the same file in one JVM throws OverlappingFileLockException — only
       // the outermost frame takes the file lock and owns the retry loop
-      if (lockDepth.get > 0) {
-        lockDepth.set(lockDepth.get + 1)
-        try body finally lockDepth.set(lockDepth.get - 1)
-      } else {
+      if (perRoot.tx.get != null) body
+      else {
         Files.createDirectories(Paths.get(root))
         val ch = if (advisoryLock)
           java.nio.channels.FileChannel.open(
@@ -683,25 +680,37 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
             java.nio.file.StandardOpenOption.WRITE)
         else null
         val lock = if (ch != null) ch.lock() else null
-        lockDepth.set(1)
         try {
           var out: Option[T] = None
           while (out.isEmpty) {
             repairManifest()
-            txBase.set(java.lang.Long.valueOf(
-              manifestsOnDisk.lastOption.getOrElse(0L)))
-            txManifest.set(readManifestFromDisk().getOrElse(Map.empty))
+            perRoot.tx.set(Tx(manifestsOnDisk.lastOption.getOrElse(0L), readState()))
             try out = Some(body)
             catch { case _: CommitConflict => () } // lost the CAS — re-pin, rerun
           }
           out.get
         } finally {
-          lockDepth.set(0); txBase.remove(); txManifest.remove()
+          perRoot.tx.remove()
           if (lock != null) { lock.release(); ch.close() }
         }
       }
     }
   }
+
+  /** The store's state for one call: inside a write transaction the
+    * transaction's pinned [[State]] (repeatable reads — the CAS commit
+    * guarantees the pinned base is still current when the writes land),
+    * otherwise one fresh read of `_MANIFEST`. Every public method calls
+    * this once and reads every table through the result.
+    */
+  private[graft] def state(): State = {
+    val tx = perRoot.tx.get
+    if (tx != null) tx.state else readState()
+  }
+
+  private def readState(): State = new State(
+    if (Files.exists(manifestFile)) readKv(manifestFile) else Map.empty,
+    numBuckets, readSnapshot, root)
 
   /** If `_MANIFEST` trails the history head (a writer crashed between its
     * CAS link and the reader-facing flip), flip it forward — the commit was
@@ -739,60 +748,6 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
   private def bucketVersionDir(t: String, b: Bucket, v: Long): Path =
     bucketDir(t, b).resolve("v" + v)
 
-  /** Bucket count, pinned in the manifest at initialize (a changed
-    * constructor argument on an existing store is ignored — honoring it
-    * would require rehashing every row).
-    */
-  private def bucketCount: Int =
-    readManifest().flatMap(_.get("nbuckets")).map(_.toInt).getOrElse(numBuckets)
-
-  /** Candidate slot of hash `h` at generation `g` (driver-side pmod twin
-    * of the in-plan expression in [[bucketTokenCol]]).
-    */
-  private def slotAt(h: Long, gen: Int): Int = {
-    val m = bucketCount.toLong << gen
-    (((h % m) + m) % m).toInt
-  }
-
-  /** The bucket OWNING `name` under the given bucket set: the highest-
-    * generation candidate slot present, else the implicit generation-0
-    * slot. Splits preserve "exactly one owner per key" — a split removes
-    * the parent and adds both children in one commit.
-    */
-  private def owningBucket(buckets: Set[Bucket], name: String): Bucket = {
-    val h = GraphStore.rawHash(name)
-    buckets.iterator.map(_.gen).filter(_ > 0).toSeq.distinct.sortBy(-_)
-      .collectFirst { case g if buckets.contains(Bucket(g, slotAt(h, g))) =>
-        Bucket(g, slotAt(h, g)) }
-      .getOrElse(Bucket(0, slotAt(h, 0)))
-  }
-
-  /** In-plan twin of [[owningBucket]]: a codegen'd when-chain that checks
-    * each generation present in `buckets` from highest to lowest and falls
-    * back to the generation-0 slot, emitting the owning bucket's token
-    * (`"g_id"`). Chain depth = number of DISTINCT generations live at once
-    * (1 outside a split window, 2 during one); the per-generation id sets
-    * compile to `InSet`.
-    */
-  private def bucketTokenCol(buckets: Set[Bucket],
-      key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val h = xxhash64(key)
-    val default = concat_ws("_", lit(0),
-      pmod(h, lit(bucketCount.toLong)).cast("int"))
-    buckets.iterator.map(_.gen).filter(_ > 0).toSeq.distinct.sorted
-      .foldLeft(default) { (fallback, g) =>
-        val m = bucketCount.toLong << g
-        val idc = pmod(h, lit(m)).cast("int")
-        val ids = buckets.collect { case Bucket(`g`, id) => id }
-        when(idc.isInCollection(ids), concat_ws("_", lit(g), idc))
-          .otherwise(fallback)
-      }
-  }
-
-  /** Current snapshot descriptor of `t` as a map (empty if uninitialized). */
-  private def currentSnapMap(t: String): Map[Bucket, Long] =
-    currentSnapshot(t).map(readSnapshot(t, _)).getOrElse(Map.empty)
-
   /** All `s<N>` snapshot descriptors present for a table (committed or
     * staged), ascending.
     */
@@ -815,78 +770,35 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       .filter(_.isDirectory).flatMap(f => Bucket.fromDirName(f.getName))
       .sortBy(b => (b.gen, b.id)).toSeq
 
+  /** The parquet files of one bucket-version dir (none if it is absent). */
+  private def parquetsIn(dir: Path): Array[java.io.File] =
+    Option(dir.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.endsWith(".parquet") && f.isFile)
+
   /** Parse a snapshot descriptor: bucket → bucket version (line formats
     * `id=vN` for generation 0 — the legacy layout — and `g:id=vN` above).
     */
   private def readSnapshot(t: String, s: Long): Map[Bucket, Long] =
-    new String(Files.readAllBytes(snapshotFile(t, s)), StandardCharsets.UTF_8)
-      .split("\n").filter(_.contains("=")).map { l =>
-        val Array(k, v) = l.trim.split("=", 2)
-        Bucket.fromDescKey(k) -> v.drop(1).toLong
-      }.toMap
-
-  /** Snapshot manifest: one file mapping every table to its current
-    * snapshot id. A multi-table mutation stages all bucket versions and
-    * snapshot descriptors, then flips THIS one pointer — cross-table
-    * atomicity (a cascade delete is all-or-nothing), not just per-table.
-    */
-  private def readManifest(): Option[Map[String, String]] = {
-    // inside a transaction, reads are REPEATABLE: they come from the
-    // manifest pinned at tx start (empty map = store not yet bootstrapped),
-    // and the CAS commit guarantees the pinned base is still current when
-    // the transaction's writes land
-    val pinned = txManifest.get
-    if (pinned != null) Some(pinned).filter(_.nonEmpty)
-    else readManifestFromDisk()
-  }
-
-  private def readManifestFromDisk(): Option[Map[String, String]] =
-    if (Files.exists(manifestFile))
-      Some(new String(Files.readAllBytes(manifestFile), StandardCharsets.UTF_8)
-        .split("\n").filter(_.contains("=")).map { l =>
-          val Array(k, v) = l.trim.split("=", 2); k -> v
-        }.toMap)
-    else None
-
-  private def currentSnapshot(t: String): Option[Long] =
-    readManifest().flatMap(_.get(t)).map { v =>
-      require(v.startsWith("s"),
-        s"Store at $root uses the pre-bucketed (round ≤7) layout; " +
-          "rebuild it — in-place migration is not implemented")
-      v.drop(1).toLong
-    }
+    readKv(snapshotFile(t, s)).map { case (k, v) => Bucket.fromDescKey(k) -> v.drop(1).toLong }
 
   private def readDirs(schema: StructType, dirs: Seq[Path]): DataFrame = {
     // empty bucket-version dirs (a bucket whose rewrite emptied it) carry no
     // parquet files; with the explicit schema Spark reads them as no rows
-    val nonEmpty = dirs.filter(d =>
-      Option(d.toFile.listFiles()).exists(_.exists(_.getName.endsWith(".parquet"))))
+    val nonEmpty = dirs.filter(parquetsIn(_).nonEmpty)
     if (nonEmpty.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).parquet(nonEmpty.map(_.toString): _*)
   }
 
-  private def readTable(t: String): DataFrame =
-    currentSnapshot(t) match {
-      case Some(s) => readDirs(schemaFor(t),
-        readSnapshot(t, s).toSeq.map { case (k, v) => bucketVersionDir(t, k, v) })
-      case None => throw new IllegalStateException(
-        s"Table $t not initialized — call initialize() first")
-    }
-
-  /** Current-snapshot read RESTRICTED to the given buckets — the read
-    * side of bucket pruning: point lookups and mutations read 1/B of the
-    * table per touched key.
+  /** `t` as of state `s`, RESTRICTED to the buckets `only` accepts — the
+    * read side of bucket pruning: point lookups and mutations read 1/B of
+    * the table per touched key.
     */
-  private def readTableBuckets(t: String, buckets: Set[Bucket]): DataFrame =
-    currentSnapshot(t) match {
-      case Some(s) => readDirs(schemaFor(t),
-        readSnapshot(t, s).toSeq.collect {
-          case (k, v) if buckets(k) => bucketVersionDir(t, k, v)
-        })
-      case None => throw new IllegalStateException(
-        s"Table $t not initialized — call initialize() first")
-    }
+  private def readTable(s: State, t: String,
+      only: Bucket => Boolean = _ => true): DataFrame =
+    readDirs(schemaFor(t), s.live(t).toSeq.collect {
+      case (k, v) if only(k) => bucketVersionDir(t, k, v)
+    })
 
   /** One table's part of a commit: the buckets being rewritten, the new
     * FULL content of exactly those buckets (`content` may be null iff
@@ -897,20 +809,24 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       retired: Set[Bucket] = Set.empty)
 
   /** Stage new versions for every touched bucket of every table in
-    * `updates` (one Spark job per table: repartition by bucket id, write
-    * with `partitionBy`, move each staged partition dir into place), stage
-    * each table's new snapshot descriptor, then atomically flip the
-    * manifest (write temp + ATOMIC_MOVE). Readers see the whole old or
-    * whole new snapshot, never a mix; a crash mid-stage leaves only orphan
-    * dirs/descriptors the next vacuum removes.
+    * `updates` over the transaction's pinned [[State]] (per table a
+    * range-partitioning sample job plus the write job: repartition by
+    * bucket id and key range, write with `partitionBy`, move each staged
+    * partition dir into place), stage each table's new snapshot
+    * descriptor, then atomically flip the manifest (write temp +
+    * ATOMIC_MOVE). Readers see the whole old or whole new snapshot, never a
+    * mix; a crash mid-stage leaves only orphan dirs/descriptors the next
+    * vacuum removes.
     */
   private def commitBuckets(updates: Map[String, BucketWrite],
       maxIds: Map[String, Long] = Map.empty,
       extraManifest: Map[String, String] = Map.empty): Unit = {
-    val manifest = readManifest().getOrElse(Map.empty)
+    val tx = perRoot.tx.get
+    require(tx != null, "commit outside a withWriteLock transaction")
+    val manifest = tx.state.manifest
     val staged = updates.map { case (t, BucketWrite(touched, content, retired)) =>
       Files.createDirectories(snapshotsDir(t))
-      val cur = currentSnapMap(t)
+      val cur = tx.state.snap(t)
       val newVersions: Map[Bucket, Long] =
         if (touched.isEmpty) Map.empty
         else {
@@ -920,7 +836,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
           // `touched` but not yet in `cur`, and its parent is retired
           val effective = cur.keySet -- retired ++ touched
           val bucketed = content.withColumn("_bucket",
-            bucketTokenCol(effective, col(key)))
+            tx.state.tokenCol(effective, col(key)))
           // Every bucket version is written SORTED BY ITS BUCKET KEY, split
           // into ~filesPerBucket files of DISJOINT key ranges: range-
           // partition on (bucket, key) — explicit partition count, so AQE
@@ -1014,9 +930,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     // writer committed since the pin (advisory locks don't cross machines),
     // the slot is taken, everything staged above is an unreferenced orphan,
     // and the whole read-modify-write body reruns from the new state.
-    val base = txBase.get
-    require(base != null, "commit outside a withWriteLock transaction")
-    val target = base.longValue + 1
+    val target = tx.base + 1
     Files.createDirectories(manifestsDir)
     val tmp = Paths.get(root, s"_MANIFEST.tmp${System.nanoTime()}")
     Files.write(tmp, body)
@@ -1037,8 +951,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       StandardCopyOption.REPLACE_EXISTING)
     // advance the pin: a later commit in this same transaction (e.g. the
     // rev-index backfill before a delete) chains onto this one
-    txBase.set(target)
-    txManifest.set(merged)
+    perRoot.tx.set(Tx(target, new State(merged, numBuckets, readSnapshot, root)))
   }
 
   // ── per-file key-range stats: point-lookup pruning below bucket level ───
@@ -1055,36 +968,29 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     */
   private def writeFileStats(dir: Path, key: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).sortBy(_.getName)
     val enc = java.util.Base64.getEncoder
-    val lines = files.map { f =>
+    val lines = parquetsIn(dir).sortBy(_.getName).map { f =>
       // one footer read yields BOTH the key range (pruning) and the row
       // count (metadata-only count(*) — see metaRowCount)
       val (range, rows) =
-        try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try {
-            import scala.jdk.CollectionConverters._
-            val blocks = r.getFooter.getBlocks.asScala.toSeq
-            val nRows = blocks.map(_.getRowCount).sum
-            val perBlock = blocks.map { b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == key)
-                .map(_.getStatistics)
-                .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-                .map(s => (s.getMinBytes, s.getMaxBytes))
-            }
-            // every row group must carry stats or the file is unpruneable
-            val rg =
-              if (perBlock.nonEmpty && perBlock.forall(_.isDefined)) {
-                val mins = perBlock.map(_.get._1)
-                val maxs = perBlock.map(_.get._2)
-                Some((mins.min(UnsignedBytesOrdering), maxs.max(UnsignedBytesOrdering)))
-              } else None
-            (rg, Some(nRows))
-          } finally r.close()
+        try withFooter(f, conf) { r =>
+          import scala.jdk.CollectionConverters._
+          val blocks = r.getFooter.getBlocks.asScala.toSeq
+          val nRows = blocks.map(_.getRowCount).sum
+          val perBlock = blocks.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == key)
+              .map(_.getStatistics)
+              .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
+              .map(s => (s.getMinBytes, s.getMaxBytes))
+          }
+          // every row group must carry stats or the file is unpruneable
+          val rg =
+            if (perBlock.nonEmpty && perBlock.forall(_.isDefined)) {
+              val mins = perBlock.map(_.get._1)
+              val maxs = perBlock.map(_.get._2)
+              Some((mins.min(UnsignedBytesOrdering), maxs.max(UnsignedBytesOrdering)))
+            } else None
+          (rg, Some(nRows))
         } catch { case scala.util.control.NonFatal(_) => (None, None) }
       val rangeCols = range match {
         case Some((mn, mx)) => s"${enc.encodeToString(mn)}\t${enc.encodeToString(mx)}"
@@ -1096,78 +1002,72 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
   }
 
+  private def withFooter[A](f: java.io.File, conf: org.apache.hadoop.conf.Configuration)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+    try read(r) finally r.close()
+  }
+
+  /** One `_FILESTATS` line: the file's bucket-key range (None for a `-`
+    * marker: the file may hold any key) and its row count (None for `-`
+    * or a 3-field line — a sidecar written before row counts existed).
+    */
+  private case class FileStat(range: Option[(Array[Byte], Array[Byte])], rows: Option[Long])
+
+  /** The `_FILESTATS` sidecar of one bucket-version dir by file name — the
+    * one reader of what [[writeFileStats]] writes. None when the dir has no
+    * sidecar (a store written before round 10).
+    */
+  private def fileStats(dir: Path): Option[Map[String, FileStat]] = {
+    val sidecar = dir.resolve("_FILESTATS")
+    if (!Files.exists(sidecar)) return None
+    val dec = java.util.Base64.getDecoder
+    Some(new String(Files.readAllBytes(sidecar), StandardCharsets.UTF_8)
+      .split("\n").iterator.map(_.split("\t")).filter(_.length >= 3).map { f =>
+        f(0) -> FileStat(
+          if (f(1) == "-") None else Some((dec.decode(f(1)), dec.decode(f(2)))),
+          f.lift(3).filter(_ != "-").map(_.toLong))
+      }.toMap)
+  }
+
   /** The parquet files of one bucket-version dir that can contain any of
     * `keyBytes` (UTF-8 of the probe keys), per the `_FILESTATS` sidecar.
-    * No sidecar (store written before round 10) or a `-` stats marker
-    * falls back to "file may match" — pruning is only ever an elision.
+    * No sidecar or a `-` range falls back to "file may match" — pruning is
+    * only ever an elision.
     */
   private def pruneBucketFiles(dir: Path, keyBytes: Seq[Array[Byte]]): Seq[Path] = {
-    val all = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.toPath).toMap
-    val sidecar = dir.resolve("_FILESTATS")
-    if (!Files.exists(sidecar)) return all.values.toSeq.sortBy(_.getFileName.toString)
-    val dec = java.util.Base64.getDecoder
+    val all = parquetsIn(dir).map(f => f.getName -> f.toPath).toMap
     val ord = UnsignedBytesOrdering
-    new String(Files.readAllBytes(sidecar), StandardCharsets.UTF_8)
-      .split("\n").iterator.filter(_.nonEmpty).flatMap { line =>
-        // 3-field lines = pre-rowcount sidecars, 4-field = current (the
-        // trailing field is the file's row count; irrelevant to pruning)
-        line.split("\t").take(3) match {
-          case Array(name, "-", "-") => all.get(name)
-          case Array(name, mn, mx) =>
-            val (lo, hi) = (dec.decode(mn), dec.decode(mx))
-            if (keyBytes.exists(k => ord.lteq(lo, k) && ord.lteq(k, hi)))
-              all.get(name)
-            else None
-          case _ => None
-        }
-      }.toSeq.sortBy(_.getFileName.toString)
+    fileStats(dir) match {
+      case None => all.values.toSeq.sortBy(_.getFileName.toString)
+      case Some(stats) => stats.toSeq.collect {
+        case (name, FileStat(range, _)) if all.contains(name) && range.forall { case (lo, hi) =>
+          keyBytes.exists(k => ord.lteq(lo, k) && ord.lteq(k, hi)) } => all(name)
+      }.sortBy(_.getFileName.toString)
+    }
   }
 
   /** Exact `count(*)` of `table`'s current snapshot from METADATA only:
     * per live bucket version, the `_FILESTATS` sidecar's row-count field
-    * (one tiny file read per bucket); a sidecar written before row counts
-    * existed — or missing entirely — falls back to the parquet FOOTERS of
-    * that dir (still metadata: no data page is ever read, no Spark job
-    * runs). At 100 TB this answers the commonest operational query —
-    * "how many entities do we have?" — in O(buckets) driver-side reads
-    * instead of a full scan.
+    * (one tiny file read per bucket), trusted only when it covers every
+    * parquet file of the dir; otherwise — a sidecar written before row
+    * counts existed, or none at all — the parquet FOOTERS of that dir
+    * (still metadata: no data page is ever read, no Spark job runs). At
+    * 100 TB this answers the commonest operational query — "how many
+    * entities do we have?" — in O(buckets) driver-side reads instead of a
+    * full scan.
     */
   def metaRowCount(table: String): Long = {
-    val snap = currentSnapshot(table) match {
-      case Some(s) => readSnapshot(table, s)
-      case None => throw new IllegalStateException(
-        s"Table $table not initialized — call initialize() first")
-    }
     val conf = spark.sessionState.newHadoopConf()
-    snap.toSeq.map { case (b, v) =>
+    state().live(table).toSeq.map { case (b, v) =>
       val dir = bucketVersionDir(table, b, v)
-      val parquets = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val sidecar = dir.resolve("_FILESTATS")
-      val fromSidecar: Option[Map[String, Long]] =
-        if (!Files.exists(sidecar)) None
-        else {
-          val rows = new String(Files.readAllBytes(sidecar), StandardCharsets.UTF_8)
-            .split("\n").filter(_.nonEmpty).flatMap { line =>
-              line.split("\t") match {
-                case Array(name, _, _, n) if n != "-" => Some(name -> n.toLong)
-                case _ => None
-              }
-            }.toMap
-          // only trust the sidecar if it covers every file in the dir
-          if (parquets.forall(f => rows.contains(f.getName))) Some(rows) else None
-        }
-      fromSidecar match {
-        case Some(rows) => parquets.map(f => rows(f.getName)).sum
-        case None => parquets.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      }
+      val parquets = parquetsIn(dir)
+      val stats = fileStats(dir).getOrElse(Map.empty)
+      val counted = parquets.flatMap(f => stats.get(f.getName).flatMap(_.rows))
+      if (counted.length == parquets.length) counted.sum
+      else parquets.map(withFooter(_, conf)(_.getRecordCount)).sum
     }.sum
   }
 
@@ -1176,23 +1076,18 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * B-bucket store reads one file of one bucket, not one bucket. Keys
     * outside any file's range read nothing at all.
     */
-  private[graft] def filesForKeys(t: String, keys: Seq[String]): Seq[Path] =
-    currentSnapshot(t) match {
-      case Some(s) =>
-        val snap = readSnapshot(t, s)
-        val keyBytes = keys.map(k =>
-          k.getBytes(StandardCharsets.UTF_8) -> owningBucket(snap.keySet, k))
-        keyBytes.groupBy(_._2).toSeq.sortBy(b => (b._1.gen, b._1.id))
-          .flatMap { case (b, ks) =>
-            snap.get(b).toSeq.flatMap(v =>
-              pruneBucketFiles(bucketVersionDir(t, b, v), ks.map(_._1)))
-          }.distinct
-      case None => throw new IllegalStateException(
-        s"Table $t not initialized — call initialize() first")
-    }
+  private[graft] def filesForKeys(t: String, keys: Seq[String],
+      s: State = state()): Seq[Path] = {
+    val snap = s.live(t)
+    keys.groupBy(s.owner(t, _)).toSeq.sortBy(b => (b._1.gen, b._1.id))
+      .flatMap { case (b, ks) =>
+        snap.get(b).toSeq.flatMap(v => pruneBucketFiles(bucketVersionDir(t, b, v),
+          ks.map(_.getBytes(StandardCharsets.UTF_8))))
+      }.distinct
+  }
 
-  private def readTableKeys(t: String, keys: Seq[String]): DataFrame = {
-    val files = filesForKeys(t, keys)
+  private def readTableKeys(s: State, t: String, keys: Seq[String]): DataFrame = {
+    val files = filesForKeys(t, keys, s)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaFor(t))
     else spark.read.schema(schemaFor(t)).parquet(files.map(_.toString): _*)
@@ -1211,21 +1106,16 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * unlike [[tableVersions]]' per-table snapshots. The newest one is
     * always the current manifest.
     */
-  def storeVersions: Seq[Long] = manifestsOnDisk.filter { m =>
+  def storeVersions: Seq[Long] = storeVersionsOf(state())
+
+  private def storeVersionsOf(s: State): Seq[Long] = manifestsOnDisk.filter { m =>
     // exclude orphans from a crash between history-write and flip: a
     // history file is committed iff every table snapshot it references is
     // at or below the table's CURRENT snapshot (snapshots only grow)
-    readManifestVersion(m).forall { case (t, v) =>
-      !Tables.contains(t) || currentSnapshot(t).exists(_ >= v.drop(1).toLong)
+    readKv(manifestsDir.resolve("m" + m)).forall { case (t, v) =>
+      !Tables.contains(t) || s.snapshotId(t).exists(_ >= v.drop(1).toLong)
     }
   }
-
-  private def readManifestVersion(m: Long): Map[String, String] =
-    new String(Files.readAllBytes(manifestsDir.resolve("m" + m)),
-      StandardCharsets.UTF_8)
-      .split("\n").filter(_.contains("=")).map { l =>
-        val Array(k, v) = l.trim.split("=", 2); k -> v
-      }.toMap
 
   /** Read `table` as it stood at store-wide commit `storeVersion` — the
     * cross-table consistent snapshot (all three tables read at the same
@@ -1236,14 +1126,21 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     */
   def readTableAt(table: String, storeVersion: Long): DataFrame = {
     schemaFor(table)
-    require(storeVersions.contains(storeVersion),
+    val s = state()
+    require(storeVersionsOf(s).contains(storeVersion),
       s"Store version m$storeVersion is not a committed on-disk manifest " +
         "(vacuumed, never written, or an in-flight commit)")
-    val snap = readManifestVersion(storeVersion).get(table).map(_.drop(1).toLong)
-      .getOrElse(throw new IllegalStateException(
+    val snap = readKv(manifestsDir.resolve("m" + storeVersion)).get(table)
+      .map(_.drop(1).toLong).getOrElse(throw new IllegalStateException(
         s"Table $table absent from store version m$storeVersion"))
-    readTableVersion(table, snap)
+    readVersion(s, table, snap)
   }
+
+  /** Buckets present in `table`'s current snapshot, (gen, id)-ordered —
+    * the candidates for [[splitBucket]] (an operator splits the largest).
+    */
+  def liveBuckets(table: String): Seq[Bucket] =
+    state().snap(table).keySet.toSeq.sortBy(b => (b.gen, b.id))
 
   /** Progressive re-bucketing (extendible hashing step): split `bucket`
     * into its two generation-(g+1) children. For a key with hash `h` owned
@@ -1257,17 +1154,12 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * first-class: reads, writes, and point lookups resolve ownership
     * per-key from the snapshot's (gen, id) set.
     */
-  /** Buckets present in `table`'s current snapshot, (gen, id)-ordered —
-    * the candidates for [[splitBucket]] (an operator splits the largest).
-    */
-  def liveBuckets(table: String): Seq[Bucket] =
-    currentSnapMap(table).keySet.toSeq.sortBy(b => (b.gen, b.id))
-
   def splitBucket(table: String, bucket: Bucket): Unit = withWriteLock {
-    val cur = currentSnapMap(table)
+    val s = state()
+    val cur = s.snap(table)
     require(cur.contains(bucket),
       s"$table has no committed bucket ${bucket.dirName} to split")
-    val m = bucketCount << bucket.gen
+    val m = s.buckets << bucket.gen
     val children = Set(
       Bucket(bucket.gen + 1, bucket.id),
       Bucket(bucket.gen + 1, bucket.id + m))
@@ -1283,7 +1175,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * safe at every point (each split is its own atomic commit).
     */
   def advanceGeneration(table: String): Unit = withWriteLock {
-    val cur = currentSnapMap(table)
+    val cur = state().snap(table)
     if (cur.nonEmpty) {
       val g = cur.keySet.map(_.gen).min
       cur.keySet.filter(_.gen == g).toSeq.sortBy(_.id)
@@ -1296,11 +1188,8 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * job). The input to a split policy.
     */
   def bucketBytes(table: String): Map[Bucket, Long] =
-    currentSnapMap(table).map { case (b, v) =>
-      val dir = bucketVersionDir(table, b, v).toFile
-      b -> Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(_.length()).sum
+    state().snap(table).map { case (b, v) =>
+      b -> parquetsIn(bucketVersionDir(table, b, v)).map(_.length()).sum
     }
 
   /** Split POLICY: split every live bucket whose current bytes exceed
@@ -1341,8 +1230,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * reclaimed bucket, never a table rewrite.
     */
   def mergeChildren(table: String, parent: Bucket): Unit = withWriteLock {
-    val cur = currentSnapMap(table)
-    val m = bucketCount << parent.gen
+    val s = state()
+    val cur = s.snap(table)
+    val m = s.buckets << parent.gen
     require(parent.id >= 0 && parent.id < m,
       s"${parent.dirName} is not a valid generation-${parent.gen} address (B=$m)")
     val children =
@@ -1377,13 +1267,14 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       var merges = 0
       var round = 0
       var progress = true
+      val nb = state().buckets // fixed at initialize; no merge changes it
       while (progress && round < maxRounds) {
         progress = false
         val sizes = bucketBytes(table)
         val live = sizes.keySet
         // canonical (low-id) child of each mergeable pair → its parent
         val parents = live.toSeq.sortBy(b => (b.gen, b.id)).flatMap { b =>
-          val m = if (b.gen > 0) bucketCount << (b.gen - 1) else 0
+          val m = if (b.gen > 0) nb << (b.gen - 1) else 0
           if (b.gen > 0 && b.id < m) {
             val sib = Bucket(b.gen, b.id + m)
             if (live(sib) && sizes(b) + sizes(sib) <= maxBytes)
@@ -1403,13 +1294,13 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * snapshot (the commit path's repartition-by-bucket already yields
     * `filesPerBucket` files per bucket, so compaction is just a
     * whole-table self-commit — then `vacuum` once reader horizons pass).
-    * `numFiles` is accepted for API compatibility; file count per bucket
-    * is governed by `filesPerBucket`.
+    * File count per bucket is governed by `filesPerBucket`.
     */
-  def compact(table: String, numFiles: Int = 1): Unit = withWriteLock {
-    val cur = currentSnapshot(table).map(readSnapshot(table, _)).getOrElse(Map.empty)
+  def compact(table: String): Unit = withWriteLock {
+    val s = state()
+    val cur = s.snap(table)
     if (cur.nonEmpty)
-      commitBuckets(Map(table -> BucketWrite(cur.keySet, readTable(table))))
+      commitBuckets(Map(table -> BucketWrite(cur.keySet, readTable(s, table))))
   }
 
   /** Retention: keep the `keepVersions` most recent COMMITTED snapshots of
@@ -1437,13 +1328,14 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     require(advisoryLock,
       "vacuum requires the advisory lock (a lockless writer's in-flight " +
         "stage would be indistinguishable from an orphan)")
+    val s = state()
     Tables.foreach { t =>
-      currentSnapshot(t).foreach { cur =>
+      s.snapshotId(t).foreach { cur =>
         val snaps = snapshotsOnDisk(t)
         val keep = snaps.filter(_ <= cur).reverse.take(keepVersions).toSet
-        snaps.filterNot(keep).foreach(s => Files.deleteIfExists(snapshotFile(t, s)))
+        snaps.filterNot(keep).foreach(id => Files.deleteIfExists(snapshotFile(t, id)))
         val referenced: Map[Bucket, Set[Long]] = keep.toSeq
-          .flatMap(s => readSnapshot(t, s).toSeq)
+          .flatMap(id => readSnapshot(t, id).toSeq)
           .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
         bucketsOnDisk(t).foreach { k =>
           bucketVersionsOnDisk(t, k)
@@ -1460,7 +1352,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     // the passes above (plus orphans from a crashed commit) — keeps
     // readTableAt and vacuum under ONE retention horizon
     manifestsOnDisk.foreach { m =>
-      val refs = readManifestVersion(m)
+      val refs = readKv(manifestsDir.resolve("m" + m))
       val live = Tables.forall { t =>
         refs.get(t).forall(v => snapshotsOnDisk(t).contains(v.drop(1).toLong))
       }
@@ -1481,9 +1373,8 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * Deletes never lower the mark — it is a monotone upper bound, which is
     * all id-uniqueness needs.
     */
-  private def nextIdBase(t: String, df: => DataFrame): Long =
-    readManifest().flatMap(_.get(s"maxid.$t")).map(_.toLong)
-      .getOrElse(maxId(df))
+  private def nextIdBase(s: State, t: String): Long =
+    s.maxId(t).getOrElse(maxId(readTable(s, t)))
 
   /** Max id in a batch-sized DataFrame (the id-carrying `fresh` rows), or
     * `fallback` when the batch is empty — O(batch), never O(table).
@@ -1567,32 +1458,110 @@ object GraphStore {
     (((h % buckets) + buckets) % buckets).toInt
   }
 
-  /** Per-store-root JVM mutex backing withWriteLock. This map is NOT the
-    * cross-process exclusion — that is the `FileChannel.lock` on
-    * `root/_LOCK` taken by the outermost withWriteLock frame, which makes
-    * a second *process* writing the same store root block until the first
-    * commit's manifest flip lands (GraphStoreSpec pins this with a real
-    * subprocess). The JVM mutex only queues in-process writers ahead of
-    * the file lock, because JVM file locks are held per-process and a
-    * second in-process acquisition would throw
-    * OverlappingFileLockException instead of waiting.
+  /** One parsed `_MANIFEST` (empty: a store not yet initialized): the
+    * per-table snapshot ids, `nbuckets`, `maxid.*` and `revsync`, plus each
+    * table's current snapshot descriptor, read through `readDesc` at most
+    * once and only when first asked for. Descriptors and bucket dirs are
+    * immutable, so everything one State resolves belongs to one commit.
     */
-  private val jvmLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[store] def jvmLock(root: String): Object =
-    jvmLocks.computeIfAbsent(
-      // normalize so different spellings of the same dir share one mutex
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new Object)
+  private[graft] final class State(val manifest: Map[String, String],
+      defaultBuckets: Int, readDesc: (String, Long) => Map[Bucket, Long],
+      root: String) {
+    /** Bucket count, pinned in the manifest at initialize (a changed
+      * constructor argument on an existing store is ignored — honoring it
+      * would require rehashing every row).
+      */
+    val buckets: Int = manifest.get("nbuckets").map(_.toInt).getOrElse(defaultBuckets)
+    def revsync: Boolean = manifest.contains("revsync")
+    def maxId(t: String): Option[Long] = manifest.get(s"maxid.$t").map(_.toLong)
 
-  /** Per-root reentrancy depth for withWriteLock — shared across instances
-    * of the same root for the same reason jvmLock is.
+    def snapshotId(t: String): Option[Long] = manifest.get(t).map { v =>
+      require(v.startsWith("s"),
+        s"Store at $root uses the pre-bucketed (round ≤7) layout; " +
+          "rebuild it — in-place migration is not implemented")
+      v.drop(1).toLong
+    }
+
+    private val descs = scala.collection.mutable.Map.empty[String, Map[Bucket, Long]]
+    /** `t`'s current snapshot descriptor (empty if uninitialized). */
+    def snap(t: String): Map[Bucket, Long] = descs.synchronized {
+      descs.getOrElseUpdate(t, snapshotId(t).map(readDesc(t, _)).getOrElse(Map.empty))
+    }
+    /** [[snap]] of a table a read requires to exist. */
+    def live(t: String): Map[Bucket, Long] = {
+      if (snapshotId(t).isEmpty) throw new IllegalStateException(
+        s"Table $t not initialized — call initialize() first")
+      snap(t)
+    }
+
+    /** Candidate slot of hash `h` at generation `gen` (driver-side pmod
+      * twin of the in-plan expression in [[tokenCol]]).
+      */
+    private def slotAt(h: Long, gen: Int): Int = {
+      val m = buckets.toLong << gen
+      (((h % m) + m) % m).toInt
+    }
+
+    /** The bucket of `t` OWNING `name`: the highest-generation candidate
+      * slot present in the snapshot, else the implicit generation-0 slot.
+      * Splits preserve "exactly one owner per key" — a split removes the
+      * parent and adds both children in one commit.
+      */
+    def owner(t: String, name: String): Bucket = {
+      val present = snap(t).keySet
+      val h = rawHash(name)
+      present.iterator.map(_.gen).filter(_ > 0).toSeq.distinct.sortBy(-_)
+        .collectFirst { case g if present.contains(Bucket(g, slotAt(h, g))) =>
+          Bucket(g, slotAt(h, g)) }
+        .getOrElse(Bucket(0, slotAt(h, 0)))
+    }
+
+    /** In-plan twin of [[owner]] over the bucket set `present`: a codegen'd
+      * when-chain that checks each generation present from highest to
+      * lowest and falls back to the generation-0 slot, emitting the owning
+      * bucket's token (`"g_id"`). Chain depth = number of DISTINCT
+      * generations live at once (1 outside a split window, 2 during one);
+      * the per-generation id sets compile to `InSet`.
+      */
+    def tokenCol(present: Set[Bucket],
+        key: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+      val h = xxhash64(key)
+      val default = concat_ws("_", lit(0), pmod(h, lit(buckets.toLong)).cast("int"))
+      present.iterator.map(_.gen).filter(_ > 0).toSeq.distinct.sorted
+        .foldLeft(default) { (fallback, g) =>
+          val idc = pmod(h, lit(buckets.toLong << g)).cast("int")
+          val ids = present.collect { case Bucket(`g`, id) => id }
+          when(idc.isInCollection(ids), concat_ws("_", lit(g), idc))
+            .otherwise(fallback)
+        }
+    }
+  }
+
+  /** A write transaction, per thread and store root: the manifest-history
+    * id its reads are based on and the [[State]] pinned from that manifest.
+    * Advanced after each commit so a multi-commit transaction (e.g.
+    * ensureRevIndex + the mutation) chains.
     */
-  private val lockDepths =
-    new java.util.concurrent.ConcurrentHashMap[String, ThreadLocal[Integer]]()
-  private[store] def lockDepthFor(root: String): ThreadLocal[Integer] =
-    lockDepths.computeIfAbsent(
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new ThreadLocal[Integer] { override def initialValue = 0 })
+  private final case class Tx(base: Long, state: State)
+
+  /** Per-store-root record, shared by every instance over that root: its
+    * JVM monitor backs withWriteLock, and `tx` holds the calling thread's
+    * open transaction (null outside one). The monitor is NOT the
+    * cross-process exclusion — that is the `FileChannel.lock` on
+    * `root/_LOCK` taken by the outermost withWriteLock frame, which makes a
+    * second *process* writing the same store root block until the first
+    * commit's manifest flip lands (GraphStoreSpec pins this with a real
+    * subprocess). The monitor only queues in-process writers ahead of the
+    * file lock, because JVM file locks are held per-process and a second
+    * in-process acquisition would throw OverlappingFileLockException
+    * instead of waiting.
+    */
+  private final class PerRoot { val tx = new ThreadLocal[Tx] }
+  private val roots = new java.util.concurrent.ConcurrentHashMap[String, PerRoot]()
+  private def perRoot(root: String): PerRoot =
+    // normalize so different spellings of the same dir share one record
+    roots.computeIfAbsent(Paths.get(root).toAbsolutePath.normalize.toString,
+      _ => new PerRoot)
 
   /** CAS conflict marker: a racing writer took this transaction's manifest
     * slot — the outermost withWriteLock frame re-pins and reruns the body.
@@ -1600,19 +1569,14 @@ object GraphStore {
   private[store] final class CommitConflict
     extends RuntimeException("manifest CAS conflict — transaction retries")
 
-  /** Per-root per-thread transaction pins (see the instance accessors). */
-  private val txBases =
-    new java.util.concurrent.ConcurrentHashMap[String, ThreadLocal[java.lang.Long]]()
-  private[store] def txBaseFor(root: String): ThreadLocal[java.lang.Long] =
-    txBases.computeIfAbsent(
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new ThreadLocal[java.lang.Long])
-  private val txManifests =
-    new java.util.concurrent.ConcurrentHashMap[String, ThreadLocal[Map[String, String]]]()
-  private[store] def txManifestFor(root: String): ThreadLocal[Map[String, String]] =
-    txManifests.computeIfAbsent(
-      java.nio.file.Paths.get(root).toAbsolutePath.normalize.toString,
-      _ => new ThreadLocal[Map[String, String]])
+  /** The one parser of the store's `k=v` files: `_MANIFEST`, its history
+    * entries `_manifests/m<N>` and the snapshot descriptors.
+    */
+  private def readKv(p: Path): Map[String, String] =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+      .split("\n").filter(_.contains("=")).map { l =>
+        val Array(k, v) = l.trim.split("=", 2); k -> v
+      }.toMap
 
   /** Unsigned lexicographic byte ordering — parquet's comparison order for
     * BINARY/UTF8 statistics, and equal to codepoint order on UTF-8 bytes.

@@ -12,12 +12,22 @@ class BandChecksSpec extends AnyFunSuite with SparkTestBase {
 
   private val sf = "/root/testdata/sf0.01"
 
+  private lazy val bands = BandChecks.run(spark, sf)
+
   test("all 10 band checks pass at sf0.01 (9 rows-only queries + the approx-topk quality/library cross-check)") {
-    val bands = BandChecks.run(spark, sf)
     assert(bands.size == 10, s"expected 10 band checks, got ${bands.size}")
     val failed = bands.filterNot(_.ok)
     assert(failed.isEmpty,
       failed.map(b => s"${b.query}: ${b.detail}").mkString("; "))
+  }
+
+  test("Verify's [band] lines are pure ASCII for every check's ok and FAIL verdicts and a crash text") {
+    val crashed = BandChecks.Band("q_x", ok = false, "check crashed: na\u00efve \u2014 \u03c3 \uD83D\uDE00")
+    val lines = (bands ++ bands.map(_.copy(ok = false)) :+ crashed).map(BandChecks.line)
+    assert(lines.size == 21)
+    lines.foreach(l => assert(l.forall(_ < 0x80), s"non-ASCII line: $l"))
+    assert(BandChecks.line(BandChecks.Band("q_x", ok = true, "a \u2264 b")) ==
+      "[band] q_x: ok - a \\u2264 b")
   }
 
   test("band JSON renders one entry per check with boolean verdicts") {

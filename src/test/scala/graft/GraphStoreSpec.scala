@@ -782,6 +782,37 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(st.getEntity("e#042").observations == Seq("o42"))
   }
 
+  test("pre-row-count sidecars (3-field lines): a point lookup still prunes to one file, metaRowCount reads footers") {
+    import spark.implicits._
+    import java.nio.charset.StandardCharsets.UTF_8
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-store-").toString
+    val st = new GraphStore(spark, dir, numBuckets = 1, filesPerBucket = 4)
+    st.initialize()
+    st.upsertEntitiesDf(
+      (1 to 100).map(i => (f"e#$i%03d", "t", Seq(s"o$i")))
+        .toDF("name", "entity_type", "observations"))
+    // rewrite every sidecar as a store written before row counts existed
+    // did: `name \t min \t max`, no count field
+    val sidecars = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString == "_FILESTATS").toList
+    sidecars.foreach { p =>
+      val lines = new String(Files.readAllBytes(p), UTF_8).split("\n")
+      assert(lines.forall(_.split("\t").length == 4))
+      Files.write(p, lines.map(_.split("\t").take(3).mkString("\t")).mkString("\n").getBytes(UTF_8))
+    }
+    assert(sidecars.nonEmpty)
+    val bucketFiles = new java.io.File(st.filesForKeys("entities", Seq("e#042")).head.getParent.toString)
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(bucketFiles >= 2, s"split bucket expected, got $bucketFiles file(s)")
+    assert(st.filesForKeys("entities", Seq("e#042")).size == 1)
+    assert(st.filesForKeys("observations", Seq("e#042")).size == 1)
+    assert(st.getEntity("e#042").observations == Seq("o42"))
+    val (counts, jobs) = jobsDuring(Seq("entities", "observations").map(st.metaRowCount))
+    assert(counts == Seq(100L, 100L), s"footer fallback counts $counts")
+    assert(jobs == 0, s"metaRowCount must not run Spark jobs, saw $jobs")
+  }
+
   test("vacuum reader horizon: stale DataFrame fails loudly after vacuum(1), survives keepVersions=2") {
     val st = freshStore()
     st.createEntities(Seq(Entity("A", "t1", Seq("o1"))))
@@ -1066,6 +1097,64 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(hitRels == rels)
     assert(hydrateJobs == 1, s"hydrating a search hit set ran $hydrateJobs jobs")
     assert(st.searchNodes("person") == (hitEnts, hitRels))
+  }
+
+  /** A store that counts how often its calls resolve the store state. */
+  private class CountingStore(dir: String) extends GraphStore(spark, dir, numBuckets = 1) {
+    var states = 0
+    override private[graft] def state(): GraphStore.State = { states += 1; super.state() }
+  }
+
+  test("serve reads resolve the store state once per call: getEntity hit and miss, searchNodes, readGraph") {
+    val st = new CountingStore(Files.createTempDirectory("graft-store-").toString)
+    st.initialize()
+    seed(st)
+    st.createRelations(Seq(Relation("Alice", "Bob", "knows")))
+    def once[A](what: String)(call: => A): A = {
+      st.states = 0
+      val out = call
+      assert(st.states == 1, s"$what resolved the store state ${st.states} times")
+      out
+    }
+    assert(once("getEntity")(st.getEntity("Alice")) ==
+      Entity("Alice", "person", Seq("software engineer")))
+    once("getEntity miss")(intercept[NoSuchElementException](st.getEntity("Nobody")))
+    assert(once("searchNodes")(st.searchNodes("person"))._1.map(_.name) == Seq("Alice", "Bob"))
+    assert(once("readGraph")(st.readGraph())._2 == Seq(Relation("Alice", "Bob", "knows")))
+  }
+
+  test("a read call sees one commit: a commit landing right after it resolved its state stays invisible to it") {
+    val dir = Files.createTempDirectory("graft-store-").toString
+    val writer = new GraphStore(spark, dir)
+    writer.initialize()
+    seed(writer)
+    writer.createRelations(Seq(Relation("Alice", "Bob", "knows")))
+    // the reader runs `commit` (once) right after its next call resolved
+    // its state: the commit lands before that call reads any table
+    var commit: () => Unit = () => ()
+    val reader = new GraphStore(spark, dir) {
+      override private[graft] def state(): GraphStore.State = {
+        val s = super.state()
+        val c = commit
+        commit = () => ()
+        c()
+        s
+      }
+    }
+    val alice = Entity("Alice", "person", Seq("software engineer"))
+    val retyped = Entity("Alice", "robot", Seq("rebuilt", "retyped"))
+    // an upsert that retypes Alice and replaces her observations
+    commit = () => writer.createEntities(Seq(retyped))
+    assert(reader.getEntity("Alice") == alice, "the entity row and its observations come from one commit")
+    assert(reader.getEntity("Alice") == retyped, "the next call sees the commit")
+    // a cascade delete between ranking and hydration
+    val before = reader.searchNodes("o")
+    assert(before._1.map(_.name).contains("Alice") && before._2.nonEmpty)
+    commit = () => writer.deleteEntity("Alice")
+    assert(reader.searchNodes("o") == before, "hits hydrate from the state that ranked them")
+    val after = reader.searchNodes("o")
+    assert(!after._1.map(_.name).contains("Alice") && after._2.isEmpty)
+    intercept[NoSuchElementException](reader.getEntity("Alice"))
   }
 
   test("searchNodes/readGraph edges equal relationsForEntities over the hits, across mixed generations; codepoint order") {
