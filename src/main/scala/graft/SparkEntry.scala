@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, Settle}
 import graft.pipeline.{Dedup, Multimodal, Pq, Similarity, SuffixIndex, TextAnalysis, MediaRow}
 import graft.streaming.EventOps
 import graft.Tables._
@@ -5346,13 +5346,13 @@ object SparkEntry {
         trans.groupBy("from_type").agg(sum("n").as("tot")), "from_type")
       val states = trans.select(col("from_type").as("st"))
         .union(trans.select(col("to_type").as("st"))).distinct()
-      var pi = states.withColumn("pi", lit(1000000L))
-      for (_ <- 1 to 4) {
-        pi = tm.join(pi.withColumnRenamed("st", "from_type"), "from_type")
+      // one plan tree over `trans`: the settle passes every round through
+      Settle.fixpoint(states.withColumn("pi", lit(1000000L)), 0L, 4,
+          settle = Settle.passThrough) { (pi, _) =>
+        tm.join(pi.withColumnRenamed("st", "from_type"), "from_type")
           .select(col("to_type").as("st"), expr("(pi * n) div tot").as("m"))
           .groupBy("st").agg(sum("m").as("pi"))
-      }
-      pi.select(col("st").as("event_type"), col("pi")).orderBy("event_type")
+      }.result.select(col("st").as("event_type"), col("pi")).orderBy("event_type")
     }),
 
     // Seasonal-naive forecast backtest: forecast(type, day) = actual at

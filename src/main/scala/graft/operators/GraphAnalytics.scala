@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import Settle.{Fixpoint, fixpoint, noneWhere, settleCounted, unchanged}
+import Settle.{Fixpoint, fixpoint, noneWhere, passThrough, settleCounted, unchanged}
 
 /** Iterative graph analytics beyond connected components (Dedup.scala).
   *
@@ -21,12 +21,15 @@ import Settle.{Fixpoint, fixpoint, noneWhere, settleCounted, unchanged}
   *  - each iteration is exactly one shuffle: the groupBy(dst) that sums the
   *    received contributions. Out-degrees are computed once.
   *  - the rank frame stays (node, long) — O(V) rows, never the edge list.
-  *  - PageRank's iterations are fixed and small (≤ 50) and carry only the
-  *    O(V) received-mass frame, so it runs without a per-round settle. The
-  *    peel, label and distance loops instead settle (local-checkpoint and
-  *    count) EVERY round through the one round loop, [[Settle.fixpoint]]:
-  *    lineage stays one round deep and round N−1's blocks are dropped as
-  *    soon as round N settles (the same loop runs Dedup's CC).
+  *  - every iterative operator except betweenness and random walks runs
+  *    its rounds through the one round loop, [[Settle.fixpoint]] (the same
+  *    loop runs Dedup's CC). The peel, label and distance loops settle
+  *    (local-checkpoint and count) EVERY round: lineage stays one round
+  *    deep and round N−1's blocks are dropped as soon as round N settles.
+  *    PageRank's rounds are fixed and small (≤ 50) and carry only the O(V)
+  *    received-mass frame, so its settle passes each round through and the
+  *    run stays one plan tree; HITS settles inside its round. The loop
+  *    drops only what the next round no longer reads.
   */
 object GraphAnalytics {
 
@@ -56,6 +59,8 @@ object GraphAnalytics {
     * rank_0(v)   = scale
     * rank_i+1(v) = base + Σ_{(u,v)∈E} ((rank_i(u) * dampNum) div dampDen) div outDeg(u)
     * base        = (scale * (dampDen - dampNum)) div dampDen
+    *
+    * The unit-weight, teleport-everywhere case of [[pageRank]].
     */
   def pageRankInt(
       edges: DataFrame,
@@ -64,76 +69,17 @@ object GraphAnalytics {
       dampNum: Long = 85,
       dampDen: Long = 100): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src"))
-      .cache()
-    // deg groups on e's partitioning key — no exchange; stays src-partitioned
-    val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg")).cache()
-    // one upfront size gate for every per-round O(V) hint below: deg has one
-    // row per out-node (≤ V), and counting it just materializes the cache
-    // the first iteration needs anyway. Past the cap the hints drop out and
-    // the loop degrades to the documented two-exchange shuffled shape.
-    val vRows = deg.count()
-    def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    val base = (scale * (dampDen - dampNum)) / dampDen
-
-    // Ranks are carried ONLY as received mass keyed by dst: any node absent
-    // from `recv` has rank = base (no in-edges), so the full O(V) rank frame
-    // never enters the loop. Per iteration exactly two exchanges: recv →
-    // src-hash for the degree join (e and deg are already src-partitioned,
-    // so the edge side never re-shuffles), and the groupBy(dst) sum.
-    var recv: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val contrib = recv match {
-        case None => // rank_0 = scale for every node
-          deg.select(col("src"),
-            expr(s"(($scale * $dampNum) div $dampDen) div out_deg").as("contrib"))
-        case Some(r) =>
-          // recv is O(V) — broadcast it so the src-partitioned deg cache is
-          // probed map-side (no re-sort of the degree frame per iteration)
-          deg.join(bc(r.withColumnRenamed("node", "src")), Seq("src"), "left")
-            .select(col("src"),
-              expr(s"((($base + coalesce(recv, 0L)) * $dampNum) div $dampDen) div out_deg")
-                .as("contrib"))
-      }
-      // contrib is O(V) — broadcasting it leaves the cached O(E) edge list
-      // untouched in place; the groupBy(dst) sum is then the iteration's
-      // ONLY exchange.
-      recv = Some(
-        e.join(bc(contrib), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum("contrib").as("recv")))
-    }
-    // The O(V) node set is joined exactly once, at the end, for the output.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-    val out = nodes.join(recv.get, Seq("node"), "left")
-      .select(col("node"), (lit(base) + coalesce(col("recv"), lit(0L))).as("pr"))
-    // Cache lifecycle: materialize the O(V) result eagerly, then release the
-    // cached edge/degree blocks — they exist only so the iteration reuses one
-    // scan+shuffle, and holding them past the operator taxes every later
-    // query sharing the JVM/cluster (the round-4 bench-suite regression).
-    // The checkpoint blocks themselves are reclaimed by the ContextCleaner
-    // once the returned frame is dereferenced.
-    val mat = out.localCheckpoint(true)
-    e.unpersist(false)
-    deg.unpersist(false)
-    mat
+    pageRank(edges, lit(1L), None, iters, scale, dampNum, dampDen)
   }
 
   /** WEIGHTED fixed-point PageRank: contributions split proportionally to
     * edge weight instead of uniformly — contrib(u→v) =
     * (((base + recv_u)·dampNum) div dampDen) · w(u,v) div Σw(u,·), every
     * step integer, so the chained-CTE oracle hash-matches exactly (the
-    * [[pageRankInt]] contract generalized; w ≡ 1 degenerates to it up to
-    * division order). Same scale shape: weighted edges cached
-    * src-partitioned with their source weight-sum attached once; per
-    * iteration one size-gated broadcast of the O(V) damped frame and one
-    * groupBy(dst) exchange. Weights must be positive longs; the per-edge
-    * product damped·w stays far inside a long for any realistic scale
-    * (rank mass ≤ scale·V ≈ 10¹⁵ at V = 10⁹, times w ≤ 10³).
+    * [[pageRankInt]] contract generalized; w ≡ 1 IS pageRankInt — both run
+    * [[pageRank]]). Weights must be positive longs; the per-edge product
+    * damped·w stays far inside a long for any realistic scale (rank mass
+    * ≤ scale·V ≈ 10¹⁵ at V = 10⁹, times w ≤ 10³).
     */
   def pageRankWeightedInt(
       edges: DataFrame,
@@ -142,38 +88,81 @@ object GraphAnalytics {
       dampNum: Long = 85,
       dampDen: Long = 100): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
+    pageRank(edges, col("w"), None, iters, scale, dampNum, dampDen)
+  }
+
+  /** The one fixed-point PageRank body behind [[pageRankInt]],
+    * [[pageRankWeightedInt]] and [[personalizedPageRankInt]]: edge weight
+    * `weight` (lit(1L) for the unweighted forms) and teleport set
+    * `teleport` (None: every node; Some(S): the PPR seeds). Returns
+    * (node, pr) for every node — without the seeds' zero-mass nodes when
+    * `teleport` is given.
+    *
+    * Scale shape (100 TB stance):
+    *  - edges are hash-partitioned by `src` ONCE and cached with their
+    *    source weight-sum attached once; every round's contribution join
+    *    reuses that partitioning (no per-round edge shuffle);
+    *  - ranks are carried ONLY as received mass keyed by dst: a node absent
+    *    from `recv` has rank = teleport(v) (no in-edges), so the full O(V)
+    *    rank frame never enters the loop, and zero-rank nodes (PPR outside
+    *    the seed neighborhood) never materialize;
+    *  - per round one size-gated broadcast of the O(V) received mass into
+    *    the src-partitioned weight-sum cache, one of the O(V) damped frame
+    *    into the cached edges, and the groupBy(dst) sum as the round's only
+    *    data exchange. Past the gate the joins degrade to shuffled ones.
+    *
+    * The rounds run through [[Settle.fixpoint]] with a pass-through settle:
+    * they carry only the O(V) received-mass frame, so the whole run stays
+    * one plan tree that the final checkpoint executes. Settling every
+    * round instead measured no faster on graph_pagerank at sf0.1 and ran
+    * 23 jobs to this shape's 19.
+    */
+  private def pageRank(edges: DataFrame, weight: Column, teleport: Option[Seq[Long]],
+      iters: Int, scale: Long, dampNum: Long, dampDen: Long): DataFrame = {
     val e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"),
-        col("w").cast("long").as("w"))
+        weight.cast("long").as("w"))
       .repartition(col("src"))
       .cache()
+    // ws groups on e's partitioning key — no exchange; stays src-partitioned
     val ws = e.groupBy("src").agg(sum("w").as("wsum")).cache()
+    // one upfront size gate for every per-round O(V) hint below: ws has one
+    // row per out-node (≤ V), and counting it just materializes the cache
+    // the first round needs anyway
     val vRows = ws.count()
     def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
     val base = (scale * (dampDen - dampNum)) / dampDen
-    var recv: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val damped = recv match {
-        case None =>
-          ws.select(col("src"),
-            lit((scale * dampNum) / dampDen).as("damped"), col("wsum"))
-        case Some(r) =>
-          ws.join(bc(r.withColumnRenamed("node", "src")), Seq("src"), "left")
-            .select(col("src"),
-              expr(s"(($base + coalesce(recv, 0L)) * $dampNum) div $dampDen")
-                .as("damped"), col("wsum"))
-      }
-      recv = Some(
-        e.join(bc(damped), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum(expr("damped * w div wsum")).as("recv")))
+    def tele(n: Column): Column =
+      teleport.fold(lit(base))(s => when(n.isin(s: _*), lit(base)).otherwise(lit(0L)))
+    // one round: damped mass of every ranked source, split by edge weight
+    def spread(damped: DataFrame): DataFrame =
+      e.join(bc(damped), "src")
+        .groupBy(col("dst").as("node"))
+        .agg(sum(expr("damped * w div wsum")).as("recv"))
+    // round 1 reads rank_0 = scale on every teleporting node
+    val recv1 = spread(teleport.fold(ws)(s => ws.filter(col("src").isin(s: _*)))
+      .select(col("src"), lit((scale * dampNum) / dampDen).as("damped"), col("wsum")))
+    // rank_i(u) = teleport(u) + recv(u); rank 0 contributes nothing, so the
+    // filter only keeps the PPR frontier sparse
+    val fp = fixpoint(recv1, vRows, iters - 1, settle = passThrough) { (recv, _) =>
+      spread(ws.join(bc(recv.withColumnRenamed("node", "src")), Seq("src"), "left")
+        .select(col("src"), col("wsum"),
+          (tele(col("src")) + coalesce(col("recv"), lit(0L))).as("rank"))
+        .filter(col("rank") > 0)
+        .select(col("src"), expr(s"(rank * $dampNum) div $dampDen").as("damped"), col("wsum")))
     }
+    // The O(V) node set is joined exactly once, at the end, for the output.
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-    val out = nodes.join(recv.get, Seq("node"), "left")
-      .select(col("node"), (lit(base) + coalesce(col("recv"), lit(0L))).as("pr"))
-    val mat = out.localCheckpoint(true)
+    val out = nodes.join(fp.result, Seq("node"), "left")
+      .select(col("node"), (tele(col("node")) + coalesce(col("recv"), lit(0L))).as("pr"))
+    // Cache lifecycle: materialize the O(V) result eagerly, then release the
+    // cached edge/weight-sum blocks — they exist only so the rounds reuse one
+    // scan+shuffle, and holding them past the operator taxes every later
+    // query sharing the JVM/cluster (the round-4 bench-suite regression).
+    // Uniform PageRank keeps rank-0 nodes (dampNum = dampDen); PPR drops them.
+    val mat = teleport.fold(out)(_ => out.filter(col("pr") > 0)).localCheckpoint(true)
     e.unpersist(false)
     ws.unpersist(false)
     mat
@@ -349,11 +338,10 @@ object GraphAnalytics {
     val (h0, vRows) = settleCounted(
       e.select(col("src").as("node")).distinct()
         .withColumn("score", lit(scale)))
-    var h = h0
     def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
     // top score = scale exactly; everything else floors proportionally.
     // The raw frame is referenced twice (max-agg + the scored projection),
-    // so it is settled eagerly — O(V), same discipline as the kCore loop.
+    // so it is settled — O(V), same discipline as the kCore loop.
     def normalize(raw0: DataFrame): DataFrame = {
       // LAZY checkpoint: the max-aggregate broadcast is the first consumer
       // and materializes the blocks as a side effect — the eager variant
@@ -362,23 +350,26 @@ object GraphAnalytics {
       raw.crossJoin(broadcast(raw.agg(max("raw").as("mx"))))
         .select(col("node"), expr(s"(raw * ${scale}L) div mx").as("score"))
     }
-    var a: DataFrame = null
-    for (_ <- 1 to iters) {
+    // The loop carries the output frame (kind, node, score); a round reads
+    // only its hub rows, and the optimizer prunes the auth branch away.
+    def tagged(kind: String, df: DataFrame): DataFrame =
+      df.select(lit(kind).as("kind"), col("node"), col("score"))
+    // normalize settles each half-step inside the round, so the loop's
+    // settle passes the round through
+    val fp = fixpoint(tagged("hub", h0), vRows, iters, settle = passThrough) { (prev, _) =>
+      val h = prev.filter(col("kind") === "hub")
       // every dst has an in-edge from a scored src (h covers all srcs
       // inductively), so both frames stay total over their side
-      val araw = e
+      val a = normalize(e
         .join(bc(h.select(col("node").as("src"), col("score").as("hs"))), "src")
-        .groupBy(col("dst").as("node")).agg(sum("hs").as("raw"))
-      a = normalize(araw)
-      val hraw = e
+        .groupBy(col("dst").as("node")).agg(sum("hs").as("raw")))
+      val hNext = normalize(e
         .join(bc(a.select(col("node").as("dst"), col("score").as("as"))), "dst")
-        .groupBy(col("src").as("node")).agg(sum("as").as("raw"))
-      h = normalize(hraw)
+        .groupBy(col("src").as("node")).agg(sum("as").as("raw")))
+      tagged("auth", a).union(tagged("hub", hNext))
     }
-    val out = a.select(lit("auth").as("kind"), col("node"), col("score"))
-      .union(h.select(lit("hub").as("kind"), col("node"), col("score")))
     e.unpersist(false)
-    out
+    fp.result
   }
 
   /** Degree-oriented closed-triangle enumeration shared by
@@ -511,10 +502,9 @@ object GraphAnalytics {
     * rank_i+1(v) = base·[v ∈ S] + Σ_{(u,v)∈E} ((rank_i(u)·dampNum) div dampDen) div outDeg(u)
     * base        = (scale·(dampDen − dampNum)) div dampDen
     *
-    * Scale shape identical to pageRankInt: edges src-partitioned and cached
-    * once, received mass carried as an O(reached) frame (zero-rank nodes
-    * never materialize — early rounds touch only the seed neighborhood),
-    * one groupBy(dst) exchange per iteration, size-gated broadcasts.
+    * [[pageRank]] with teleport set S: received mass is carried as an
+    * O(reached) frame, so early rounds touch only the seed neighborhood.
+    * Nodes with zero mass are left out of the result.
     */
   def personalizedPageRankInt(
       edges: DataFrame,
@@ -525,52 +515,8 @@ object GraphAnalytics {
       dampDen: Long = 100): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(sources.nonEmpty, "personalized PageRank needs a non-empty seed set")
-    val e = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .repartition(col("src"))
-      .cache()
-    val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg")).cache()
-    val vRows = deg.count()
-    def bc(df: DataFrame): DataFrame = Hints.broadcastIfUnder(df, vRows)
-    val base = (scale * (dampDen - dampNum)) / dampDen
-    val isSrc = (n: org.apache.spark.sql.Column) => n.isin(sources: _*)
-
-    var recv: Option[DataFrame] = None
-    for (_ <- 1 to iters) {
-      val contrib = recv match {
-        case None => // rank_0 = scale on seeds only
-          deg.filter(isSrc(col("src")))
-            .select(col("src"),
-              expr(s"(($scale * $dampNum) div $dampDen) div out_deg").as("contrib"))
-        case Some(r) =>
-          // rank_i(u) = base·[u ∈ S] + recv(u); nodes absent from recv and
-          // outside S hold rank 0 and contribute nothing — inner join keeps
-          // the active frontier sparse
-          deg.join(bc(r.withColumnRenamed("node", "src")), Seq("src"), "left")
-            .select(col("src"), col("out_deg"),
-              when(isSrc(col("src")), lit(base)).otherwise(lit(0L))
-                .plus(coalesce(col("recv"), lit(0L))).as("rank"))
-            .filter(col("rank") > 0)
-            .select(col("src"),
-              expr(s"((rank * $dampNum) div $dampDen) div out_deg").as("contrib"))
-      }
-      recv = Some(
-        e.join(bc(contrib), "src")
-          .groupBy(col("dst").as("node"))
-          .agg(sum("contrib").as("recv")))
-    }
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-    val out = nodes.join(recv.get, Seq("node"), "left")
-      .select(col("node"),
-        (when(isSrc(col("node")), lit(base)).otherwise(lit(0L))
-          + coalesce(col("recv"), lit(0L))).as("ppr"))
-      .filter(col("ppr") > 0)
-    val mat = out.localCheckpoint(true)
-    e.unpersist(false)
-    deg.unpersist(false)
-    mat
+    pageRank(edges, lit(1L), Some(sources), iters, scale, dampNum, dampDen)
+      .withColumnRenamed("pr", "ppr")
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.,
@@ -906,7 +852,7 @@ object GraphAnalytics {
       least(col("u"), col("v")).cast("long").as("u"),
       greatest(col("u"), col("v")).cast("long").as("v"))
     val peel = (cur: DataFrame, _: Long) => trussPeelRound(cur.select("u", "v"), k)
-    if (!converge) fixpoint(canon, 0L, maxRounds, settle = df => (df, 0L), seedOwned = false)(peel)
+    if (!converge) fixpoint(canon, 0L, maxRounds, settle = passThrough, seedOwned = false)(peel)
     else {
       val (seed, m) = settleCounted(canon)
       fixpoint(seed, m, maxRounds, Some(unchanged),
@@ -1177,6 +1123,7 @@ object GraphAnalytics {
     var settled = f0.select("seed", "node").localCheckpoint(true)
     // frontier size gate threaded from each level's settled count
     var fRows = seeds.size.toLong
+    // not on Settle.fixpoint: the backward pass reads every level's frame
     for (level <- 1 to rounds) {
       val frontier = levels(level - 1)
       val (next, nn) = settleCounted(adj
@@ -1298,6 +1245,7 @@ object GraphAnalytics {
     val hash = conv(substring(md5(concat_ws(":",
       col("walk_id"), col("step"), col("node"), lit("walk"))
       .cast("binary")), 1, 13), 16, 10).cast("long")
+    // not on Settle.fixpoint: the output unions every step's frame
     for (_ <- 1 to steps) {
       val next = adj
         .join(broadcast(cur),

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions.broadcast
 
 /** Size-gated broadcast hints for the iterative operators.
   *
-  * pageRankInt / kCore / sssp / mergeComponents broadcast their O(V)
-  * per-round frames so the cached O(E) adjacency is probed map-side instead
-  * of being re-shuffled every round — measured 2-3× wins at bench scale.
+  * The PageRank body (uniform, weighted and personalized) / HITS / kCore /
+  * sssp / mergeComponents broadcast their O(V) per-round frames so the
+  * cached O(E) adjacency is probed map-side instead of being re-shuffled
+  * every round — measured 2-3× wins at bench scale.
   * But an UNCONDITIONAL hint overrides Spark's size-based planning: on a
   * graph whose node frame exceeds broadcast capacity it forces a driver /
   * executor OOM where the un-hinted plan would simply shuffle. These
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions.broadcast
   * The row counts used for gating are cheap by construction: every gated
   * frame is either already cached/checkpointed by its operator (kCore's
   * survivor frame, sssp's distance frame, mergeComponents' contraction) or
-  * about to be materialized anyway (pageRank's degree cache).
+  * about to be materialized anyway (PageRank's weight-sum cache).
   */
 object Hints {
 

@@ -18,7 +18,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * Two tools (the harness's `graft.Harness.sweep` clears whatever is left
   * between queries):
   *  - [[fixpoint]] — the one round loop every iterative operator runs
-  *    through (settle → count → unpersist, optional stop test, round cap).
+  *    through (settle → count → unpersist the dead round, optional stop
+  *    test, round cap).
   *  - [[unpersistSettled]] — drop ONE settled frame's blocks the moment its
   *    last consumer inside an operator is done (iterative loops: round N's
   *    labels are dead as soon as round N+1 settles).
@@ -52,6 +53,11 @@ object Settle {
     (cp, cp.queryExecution.toRdd.count())
   }
 
+  /** The settle of a loop whose step settles its own frame, or whose
+    * rounds stay one lazy plan tree: the round's frame as it is, measure 0.
+    */
+  val passThrough: DataFrame => (DataFrame, Long) = df => (df, 0L)
+
   /** A round's exit test: (previous measure, this round's measure, this
     * round's settled frame) ⇒ stop.
     */
@@ -83,6 +89,14 @@ object Settle {
     * a seed the operator settled for this loop is dead after round 1, but a
     * seed that is (a projection over) the CALLER's frame must stay readable
     * — its blocks are not this loop's to drop.
+    *
+    * Dropping round N−1 means dropping only the settled blocks its plan
+    * reads that round N's plan no longer reads ([[unpersistDead]]). With a
+    * settling `settle` the two sets are disjoint and the whole round goes.
+    * With [[passThrough]] (PageRank's single tree, the Markov chain) round
+    * N's plan still holds round N−1's lineage — the caller's checkpointed
+    * input, a checkpoint taken before the loop — and nothing it still reads
+    * is dropped.
     */
   def fixpoint(
       seed: DataFrame,
@@ -98,7 +112,7 @@ object Settle {
     while (used < maxRounds && !converged) {
       val (next, m) = settle(step(cur, measure))
       converged = stop.exists(_(measure, m, next))
-      if (used > 0 || seedOwned) unpersistSettled(cur)
+      if (used > 0 || seedOwned) unpersistDead(cur, next)
       cur = next; measure = m; used += 1
     }
     Fixpoint(cur, used, converged)
@@ -115,6 +129,14 @@ object Settle {
     * an error) when `df` holds no settled frame — callers can hand it
     * whatever their loop variable currently holds.
     */
-  def unpersistSettled(df: DataFrame): Unit =
-    rddsOf(df).foreach { r => try r.unpersist(false) catch { case _: Throwable => () } }
+  def unpersistSettled(df: DataFrame): Unit = unpersist(rddsOf(df))
+
+  /** Drop the settled blocks `prev` reads that `next` does not. */
+  private def unpersistDead(prev: DataFrame, next: DataFrame): Unit = {
+    val live = rddsOf(next).map(_.id).toSet
+    unpersist(rddsOf(prev).filterNot(r => live(r.id)))
+  }
+
+  private def unpersist(rdds: Seq[RDD[_]]): Unit =
+    rdds.foreach { r => try r.unpersist(false) catch { case _: Throwable => () } }
 }

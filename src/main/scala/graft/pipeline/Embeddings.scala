@@ -191,18 +191,17 @@ object Embeddings {
       .select(col("j"), col("k"),
         expr("CAST(sign(c) AS BIGINT) * ((abs(c) * 1000000L) div mx)").as("cp"))
       .localCheckpoint(true)
-    var v = spark.range(dims.toLong)
+    val v0 = spark.range(dims.toLong)
       .select(col("id").cast("int").as("k"), lit(100000L).as("v"))
-    for (_ <- 1 to rounds) {
+    // the loop settles each iterate and drops the one before it
+    graft.operators.Settle.fixpoint(v0, dims.toLong, rounds) { (v, _) =>
       val w = cp.join(broadcast(v), "k")
         .groupBy(col("j")).agg(sum(col("cp") * col("v")).as("w"))
         .localCheckpoint(true)
-      v = w.crossJoin(broadcast(w.agg(max(abs(col("w"))).as("mw"))))
+      w.crossJoin(broadcast(w.agg(max(abs(col("w"))).as("mw"))))
         .select(col("j").as("k"),
           expr("CAST(sign(w) AS BIGINT) * ((abs(w) * 100000L) div mw)").as("v"))
-        .localCheckpoint(true)
-    }
-    v.select(col("k").as("dim"), col("v"))
+    }.result.select(col("k").as("dim"), col("v"))
   }
 
   private def vecToArray(c: org.apache.spark.sql.Column) =

@@ -973,7 +973,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       // one footer read yields BOTH the key range (pruning) and the row
       // count (metadata-only count(*) — see metaRowCount)
       val (range, rows) =
-        try withFooter(f, conf) { r =>
+        try ParquetMeta.withFooter(conf, f) { r =>
           import scala.jdk.CollectionConverters._
           val blocks = r.getFooter.getBlocks.asScala.toSeq
           val nRows = blocks.map(_.getRowCount).sum
@@ -1000,14 +1000,6 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     }
     Files.write(dir.resolve("_FILESTATS"),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def withFooter[A](f: java.io.File, conf: org.apache.hadoop.conf.Configuration)(
-      read: org.apache.parquet.hadoop.ParquetFileReader => A): A = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-    try read(r) finally r.close()
   }
 
   /** One `_FILESTATS` line: the file's bucket-key range (None for a `-`
@@ -1067,7 +1059,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       val stats = fileStats(dir).getOrElse(Map.empty)
       val counted = parquets.flatMap(f => stats.get(f.getName).flatMap(_.rows))
       if (counted.length == parquets.length) counted.sum
-      else parquets.map(withFooter(_, conf)(_.getRecordCount)).sum
+      else parquets.map(ParquetMeta.withFooter(conf, _)(_.getRecordCount)).sum
     }.sum
   }
 

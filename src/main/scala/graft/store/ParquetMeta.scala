@@ -24,12 +24,18 @@ object ParquetMeta {
     * contract the listing side keeps via its null-safety.
     */
   def rowCount(conf: Configuration, f: File): Long =
-    try {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
-      try r.getRecordCount finally r.close()
-    } catch { case _: java.io.IOException | _: RuntimeException => 0L }
+    try withFooter(conf, f)(_.getRecordCount)
+    catch { case _: java.io.IOException | _: RuntimeException => 0L }
+
+  /** Open one parquet file's footer, run `read` on it, close it. Errors
+    * propagate: each caller picks its own policy (stats map an unreadable
+    * file to 0, an exact count must fail).
+    */
+  def withFooter[A](conf: Configuration, f: File)(read: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+    try read(r) finally r.close()
+  }
 
   /** All `*.parquet` files under `dir`, recursively (partition
     * subdirectories included). Underscore/dot entries are skipped at

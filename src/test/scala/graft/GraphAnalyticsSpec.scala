@@ -178,13 +178,22 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     val chain = Seq((5L, 10L), (10L, 11L), (11L, 12L))
     val edges = (k5 ++ chain).toDF("u", "v")
     val prEdges = edges.select($"u".as("src"), $"v".as("dst"))
+    val weighted = prEdges.withColumn("w", ($"src" + $"dst") % 3 + 1)
+    // with the gate at 0 every round's join reads the earlier rounds lazily,
+    // so a round dropped too early fails here
     def run() = (
       GraphAnalytics.kCore(edges, k = 4, rounds = 4)
         .as[(Long, Long)].collect().toMap,
       GraphAnalytics.pageRankInt(prEdges, iters = 3)
         .as[(Long, Long)].collect().toMap,
       GraphAnalytics.bfs(edges, src = 1L, rounds = 3)
-        .as[(Long, Int)].collect().toMap)
+        .as[(Long, Int)].collect().toMap,
+      GraphAnalytics.pageRankWeightedInt(weighted, iters = 3)
+        .as[(Long, Long)].collect().toMap,
+      GraphAnalytics.personalizedPageRankInt(prEdges, Seq(1L, 10L), iters = 3)
+        .as[(Long, Long)].collect().toMap,
+      GraphAnalytics.hitsInt(prEdges, iters = 3)
+        .as[(String, Long, Long)].collect().toSet)
     val withHints = run()
     spark.conf.set(graft.operators.Hints.IterativeBroadcastMaxRows, "0")
     val without = try run()
@@ -673,7 +682,19 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     val edges = loopEdges.toDF("u", "v").localCheckpoint(true)
     val weighted = loopEdges.map { case (u, v) => (u, v, u % 3 + 1) }
       .toDF("u", "v", "w").localCheckpoint(true)
+    val directed = loopEdges.toDF("src", "dst").localCheckpoint(true)
+    val directedW = loopEdges.map { case (u, v) => (u, v, (u + v) % 3 + 1) }
+      .toDF("src", "dst", "w").localCheckpoint(true)
+    val emb = loopEdges.map { case (u, v) => (u, Seq(u.toFloat, v.toFloat)) }
+      .toDF("vec_id", "embedding").localCheckpoint(true)
     val runs: Seq[(String, () => DataFrame)] = Seq(
+      "pageRankInt" -> (() => GraphAnalytics.pageRankInt(directed, iters = 3)),
+      "pageRankWeightedInt" -> (() => GraphAnalytics.pageRankWeightedInt(directedW, iters = 3)),
+      "personalizedPageRankInt" ->
+        (() => GraphAnalytics.personalizedPageRankInt(directed, Seq(1L), iters = 3)),
+      "hitsInt" -> (() => GraphAnalytics.hitsInt(directed, iters = 3)),
+      "topPrincipalInt" ->
+        (() => graft.pipeline.Embeddings.topPrincipalInt(emb, "embedding", rounds = 3, dims = 2)),
       "kCore" -> (() => GraphAnalytics.kCore(edges, k = 3, rounds = 3)),
       "kCoreConverged" -> (() => GraphAnalytics.kCoreConverged(edges, k = 3, maxRounds = 10).result),
       "labelPropagation" -> (() => GraphAnalytics.labelPropagation(edges, rounds = 3)),
@@ -689,6 +710,10 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
       assert(edges.as[(Long, Long)].collect().toSet == loopEdges.toSet)
       assert(weighted.as[(Long, Long, Long)].collect().toSet ==
         loopEdges.map { case (u, v) => (u, v, u % 3 + 1) }.toSet)
+      assert(directed.as[(Long, Long)].collect().toSet == loopEdges.toSet)
+      assert(directedW.as[(Long, Long, Long)].collect().toSet ==
+        loopEdges.map { case (u, v) => (u, v, (u + v) % 3 + 1) }.toSet)
+      assert(emb.count() == loopEdges.size)
     }
   }
 
@@ -747,12 +772,26 @@ class GraphAnalyticsSpec extends AnyFunSuite with SparkTestBase {
     // Settle.fixpoint; a fixed-round run may only get cheaper
     import org.apache.spark.sql.functions.lit
     val g = loopEdges.toDF("u", "v")
+    // the power iterations run over the same edges read as directed; their
+    // result is collected inside the count, since hitsInt returns it lazy
+    val d = loopEdges.toDF("src", "dst")
+    val emb = loopEdges.map { case (u, v) => (u, Seq(u.toFloat, v.toFloat)) }
+      .toDF("vec_id", "embedding")
+    def collected(df: DataFrame): DataFrame = { df.collect(); df }
     val pinned = Seq(
       ("kCore(R=3)", 11, () => GraphAnalytics.kCore(g, k = 3, rounds = 3)),
       ("labelPropagation(R=3)", 10, () => GraphAnalytics.labelPropagation(g, rounds = 3)),
       ("sssp(R=3)", 12,
         () => GraphAnalytics.sssp(g.withColumn("w", lit(1L)), src = 1L, rounds = 3)),
-      ("trussEdges(R=2)", 21, () => GraphAnalytics.trussEdges(g, k = 4, rounds = 2)))
+      ("trussEdges(R=2)", 21, () => GraphAnalytics.trussEdges(g, k = 4, rounds = 2)),
+      ("pageRankInt(R=3)", 17, () => collected(GraphAnalytics.pageRankInt(d, iters = 3))),
+      ("pageRankWeightedInt(R=3)", 17, () => collected(
+        GraphAnalytics.pageRankWeightedInt(d.withColumn("w", $"src" % 3 + 1), iters = 3))),
+      ("personalizedPageRankInt(R=3)", 17, () => collected(
+        GraphAnalytics.personalizedPageRankInt(d, Seq(1L), iters = 3))),
+      ("hitsInt(R=3)", 27, () => collected(GraphAnalytics.hitsInt(d, iters = 3))),
+      ("topPrincipalInt(R=3)", 24, () => collected(
+        graft.pipeline.Embeddings.topPrincipalInt(emb, "embedding", rounds = 3, dims = 2))))
     for ((name, pin, run) <- pinned) {
       val (_, jobs) = jobsDuring(run())
       assert(jobs <= pin, s"$name ran $jobs jobs, pinned at $pin")
