@@ -95,7 +95,7 @@ object GraphAnalytics {
     * [[pageRankWeightedInt]] and [[personalizedPageRankInt]]: edge weight
     * `weight` (lit(1L) for the unweighted forms) and teleport set
     * `teleport` (None: every node; Some(S): the PPR seeds). Returns
-    * (node, pr) for every node — without the seeds' zero-mass nodes when
+    * (node, pr) for every node — without the zero-mass ones when
     * `teleport` is given.
     *
     * Scale shape (100 TB stance):
