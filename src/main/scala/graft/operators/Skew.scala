@@ -5,26 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation helpers. Ordinary sum/count aggregations don't need
   * salting (map-side partial aggregation already absorbs hot keys); the
-  * cases that DO melt a single reducer at 100 TB are (a) non-reducing
-  * aggregations (collect_list/collect_set over a hot key) and (b) joins
-  * where one key dominates. Both get the classic two-phase salt treatment,
-  * with DETERMINISTIC salts (hash of payload, not rand()) so results stay
-  * reproducible and oracle-comparable.
+  * case that DOES melt a single reducer at 100 TB is a join where one key
+  * dominates. It gets the classic salt treatment, with DETERMINISTIC salts
+  * (hash of payload, not rand()) so results stay reproducible and
+  * oracle-comparable.
   */
 object Skew {
-
-  /** Two-phase collect_set for skewed keys: phase 1 aggregates
-    * (key, salt) partitions — a hot key's values spread over `salts`
-    * reducers — phase 2 merges the (few, small) partials. Output array is
-    * sorted for determinism.
-    */
-  def saltedCollectSet(df: DataFrame, key: Column, value: Column, salts: Int): DataFrame =
-    df.select(key.as("key"), value.as("value"))
-      .withColumn("_salt", pmod(hash(col("value")), lit(salts)))
-      .groupBy(col("key"), col("_salt"))
-      .agg(collect_set(col("value")).as("_partial"))
-      .groupBy(col("key"))
-      .agg(array_sort(array_distinct(flatten(collect_list(col("_partial"))))).as("values"))
 
   /** Salted equi-join for a skewed fact side: fact rows get a deterministic
     * salt from their non-key payload; the (small) dimension is replicated

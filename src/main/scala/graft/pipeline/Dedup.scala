@@ -319,9 +319,10 @@ object Dedup {
   }
 
   /** Candidate-pair counts of the full inverted-index join vs the
-    * prefix-filtered one — the measurable scale win (test/bench aid).
+    * prefix-filtered one — the measurable scale win. Package-private: only
+    * the prefix-filter and scale-drill specs read it.
     */
-  def prefixFilterStats(docs: DataFrame, id: Column, text: Column,
+  private[graft] def prefixFilterStats(docs: DataFrame, id: Column, text: Column,
       n: Int = 3, tNum: Int = 1, tDen: Int = 2): (Long, Long) = {
     val base = spread(docs).select(id.as("doc_id"),
       array_distinct(shingles(text, n)).as("toks"))
@@ -523,10 +524,11 @@ object Dedup {
   def simhash(text: Column, bits: Int = 60): Column =
     graft.functions.VectorFunctions.simhash(split(text, " "), bits)
 
-  /** Builtin-expression simhash twin (60 folds over the token array) — kept
-    * for cross-checking the native expression bit-for-bit.
+  /** Builtin-expression simhash twin (60 folds over the token array).
+    * Package-private: a spec twin that cross-checks the native expression
+    * bit-for-bit.
     */
-  def simhashFold(text: Column, bits: Int = 60): Column = {
+  private[graft] def simhashFold(text: Column, bits: Int = 60): Column = {
     val toks = split(text, " ")
     val hashes = transform(toks, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
     val lanes = (0 until bits).map { b =>
@@ -634,7 +636,7 @@ object Dedup {
   // schedule. Layout: `bands/` (doc_id, band, bucket) + optional
   // `deletes/`, one claim.
 
-  private val MinhashTable = "bands"
+  private[graft] val MinhashTable = "bands"
 
   /** Build the persisted index: signature every doc once. */
   def buildMinhashIndex(docs: DataFrame, id: Column, text: Column,
@@ -665,10 +667,6 @@ object Dedup {
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     graft.store.VersionedDocTable.read(spark, path, MinhashTable)
-
-  def minhashIndexStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): graft.store.VersionedDocTable.Stats =
-    graft.store.VersionedDocTable.stats(spark, path, MinhashTable)
 
   /** Maintenance policy: the deleted-fraction estimate divides tombstones
     * by docs (each doc contributes exactly `bands` band rows — pass the
@@ -1176,17 +1174,5 @@ object Dedup {
       .join(index.select(col("chunk"), col("firstk").as("_ik")), Seq("chunk"), "left")
       .select(col("doc_id"), col("idx"), col("chunk"),
         (col("_k") === col("_bk") && col("_ik").isNull).as("kept"))
-  }
-
-  /** O(batch) index maintenance: append the batch's winning keys for chunks
-    * the index has never seen; existing index rows are never rewritten
-    * (their keys are smaller by the append-only precondition). append ≡
-    * rebuild is spec-pinned.
-    */
-  def appendChunkIndex(
-      index: DataFrame, batch: DataFrame, id: Column, text: Column,
-      k: Int = 8): DataFrame = {
-    val bwin = chunked(batch, id, text, k).groupBy("chunk").agg(min(col("_k")).as("firstk"))
-    index.unionByName(bwin.join(index.select("chunk"), Seq("chunk"), "left_anti"))
   }
 }

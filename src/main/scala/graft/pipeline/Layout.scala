@@ -89,16 +89,6 @@ object Layout {
       .saveAsTable(table) // managed: lives under spark.sql.warehouse.dir
   }
 
-  /** Hive-style partitioned write: one directory per distinct value of
-    * `partCol`. Predicates on the partition column then prune at PLANNING
-    * time (directories never listed into the scan — stronger than row-group
-    * stats, which still read every footer). The partition column should be
-    * low-cardinality (a date, a language); high-cardinality partitioning
-    * produces the small-file problem [[compact]] exists to fix.
-    */
-  def writePartitioned(df: DataFrame, dir: String, partCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-
   /** File-level min/max stats manifest — the DIY data-skipping index that
     * table formats (Iceberg/Delta) maintain natively. One distributed pass
     * computes per-file row counts and min/max of the named columns; persist
@@ -218,32 +208,15 @@ object Layout {
     base.filter(col(keyCol).isin(keys: _*))
   }
 
-  /** Two-dimensional pruned read: files must intersect BOTH ranges. Pairs
-    * with [[clusterByZ]] — Morton clustering keeps per-file envelopes tight
-    * on both dimensions, so a box predicate skips on either axis (a plain
-    * sort only ever serves its leading column).
-    */
-  def readPrunedBox(spark: org.apache.spark.sql.SparkSession, dir: String,
-      manifest: DataFrame, cx: String, xlo: Long, xhi: Long,
-      cy: String, ylo: Long, yhi: Long): DataFrame = {
-    val files = manifest
-      .filter(col(s"min_$cx") <= xhi && col(s"max_$cx") >= xlo &&
-        col(s"min_$cy") <= yhi && col(s"max_$cy") >= ylo)
-      .select("file").collect().map(_.getString(0))
-    val base =
-      if (files.isEmpty) spark.read.parquet(dir).filter(lit(false))
-      else spark.read.parquet(files.toIndexedSeq: _*)
-    base.filter(col(cx) >= xlo && col(cx) <= xhi &&
-      col(cy) >= ylo && col(cy) <= yhi)
-  }
-
   /** Idempotent partition backfill: dynamic partition overwrite replaces
     * ONLY the partition directories present in `batch`, leaving sibling
     * partitions untouched. This is what makes reprocessing safe at scale —
     * a failed-and-retried backfill of one day can neither duplicate that
     * day's rows (overwrite, not append) nor touch any other day. Same
     * idempotency contract as the streaming micro-batch writer
-    * (Rollup.writeMicroBatch), exposed for batch jobs.
+    * (Rollup.writeMicroBatch), exposed for batch jobs. Into a new `dir` it
+    * is the plain Hive-style partitioned write: predicates on the partition
+    * columns prune directories at planning time.
     */
   def overwritePartitions(batch: DataFrame, dir: String,
       partitionCols: Seq[String]): Unit =

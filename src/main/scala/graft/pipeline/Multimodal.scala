@@ -539,29 +539,6 @@ object Multimodal {
     }
   }
 
-  /** Feature-extraction stage: media bytes → embedding vector, per-partition
-    * (the shape of a real CLIP/MFCC encoder pass: model broadcast once, one
-    * iterator sweep, no shuffle). The encoder itself is STUBBED with a
-    * deterministic byte-histogram projection so the downstream contract —
-    * (doc_id, array<float>) flowing into Similarity/Dedup ANN operators —
-    * is real and testable without codec/model libs.
-    */
-  def extractEmbeddings(media: Dataset[MediaRow], dim: Int = 64): DataFrame = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { row =>
-        val v = new Array[Float](dim)
-        var i = 0
-        while (i < row.media.length) {
-          v(((row.media(i) & 0xff) * 31 + i) % dim) += 1.0f
-          i += 1
-        }
-        val norm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat max 1e-6f
-        (row.doc_id, v.map(_ / norm))
-      }
-    }.toDF("doc_id", "embedding")
-  }
-
   /** Resize planner: aspect-preserving target dimensions inside a
     * maxW × maxH box, never upscaling. PURE INTEGER arithmetic (the binding
     * side is decided by cross-multiplication, the scaled side by integer
@@ -613,7 +590,7 @@ object Multimodal {
   // the operator's schedule. Layout under the root: `hashes/` (doc_id,
   // ahash) plus an optional `deletes/` tombstone table, one claim.
 
-  private val PhashTable = "hashes"
+  private[graft] val PhashTable = "hashes"
 
   /** Build the index: decode every payload once, persist the 8-byte/doc
     * fingerprints as a fresh committed version.
@@ -633,7 +610,7 @@ object Multimodal {
 
   /** O(batch) DELETION maintenance: tombstones only — no payload is ever
     * re-decoded and the hash table is never rewritten; [[readPhashIndex]]
-    * applies the tombstones as one anti-join and [[compactPhashIndex]]
+    * applies the tombstones as one anti-join and [[phashMaintainIfNeeded]]
     * folds them on the operator's schedule.
     */
   def deleteFromPhashIndex(deletedDocs: DataFrame, id: Column,
@@ -645,30 +622,6 @@ object Multimodal {
     */
   def readPhashIndex(spark: SparkSession, path: String): DataFrame =
     graft.store.VersionedDocTable.read(spark, path, PhashTable)
-
-  /** Operational snapshot — O(files) footer/dir metadata, no Spark job;
-    * see [[graft.store.VersionedDocTable.stats]].
-    */
-  final case class PhashStats(docCount: Long, tombstoneCount: Long,
-      hashFiles: Int, deleteFiles: Int, version: Long) {
-    def deletedFraction: Double =
-      if (docCount <= 0) 0.0 else tombstoneCount.toDouble / docCount
-  }
-
-  def phashStats(spark: SparkSession, path: String): PhashStats = {
-    val s = graft.store.VersionedDocTable.stats(spark, path, PhashTable)
-    PhashStats(s.rowCount, s.tombstoneCount, s.dataFiles, s.deleteFiles,
-      s.version)
-  }
-
-  /** Rewrite the index minus its tombstones, coalesced back to
-    * `targetFiles` parts — a rebuild over the survivors WITHOUT decoding
-    * anything (16 bytes/row; raise `targetFiles` past ~10⁹ docs).
-    */
-  def compactPhashIndex(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit =
-    graft.store.VersionedDocTable.compact(spark, path, outPath, PhashTable,
-      targetFiles)
 
   /** The maintenance policy (deleted-fraction / file-count gates, enforced
     * converging knobs — see [[graft.store.VersionedDocTable.maintainIfNeeded]]):

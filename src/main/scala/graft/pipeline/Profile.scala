@@ -89,29 +89,4 @@ object Profile {
         graft.functions.KllFunctions.kllQuantile(col("_sk"), q))
     }.drop("_sk")
   }
-
-  /** One micro-batch of streaming KLL-summary maintenance: the batch's
-    * per-grain sketches land in their own `batch_id` partition — overwrite
-    * semantics make replayed batches idempotent (the Rollup.writeMicroBatch
-    * contract applied to quantiles). Readers (`kllQuantiles`) union-merge
-    * across batch partitions by construction.
-    */
-  def kllWriteMicroBatch(batch: DataFrame, dims: Seq[String], valueCol: String,
-      path: String, batchId: Long, k: Int = 200): Unit =
-    kllSummary(batch, dims, valueCol, k)
-      .write.mode("overwrite").parquet(s"$path/batch_id=$batchId")
-
-  /** Maintain the persisted quantile summary from a stream:
-    * foreachBatch → [[kllWriteMicroBatch]] — O(batch) maintenance, exactly-
-    * once effect under replays, raw rows never retained.
-    */
-  def kllMaintainFromStream(stream: DataFrame, dims: Seq[String],
-      valueCol: String, path: String, checkpoint: String,
-      k: Int = 200): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        kllWriteMicroBatch(batch, dims, valueCol, path, batchId, k)
-      }
-      .start()
 }

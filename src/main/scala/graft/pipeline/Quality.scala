@@ -28,9 +28,6 @@ object Quality {
   def minimum(c: String, atLeast: Double): Check =
     Check(s"min($c)", min(col(c)).cast("double"), _ >= atLeast)
 
-  def maximum(c: String, atMost: Double): Check =
-    Check(s"max($c)", max(col(c)).cast("double"), _ <= atMost)
-
   /** Metric = number of rows whose value is outside `allowed` (0 passes). */
   def acceptedValues(c: String, allowed: Seq[String]): Check =
     Check(s"accepted_values($c)",

@@ -79,49 +79,17 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
   // never the correctness mechanism.
 
   /** W7 DDL bootstrap — idempotent like the reference's CREATE IF NOT EXISTS
-    * (client.ts:481-543). Indexes are moot: parquet min/max stats + predicate
-    * pushdown (now plus bucket pruning) serve the same point lookups. Writes
-    * empty snapshot descriptors — no Spark job runs until the first row.
+    * (client.ts:481-543), with no in-place upgrade path: a store in an
+    * older layout is refused (see [[GraphStore.State.snapshotId]]). Indexes
+    * are moot: parquet min/max stats + predicate pushdown (now plus bucket
+    * pruning) serve the same point lookups. Writes empty snapshot
+    * descriptors for every table, the reverse-edge index `relations_rev`
+    * included, in ONE commit — no Spark job runs until the first row.
     */
   def initialize(): Unit = withWriteLock {
-    val s = state()
-    val missing = Tables.filter(s.snapshotId(_).isEmpty)
-    if (missing.nonEmpty) {
-      // a store whose relations table has never held a row is born with an
-      // in-sync (empty) reverse-edge index — set the `revsync` marker in
-      // the SAME bootstrap commit so fresh stores keep a single-version
-      // manifest history (time-travel consumers count store versions)
-      val marker =
-        if (s.snap("relations").isEmpty && !s.revsync) Map("revsync" -> "1")
-        else Map.empty[String, String]
-      commitBuckets(missing.map(t => t -> BucketWrite(Set.empty, null)).toMap,
-        extraManifest = marker)
-    }
-    ensureRevIndex() // no-op except when migrating a pre-rev-index store
-  }
-
-  /** Bring the TARGET-bucketed reverse-edge index (`relations_rev`) in sync
-    * with `relations`, once per store lifetime: a no-op when the manifest
-    * carries the `revsync` marker (every relations-writing commit maintains
-    * both tables from then on). A store written before the index existed is
-    * migrated here with ONE full re-bucketing commit of the relations
-    * content — the only O(table) pass the index ever costs; after it,
-    * `deleteEntity`'s in-edge discovery is a single pruned-file read
-    * instead of a full projected scan of relations.
-    */
-  def ensureRevIndex(): Unit = withWriteLock {
-    val s = state()
-    if (!s.revsync)
-      commitBuckets(Map("relations_rev" ->
-        // no relations row was ever committed: empty index is already in
-        // sync; else a full rebuild into the generation-0 grid, retiring
-        // any stale rev buckets — one atomic commit, after which the
-        // mirror is incremental
-        (if (s.live("relations").isEmpty) BucketWrite(Set.empty, null)
-        else BucketWrite((0 until s.buckets).map(Bucket(0, _)).toSet,
-          alignTo(RelationsSchema, readTable(s, "relations")),
-          retired = s.snap("relations_rev").keySet))),
-        extraManifest = Map("revsync" -> "1"))
+    val missing = Tables.filter(state().snapshotId(_).isEmpty)
+    if (missing.nonEmpty)
+      commitBuckets(missing.map(t => t -> BucketWrite(Set.empty, null)).toMap)
   }
 
   def entities: DataFrame = readTable(state(), "entities")
@@ -300,9 +268,8 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     *    hit-to-hit edges, parallel edges) appears exactly once.
     *
     * No read scans a whole table and nothing shuffles. The in-edge read
-    * needs the reverse index in sync, which `initialize()` guarantees; a
-    * store written before round 11 must be opened with `initialize()`
-    * once (it backfills `relations_rev`) before it serves reads.
+    * relies on the reverse index mirroring `relations`, which every
+    * relations-writing commit maintains.
     */
   private[graft] def graphResult(hits: DataFrame,
       s: State = state()): (Seq[Entity], Seq[Relation]) = {
@@ -396,7 +363,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       .toDF("entity_name", "content")
     val survivors = readTable(s, "observations", touchedO)
       .filter(!col("entity_name").isin(names: _*))
-    val base = nextIdBase(s, "observations")
+    val base = s.nextIdBase("observations")
     val fresh = newObs
       .withColumn("id", monotonically_increasing_id() + lit(base + 1))
       .withColumn("created_at", now)
@@ -467,7 +434,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     val updNames = cleaned.select(col("name").as("_upd_name"))
     val survivors = readTable(s, "observations", touchedO).join(updNames,
       col("entity_name") === col("_upd_name"), "left_anti")
-    val base = nextIdBase(s, "observations")
+    val base = s.nextIdBase("observations")
     val fresh = cleaned
       .select(col("name").as("entity_name"), explode(col("obs")).as("content"))
       .withColumn("id", monotonically_increasing_id() + lit(base + 1))
@@ -510,11 +477,10 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
         "Relation source/target/type cannot be empty")
       Relation(from, to, tpe)
     }
-    ensureRevIndex()
-    val s = state() // taken after ensureRevIndex, which may have committed
+    val s = state()
     val touched = cleaned.map(r => s.owner("relations", r.from)).toSet
     val touchedRev = cleaned.map(r => s.owner("relations_rev", r.to)).toSet
-    val base = nextIdBase(s, "relations")
+    val base = s.nextIdBase("relations")
     // the batch is materialized as LITERAL rows (ids and timestamp assigned
     // driver-side, bounded by the ≤100 cap): the forward and reverse-index
     // commits each run their own Spark job over this frame, and a
@@ -548,16 +514,15 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * TARGET-bucketed reverse-edge index (`relations_rev`, an exact mirror
     * of relations bucketed by `target`): in-edges of `name` all live in
     * rev-bucket(name), file-pruned by the `_FILESTATS` sidecar like a
-    * point lookup, so discovery reads O(1 file) instead of the pre-round-11
-    * full projected scan of relations. Symmetrically, the rev rows of
+    * point lookup, so discovery reads O(1 file) instead of a full
+    * projected scan of relations. Symmetrically, the rev rows of
     * `name`'s OUT-edges live in their targets' rev buckets, discovered
     * from fwd-bucket(name) (also one pruned read). Both discovery probes
     * collect only distinct bucket tokens (≤B rows), and the REWRITE stays
     * O(touched buckets) across both tables under the same manifest flip.
     */
   def deleteEntity(name: String): Unit = withWriteLock {
-    ensureRevIndex()
-    val s = state() // taken after ensureRevIndex, which may have committed
+    val s = state()
     val nbE = s.owner("entities", name)
     val nbO = s.owner("observations", name)
     val entBucket = readTable(s, "entities", Set(nbE))
@@ -592,10 +557,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * The probe and the rewrite both touch only bucket(from).
     */
   def deleteRelation(from: String, to: String, relationType: String): Unit = withWriteLock {
-    ensureRevIndex()
     val cond = col("source") === from && col("target") === to &&
       col("relation_type") === relationType
-    val s = state() // taken after ensureRevIndex, which may have committed
+    val s = state()
     val b = Set(s.owner("relations", from))
     val bRev = Set(s.owner("relations_rev", to))
     val bucket = readTable(s, "relations", b)
@@ -819,8 +783,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * vacuum removes.
     */
   private def commitBuckets(updates: Map[String, BucketWrite],
-      maxIds: Map[String, Long] = Map.empty,
-      extraManifest: Map[String, String] = Map.empty): Unit = {
+      maxIds: Map[String, Long] = Map.empty): Unit = {
     val tx = perRoot.tx.get
     require(tx != null, "commit outside a withWriteLock transaction")
     val manifest = tx.state.manifest
@@ -919,7 +882,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       Files.delete(snapTmp)
       t -> s"s$snapId"
     }
-    val merged = manifest ++ staged ++ extraManifest ++
+    val merged = manifest ++ staged ++
       maxIds.map { case (t, v) => s"maxid.$t" -> v.toString } +
       ("nbuckets" -> manifest.getOrElse("nbuckets", numBuckets.toString))
     val body = merged.toSeq.sorted.map { case (k, v) => s"$k=$v" }
@@ -950,7 +913,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     Files.move(pub, manifestFile, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
     // advance the pin: a later commit in this same transaction (e.g. the
-    // rev-index backfill before a delete) chains onto this one
+    // next split of advanceGeneration) chains onto this one
     perRoot.tx.set(Tx(target, new State(merged, numBuckets, readSnapshot, root)))
   }
 
@@ -1129,9 +1092,10 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
   }
 
   /** Buckets present in `table`'s current snapshot, (gen, id)-ordered —
-    * the candidates for [[splitBucket]] (an operator splits the largest).
+    * the candidates for [[splitBucket]]. Package-private: spec scaffolding;
+    * operators size buckets through [[bucketBytes]].
     */
-  def liveBuckets(table: String): Seq[Bucket] =
+  private[graft] def liveBuckets(table: String): Seq[Bucket] =
     state().snap(table).keySet.toSeq.sortBy(b => (b.gen, b.id))
 
   /** Progressive re-bucketing (extendible hashing step): split `bucket`
@@ -1357,25 +1321,11 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     f.delete()
   }
 
-  /** Next-id base: read the id high-water mark from the manifest (written by
-    * every id-allocating commit below) instead of full-scanning the table —
-    * the round-1 write path ran a per-write O(table) max(id) job, a scan
-    * that at 100 TB dwarfs the write itself. One-scan fallback migrates
-    * stores created before maxid tracking (persisted on their next commit).
-    * Deletes never lower the mark — it is a monotone upper bound, which is
-    * all id-uniqueness needs.
-    */
-  private def nextIdBase(s: State, t: String): Long =
-    s.maxId(t).getOrElse(maxId(readTable(s, t)))
-
   /** Max id in a batch-sized DataFrame (the id-carrying `fresh` rows), or
     * `fallback` when the batch is empty — O(batch), never O(table).
     */
   private def maxIdOf(df: DataFrame, fallback: Long): Long =
     df.agg(coalesce(max("id"), lit(fallback))).head().getLong(0)
-
-  private def maxId(df: DataFrame): Long =
-    df.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
 
   /** Codepoint-counting truncation, matching `TextFns.truncate` (SURVEY §2.3
     * S2 pins codepoints over the reference's UTF-16 slice).
@@ -1444,14 +1394,16 @@ object GraphStore {
     * `pmod(xxhash64(key), B)` (same XxHash64, seed 42, matching
     * `functions.xxhash64`; same pmod semantics for negative hashes).
     * GraphStoreSpec pins driver ≡ in-plan over unicode names.
+    * Package-private: spec scaffolding; the store routes keys through
+    * [[State.owner]].
     */
-  def bucketFor(name: String, buckets: Int): Int = {
+  private[graft] def bucketFor(name: String, buckets: Int): Int = {
     val h = rawHash(name)
     (((h % buckets) + buckets) % buckets).toInt
   }
 
   /** One parsed `_MANIFEST` (empty: a store not yet initialized): the
-    * per-table snapshot ids, `nbuckets`, `maxid.*` and `revsync`, plus each
+    * per-table snapshot ids, `nbuckets` and `maxid.*`, plus each
     * table's current snapshot descriptor, read through `readDesc` at most
     * once and only when first asked for. Descriptors and bucket dirs are
     * immutable, so everything one State resolves belongs to one commit.
@@ -1464,14 +1416,27 @@ object GraphStore {
       * would require rehashing every row).
       */
     val buckets: Int = manifest.get("nbuckets").map(_.toInt).getOrElse(defaultBuckets)
-    def revsync: Boolean = manifest.contains("revsync")
-    def maxId(t: String): Option[Long] = manifest.get(s"maxid.$t").map(_.toLong)
 
-    def snapshotId(t: String): Option[Long] = manifest.get(t).map { v =>
-      require(v.startsWith("s"),
-        s"Store at $root uses the pre-bucketed (round ≤7) layout; " +
+    /** Next-id base: the id high-water mark from the manifest, never a
+      * table read. Every id-allocating commit writes `maxid.<table>` and
+      * every commit carries the manifest forward, so a table without a mark
+      * has never held a row and its base is 0. Deletes never lower the mark
+      * — it is a monotone upper bound, which is all id-uniqueness needs.
+      */
+    def nextIdBase(t: String): Long = manifest.get(s"maxid.$t").fold(0L)(_.toLong)
+
+    def snapshotId(t: String): Option[Long] = {
+      // every relations-writing commit writes `relations_rev` with it, so a
+      // relations snapshot without one is a store from before the index
+      require(!manifest.contains("relations") || manifest.contains("relations_rev"),
+        s"Store at $root predates the reverse-edge index (rounds 8–10); " +
           "rebuild it — in-place migration is not implemented")
-      v.drop(1).toLong
+      manifest.get(t).map { v =>
+        require(v.startsWith("s"),
+          s"Store at $root uses the pre-bucketed (round ≤7) layout; " +
+            "rebuild it — in-place migration is not implemented")
+        v.drop(1).toLong
+      }
     }
 
     private val descs = scala.collection.mutable.Map.empty[String, Map[Bucket, Long]]
@@ -1532,7 +1497,7 @@ object GraphStore {
   /** A write transaction, per thread and store root: the manifest-history
     * id its reads are based on and the [[State]] pinned from that manifest.
     * Advanced after each commit so a multi-commit transaction (e.g.
-    * ensureRevIndex + the mutation) chains.
+    * advanceGeneration's splits) chains.
     */
   private final case class Tx(base: Long, state: State)
 

@@ -172,34 +172,6 @@ object EventOps {
       .select(col("window_start"), col("e.probe_key"), col("e.cms_est"))
   }
 
-  /** Streaming quantile monitor: per-(window, group) KLL sketches of a
-    * value column, finalized to quantile estimates — latency/size
-    * percentile dashboards over an event stream without retaining raw
-    * rows. The sketch aggregate (KllSketchAgg) is an ordinary Catalyst
-    * aggregate, so under `readStream` + watermark it lives in the state
-    * store and each finalized window reports once (append mode); the SAME
-    * code path serves batch. Estimates are sketch/merge-order specific —
-    * stream and batch agree within the rank-error band (spec), not by
-    * hash.
-    */
-  def quantilesByWindow(
-      events: DataFrame,
-      group: Column,
-      value: Column,
-      every: String = "1 day",
-      qs: Seq[Double] = Seq(0.5, 0.95)): DataFrame = {
-    val sk = graft.functions.KllFunctions.kllSketch(value.cast("double")).as("_sk")
-    val agged = events
-      .groupBy(window(col("ts"), every).as("w"), group.as("g"))
-      .agg(sk, count(lit(1)).as("n_rows"))
-    qs.foldLeft(agged) { (d, q) =>
-        d.withColumn(s"p${math.round(q * 100)}",
-          graft.functions.KllFunctions.kllQuantile(col("_sk"), q))
-      }
-      .select(col("w.start").as("window_start") +: col("g") +: col("n_rows") +:
-        qs.map(q => col(s"p${math.round(q * 100)}")): _*)
-  }
-
   /** Batch sessionization — gaps-and-islands with a window function: a new
     * session starts when the gap to the previous event of the same user
     * exceeds `gapMinutes`. Total-ordered by (user, ts, event_id) so results

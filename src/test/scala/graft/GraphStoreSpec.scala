@@ -1029,41 +1029,65 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
       "repairManifest must publish the durable-but-unflipped commit")
   }
 
-  test("pre-round-11 store migrates: rev index backfilled once, then maintained incrementally") {
+  test("pre-rev-index store is refused (rebuild it); a stale revsync line is ignored") {
     val st = freshStore()
     seed(st)
     st.createRelations(Seq(
       Relation("Alice", "Bob", "knows"),
       Relation("Bob", "Acme Corp", "works_at")))
-    // simulate a store written before the rev index existed: drop the rev
-    // table dir, its snapshots, and the revsync marker from the manifest
+    // a current store still carrying the retired `revsync=1` marker line
+    // opens and serves unchanged
     val root = st.root
+    val manifest = java.nio.file.Paths.get(root, "_MANIFEST")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    def lines(p: java.nio.file.Path) = new String(Files.readAllBytes(p), utf8).split("\n").toSeq
+    def rewrite(p: java.nio.file.Path)(f: Seq[String] => Seq[String]): Unit =
+      Files.write(p, f(lines(p)).mkString("\n").getBytes(utf8)): Unit
+    def manifests() = manifest +: Option(new java.io.File(s"$root/_manifests").listFiles())
+      .getOrElse(Array.empty).filter(_.getName.matches("m\\d+")).map(_.toPath).toSeq
+    manifests().foreach(rewrite(_)(ls => (ls :+ "revsync=1").distinct.sorted))
+    val marked = new GraphStore(spark, root)
+    marked.initialize()
+    assert(marked.getEntity("Alice") == Entity("Alice", "person", Seq("software engineer")))
+    assert(marked.readGraph()._2.toSet == Set(
+      Relation("Alice", "Bob", "knows"), Relation("Bob", "Acme Corp", "works_at")))
+    assertRevMirror(marked)
+    // simulate a store written before the rev index existed: drop the rev
+    // table dir, its snapshots, and the marker from _MANIFEST AND every
+    // history manifest — a genuinely old store has them nowhere (stripping
+    // only _MANIFEST would be undone by repairManifest, which flips the
+    // pointer to the history head)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
       f.delete()
     }
     rm(new java.io.File(s"$root/relations_rev"))
-    // strip the marker from _MANIFEST AND every history manifest — a
-    // genuinely old store has it nowhere (stripping only _MANIFEST would be
-    // undone by repairManifest, which flips the pointer to the history head)
-    def strip(p: java.nio.file.Path): Unit = {
-      val s = new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").filterNot(l => l.startsWith("revsync") || l.startsWith("relations_rev"))
-        .mkString("\n")
-      Files.write(p, s.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-    }
-    strip(java.nio.file.Paths.get(root, "_MANIFEST"))
-    Option(new java.io.File(s"$root/_manifests").listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("m\\d+")).foreach(f => strip(f.toPath))
-    val st2 = new GraphStore(spark, root)
-    st2.initialize() // idempotent; triggers the one-time backfill
-    assertRevMirror(st2)
-    // incremental from here: writes maintain the index, deletes use it
-    st2.createRelations(Seq(Relation("Acme Corp", "Alice", "employs")))
-    assertRevMirror(st2)
-    st2.deleteEntity("Bob")
-    assert(st2.relations.count() == 1)
-    assertRevMirror(st2)
+    manifests().foreach(rewrite(_)(_.filterNot(l =>
+      l.startsWith("revsync") || l.startsWith("relations_rev"))))
+    val old = new GraphStore(spark, root)
+    val onInit = intercept[IllegalArgumentException](old.initialize())
+    assert(onInit.getMessage.contains("rebuild"), onInit.getMessage)
+    val onRead = intercept[IllegalArgumentException](old.getEntity("Alice"))
+    assert(onRead.getMessage.contains("rebuild"), onRead.getMessage)
+    // refusing writes nothing: the store is left as it was found
+    assert(!new java.io.File(s"$root/relations_rev").exists())
+  }
+
+  test("first createEntities and createRelations on a fresh store: pinned job counts") {
+    // a table without an id mark has never held a row: its id base is 0,
+    // read from the manifest — no max(id) job over the empty table
+    val st = freshStore()
+    val (_, entityJobs) = jobsDuring(seed(st))
+    assert(entityJobs == 11, s"first createEntities ran $entityJobs jobs")
+    val (_, relationJobs) = jobsDuring(st.createRelations(Seq(
+      Relation("Alice", "Bob", "knows"),
+      Relation("Bob", "Acme Corp", "works_at"))))
+    assert(relationJobs == 6, s"first createRelations ran $relationJobs jobs")
+    val obsIds = st.observations.select("id").collect().map(_.getLong(0)).toSeq
+    assert(obsIds.size == 3 && obsIds.distinct.size == 3 && obsIds.forall(_ >= 1L))
+    assert(st.relations.orderBy("id").select("id").collect().map(_.getLong(0)).toSeq ==
+      Seq(1L, 2L))
+    assertRevMirror(st)
   }
 
   test("serve reads run one Spark job each: getEntity hit and miss, readGraph's hydration, a search hit set's hydration") {

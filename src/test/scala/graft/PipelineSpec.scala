@@ -961,7 +961,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("minhash index lifecycle: tombstone delete never re-signatures; maintain heals in place and resets") {
-    import graft.store.VersionedDir
+    import graft.store.{VersionedDir, VersionedDocTable}
     def doc(i: Long): String = {
       val base = if (i % 10 == 7) i - 1 else i // planted dup every 10th
       (0 until 6).map(j => s"t${base * 31 + j}").mkString(" ")
@@ -993,12 +993,13 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val surviving = planted.filter(p => p._1 % 4 != 1 && p._2 % 4 != 1)
     assert(pairs() == surviving)
     // 25% tombstoned (rowsPerKey = 4 bands) => due; heals in place; resets
-    val st = Dedup.minhashIndexStats(spark, dir)
+    def stats() = VersionedDocTable.stats(spark, dir, Dedup.MinhashTable)
+    val st = stats()
     assert(st.rowCount == 240 && st.tombstoneCount == 15)
     assert(st.deletedFraction(4) > 0.2)
     assert(Dedup.minhashMaintainIfNeeded(spark, dir, bands = 4))
     assert(!Dedup.minhashMaintainIfNeeded(spark, dir, bands = 4))
-    val healed = Dedup.minhashIndexStats(spark, dir)
+    val healed = stats()
     assert(healed.tombstoneCount == 0 && healed.rowCount == 45 * 4)
     assert(healed.dataFiles <= 8, s"compact left ${healed.dataFiles} files")
     assert(pairs() == surviving, "compact changed the surviving pairs")
@@ -1234,21 +1235,6 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(approx.getLong(1) == 37 || math.abs(approx.getLong(1) - 37) <= 2)
   }
 
-  test("multimodal embeddings flow into ANN: identical media are nearest neighbors") {
-    val docs = Seq(
-      (0L, "the same payload bytes"),
-      (1L, "the same payload bytes"),
-      (2L, "completely different content here")).toDF("doc_id", "text")
-    val emb = Multimodal.extractEmbeddings(
-      Multimodal.withMediaColumn(docs, "doc_id", "text").as[MediaRow])
-    assert(emb.columns.toSeq == Seq("doc_id", "embedding"))
-    val top1 = Similarity.bruteForceTopK(
-      emb.filter(col("doc_id") === 0), emb,
-      col("doc_id"), col("embedding"), col("doc_id"), col("embedding"), k = 1)
-      .head()
-    assert(top1.getLong(1) == 1L) // the byte-identical doc is the 1-NN
-  }
-
   test("multimodal: decode stub emits typed metadata per row, deterministic") {
     val docs = Seq((0L, "hello spark"), (1L, "binary payload here"), (2L, "video doc"))
       .toDF("doc_id", "text")
@@ -1350,7 +1336,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("multimodal: phash index lifecycle — build/append/delete/compact under the CAS, decode paid once") {
-    import graft.store.VersionedDir
+    import graft.store.{VersionedDir, VersionedDocTable}
     def media(ids: Seq[Long]) =
       ids.map(i => MediaRow(i, Multimodal.synthesizePng(i), "image")).toDS()
     val root = java.nio.file.Files.createTempDirectory("phash_idx")
@@ -1380,23 +1366,24 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val survivors = full.filterNot(_._1 % 4 == 1)
     assert(read() == survivors)
     // stats sees the drift; maintain folds it in place and resets
-    val st = Multimodal.phashStats(spark, root)
-    assert(st.docCount == 60 && st.tombstoneCount == 15)
-    assert(st.deletedFraction > 0.2)
+    def stats() = VersionedDocTable.stats(spark, root, Multimodal.PhashTable)
+    val st = stats()
+    assert(st.rowCount == 60 && st.tombstoneCount == 15)
+    assert(st.deletedFraction() > 0.2)
     assert(Multimodal.phashMaintainIfNeeded(spark, root))
     assert(!Multimodal.phashMaintainIfNeeded(spark, root))
-    val healed = Multimodal.phashStats(spark, root)
-    assert(healed.tombstoneCount == 0 && healed.docCount == 45)
-    assert(healed.hashFiles <= 8, s"compact left ${healed.hashFiles} files")
+    val healed = stats()
+    assert(healed.tombstoneCount == 0 && healed.rowCount == 45)
+    assert(healed.dataFiles <= 8, s"compact left ${healed.dataFiles} files")
     assert(read() == survivors, "compact changed the surviving rows")
     // file-count trigger: enough appends re-arm the gate
     (0 until 4).foreach(b =>
       Multimodal.appendToPhashIndex(media(100L + b until 101L + b), root))
-    val grown = Multimodal.phashStats(spark, root)
+    val grown = stats()
     assert(Multimodal.phashMaintainIfNeeded(spark, root,
-      maxHashFiles = grown.hashFiles - 1, targetFiles = 1))
+      maxHashFiles = grown.dataFiles - 1, targetFiles = 1))
     assert(!Multimodal.phashMaintainIfNeeded(spark, root,
-      maxHashFiles = grown.hashFiles - 1, targetFiles = 1))
+      maxHashFiles = grown.dataFiles - 1, targetFiles = 1))
     // converging knobs are enforced, not documented-only
     intercept[IllegalArgumentException] {
       Multimodal.phashMaintainIfNeeded(spark, root,
@@ -1559,7 +1546,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       (3L, 0L, "e", false)))
   }
 
-  test("incrementalChunkDedup ≡ from-scratch on the batch slice; append ≡ rebuild") {
+  test("incrementalChunkDedup ≡ from-scratch on the batch slice") {
     val corpus = Seq((1L, "a b c d e"), (2L, "c d x y")).toDF("doc_id", "text")
     val batch = Seq(
       (10L, "a b f g"),      // "a b" loses to index, "f g" wins
@@ -1575,11 +1562,5 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(inc == scratch)
     assert(inc.map(r => (r._3, r._4)).toSet ==
       Set(("a b", false), ("f g", true), ("f g", false), ("e", false)))
-    // index maintenance: O(batch) append equals a from-scratch rebuild
-    val appended = Dedup.appendChunkIndex(idx, batch, col("doc_id"), col("text"), k = 2)
-      .orderBy("chunk").as[(String, Long)].collect().toSeq
-    val rebuilt = Dedup.chunkIndex(corpus.union(batch), col("doc_id"), col("text"), k = 2)
-      .orderBy("chunk").as[(String, Long)].collect().toSeq
-    assert(appended == rebuilt)
   }
 }

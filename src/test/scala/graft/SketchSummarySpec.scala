@@ -113,28 +113,6 @@ class SketchSummarySpec extends AnyFunSuite with SparkTestBase {
     assert(approx == exact)
   }
 
-  test("streaming KLL maintenance: maintained summary ≈ direct, replays don't double-count") {
-    val tmp = Files.createTempDirectory("stream-kll").toString
-    val srcDir = s"$tmp/src"
-    val base = (0 until 10000).map(i => (i % 4, i.toDouble)).toDF("g", "v")
-    base.write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
-    val q = Profile.kllMaintainFromStream(stream, Seq("g"), "v", s"$tmp/kll", s"$tmp/ckpt")
-    q.processAllAvailable()
-    q.stop()
-    val want = Profile.kllQuantiles(
-      spark.read.parquet(s"$tmp/kll"), Seq.empty, "v", Seq(0.5))
-      .select("p50").as[Double].head()
-    assert(math.abs(want - 5000.0) < 500, s"maintained p50 $want")
-    // replaying batch 0 must overwrite its partition, not append a duplicate
-    Profile.kllWriteMicroBatch(spark.read.parquet(srcDir), Seq("g"), "v",
-      s"$tmp/kll", batchId = 0L)
-    val after = Profile.kllQuantiles(
-      spark.read.parquet(s"$tmp/kll"), Seq.empty, "v", Seq(0.5))
-      .select("p50").as[Double].head()
-    assert(math.abs(after - 5000.0) < 500, s"replayed p50 $after")
-  }
-
   test("KLL summary: quantile estimates land within the rank-error band of exact") {
     // 10k uniform values: value ≈ rank, so a ±ε rank error is a ±ε·10000
     // value error; k=200's 99%-confidence band is ~1.65% — assert a loose 5%

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Skew
@@ -13,17 +12,6 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
   // one hot key with 10k values, a handful of cold keys
   private lazy val skewed = ((1 to 10000).map(i => ("hot", s"v$i")) ++
     (1 to 5).map(i => (s"cold$i", s"w$i"))).toDF("k", "v")
-
-  test("saltedCollectSet equals the unsalted aggregation") {
-    val salted = Skew.saltedCollectSet(skewed, $"k", $"v", salts = 16)
-      .orderBy("key").collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1))
-    val plain = skewed.groupBy($"k".as("key"))
-      .agg(array_sort(collect_set($"v")).as("values"))
-      .orderBy("key").collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1))
-    assert(salted.toSeq == plain.toSeq)
-  }
 
   test("saltedJoin equals the plain join, multiplicity preserved") {
     val dim = Seq(("hot", 1), ("cold1", 2), ("cold1", 3)).toDF("dk", "attr")

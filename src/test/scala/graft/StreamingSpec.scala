@@ -339,27 +339,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("streaming windowed KLL quantiles match batch within the rank-error band") {
-    val streamed = runStream(
-      df => EventOps.quantilesByWindow(
-        EventOps.withWatermarkIfStreaming(df, "ts", "0 seconds"),
-        $"event_type", $"value", "1 hour"),
-      "kll_out")
-      .filter($"window_start" < ts("2024-06-01 00:00:00")) // drop the flush window
-      .orderBy("window_start", "g")
-      .select("window_start", "g", "n_rows", "p50")
-      .as[(Timestamp, String, Long, Double)].collect().toSeq
-    val batch = EventOps.quantilesByWindow(evs.toDF(), $"event_type", $"value", "1 hour")
-      .orderBy("window_start", "g")
-      .select("window_start", "g", "n_rows", "p50")
-      .as[(Timestamp, String, Long, Double)].collect().toSeq
-    // identical grouping/counts; estimates agree within the band (tiny
-    // groups here, so KLL is exact — but pin only the contract: ±1 value)
-    assert(streamed.map(r => (r._1, r._2, r._3)) == batch.map(r => (r._1, r._2, r._3)))
-    assert(streamed.nonEmpty &&
-      streamed.zip(batch).forall { case (s, b) => math.abs(s._4 - b._4) <= 1.0 })
-  }
-
   test("streaming session_window equals batch gaps-and-islands sessionization") {
     val streamed = runStream(
       df => EventOps.sessionWindowStreaming(
