@@ -1090,6 +1090,39 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     assertRevMirror(st)
   }
 
+  test("serve writes run at their job floor on a warm 16-bucket store: createEntities, createRelations, deleteEntity, deleteRelation") {
+    val st = freshStore()
+    def b(n: String) = GraphStore.bucketFor(n, 16)
+    // one name per bucket, so every role below sits in its own bucket
+    val spread = (1 to 40).map(i => f"w$i%02d").groupBy(b).values.map(_.min).toSeq.sorted
+    assert(spread.size >= 10)
+    st.createEntities(spread.map(n => Entity(n, "t", Seq(s"about $n"))))
+    val hub = spread.head
+    st.createRelations(Seq(
+      Relation(spread(1), hub, "in"), Relation(spread(2), hub, "in"),
+      Relation(hub, spread(3), "out"), Relation(hub, spread(4), "out"),
+      Relation(spread(5), spread(6), "side"), Relation(spread(5), spread(6), "kept")))
+    // an update plus two inserts over at least two buckets
+    val batch = Seq(Entity(spread(7), "t2", Seq("p", "q")),
+      Entity("new-a", "t", Seq("r")), Entity("new-b", "t", Seq("s")))
+    assert(batch.map(e => b(e.name)).distinct.size >= 2)
+    val (_, createEntities) = jobsDuring(st.createEntities(batch))
+    val rels = Seq(Relation("new-a", spread(8), "knows"), Relation(spread(9), "new-b", "knows"))
+    assert(rels.map(r => b(r.from)).distinct.size == 2 && rels.map(r => b(r.to)).distinct.size == 2)
+    val (_, createRelations) = jobsDuring(st.createRelations(rels))
+    // the hub's in-edge sources and out-edge targets live in other buckets:
+    // the cascade rewrites three relations and three rev buckets
+    val (_, deleteEntity) = jobsDuring(st.deleteEntity(hub))
+    val (_, deleteRelation) = jobsDuring(st.deleteRelation(spread(5), spread(6), "side"))
+    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((11, 6, 15, 6)))
+    assert(st.getEntity(spread(7)) == Entity(spread(7), "t2", Seq("p", "q")))
+    assert(st.getEntity("new-b") == Entity("new-b", "t", Seq("s")))
+    intercept[NoSuchElementException](st.getEntity(hub))
+    assert(st.relations.collect().map(r => (r.getString(1), r.getString(2), r.getString(3))).toSet ==
+      Set((spread(5), spread(6), "kept"), ("new-a", spread(8), "knows"), (spread(9), "new-b", "knows")))
+    assertRevMirror(st)
+  }
+
   test("serve reads run one Spark job each: getEntity hit and miss, readGraph's hydration, a search hit set's hydration") {
     import spark.implicits._
     // one bucket: every name shares the bucket, so a miss that sorts
