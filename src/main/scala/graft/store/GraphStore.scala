@@ -769,20 +769,26 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * `touched` is empty — the initialize path), and buckets REMOVED from
     * the snapshot (a split retires the parent its children replace).
     */
-  private case class BucketWrite(touched: Set[Bucket], content: DataFrame,
+  private[graft] case class BucketWrite(touched: Set[Bucket], content: DataFrame,
       retired: Set[Bucket] = Set.empty)
 
   /** Stage new versions for every touched bucket of every table in
-    * `updates` over the transaction's pinned [[State]] (per table a
-    * range-partitioning sample job plus the write job: repartition by
-    * bucket id and key range, write with `partitionBy`, move each staged
-    * partition dir into place), stage each table's new snapshot
-    * descriptor, then atomically flip the manifest (write temp +
-    * ATOMIC_MOVE). Readers see the whole old or whole new snapshot, never a
-    * mix; a crash mid-stage leaves only orphan dirs/descriptors the next
-    * vacuum removes.
+    * `updates` over the transaction's pinned [[State]] (per table: route
+    * each row to its bucket's partition, sort by key, write with
+    * `partitionBy`, move each staged partition dir into place), stage each
+    * table's new snapshot descriptor, then atomically flip the manifest
+    * (write temp + ATOMIC_MOVE). Readers see the whole old or whole new
+    * snapshot, never a mix; a crash mid-stage leaves only orphan
+    * dirs/descriptors the next vacuum removes.
+    *
+    * Spark jobs per table, beyond those of `content`'s own plan: one write
+    * job for a one-bucket commit at `filesPerBucket = 1` (no shuffle); a
+    * shuffle-map job plus the write for several buckets at
+    * `filesPerBucket = 1` (partition by bucket index, no sample); and a
+    * range-partitioning sample job, the shuffle and the write at
+    * `filesPerBucket > 1`.
     */
-  private def commitBuckets(updates: Map[String, BucketWrite],
+  private[graft] def commitBuckets(updates: Map[String, BucketWrite],
       maxIds: Map[String, Long] = Map.empty): Unit = {
     val tx = perRoot.tx.get
     require(tx != null, "commit outside a withWriteLock transaction")
@@ -801,19 +807,29 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
           val bucketed = content.withColumn("_bucket",
             tx.state.tokenCol(effective, col(key)))
           // Every bucket version is written SORTED BY ITS BUCKET KEY, split
-          // into ~filesPerBucket files of DISJOINT key ranges: range-
-          // partition on (bucket, key) — explicit partition count, so AQE
-          // cannot coalesce the cells back into one task — then sort within
-          // partitions. Disjoint sorted files are what makes the per-file
-          // min/max sidecar written below prune a point lookup to ONE file
-          // (and parquet row-group stats prune within it): at B in the
-          // thousands a bucket is still tens of GB — a lookup must not read
-          // it all. (The pre-round-10 split was pmod(xxhash64(key)): file
-          // ranges fully overlapped, so footer stats could prune nothing.)
-          val split = bucketed
-            .repartitionByRange(math.max(filesPerBucket * touched.size, 1),
+          // into ~filesPerBucket files of DISJOINT key ranges, then sorted
+          // within partitions. Disjoint sorted files are what makes the
+          // per-file min/max sidecar written below prune a point lookup to
+          // ONE file (and parquet row-group stats prune within it): at B in
+          // the thousands a bucket is still tens of GB — a lookup must not
+          // read it all. Partitioning follows the target layout, with an
+          // explicit partition count so AQE cannot coalesce buckets back
+          // into one task:
+          //  - one file in all: no shuffle, one task writes it;
+          //  - one file per bucket: each row goes to the partition of its
+          //    bucket's index in the sorted touched list (no sample, no
+          //    hash collisions — hash partitioning on `_bucket` would put
+          //    two buckets in one task and write two files per task);
+          //  - several files per bucket: range-partition on (bucket, key),
+          //    the one layout that needs key bounds (a sampling job).
+          val tokens = touched.toSeq.sortBy(b => (b.gen, b.id)).map(_.token)
+          val parts =
+            if (filesPerBucket * tokens.size == 1) bucketed.coalesce(1)
+            else if (filesPerBucket == 1) bucketed.repartitionById(tokens.size,
+              array_position(lit(tokens.toArray), col("_bucket")).cast("int") - 1)
+            else bucketed.repartitionByRange(filesPerBucket * tokens.size,
               col("_bucket"), col(key))
-            .sortWithinPartitions(col("_bucket"), col(key))
+          val split = parts.sortWithinPartitions(col("_bucket"), col(key))
           split.write.partitionBy("_bucket").parquet(stage.toString)
           // a row whose bucket is outside `touched` would be silently
           // dropped by the move below — make a caller bug loud instead

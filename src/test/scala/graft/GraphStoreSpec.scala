@@ -530,6 +530,81 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(new GraphStore(spark, dir).entities.count() == 200)
   }
 
+  /** Every bucket version `table` gained between committed snapshots
+    * `from` and `to` holds exactly one parquet file, sorted by the bucket
+    * key `key` and named by the version's one `_FILESTATS` line, and a
+    * point lookup of each of its keys prunes to that file. Returns how many
+    * versions it checked.
+    */
+  private def assertOneSortedFilePerVersion(st: GraphStore, table: String, key: String,
+      from: Long, to: Long): Int = {
+    val (_, newDirs) = st.changedBucketDirs(table, from, to)
+    newDirs.foreach { dir =>
+      val files = dir.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"$dir holds ${files.length} parquet files")
+      val file = files.head.toPath
+      val keys = spark.read.parquet(file.toString).select(key).collect().map(_.getString(0)).toSeq
+      assert(keys.nonEmpty && keys == keys.sorted(GraphStore.CodepointOrdering),
+        s"$dir is not sorted by $key: $keys")
+      val stats = new String(Files.readAllBytes(dir.resolve("_FILESTATS")), "UTF-8").split("\n").toSeq
+      val line = stats.head.split("\t")
+      assert(stats.size == 1 && line(0) == file.getFileName.toString && line(1) != "-",
+        s"$dir sidecar: $stats")
+      keys.distinct.foreach(k => assert(st.filesForKeys(table, Seq(k)) == Seq(file), s"$table lookup of $k"))
+    }
+    newDirs.size
+  }
+
+  test("filesPerBucket = 1 writes one key-sorted file per new bucket version: a multi-bucket commit, a split's children, a one-bucket deleteRelation") {
+    import spark.implicits._
+    def last(st: GraphStore, t: String) = st.tableVersions(t).last
+    // a commit over at least three buckets of both tables
+    val st = freshStore()
+    val (e0, o0) = (last(st, "entities"), last(st, "observations"))
+    val names = (1 to 12).map(i => s"m$i")
+    st.createEntities(names.map(n => Entity(n, "t", Seq(s"$n one", s"$n two"))))
+    assert(assertOneSortedFilePerVersion(st, "entities", "name", e0, last(st, "entities")) >= 3)
+    assert(assertOneSortedFilePerVersion(st, "observations", "entity_name", o0,
+      last(st, "observations")) >= 3)
+
+    // splitBucket's two children
+    val sp = new GraphStore(spark, Files.createTempDirectory("graft-store-").toString, numBuckets = 4)
+    sp.initialize()
+    sp.upsertEntitiesDf((1 to 120).map(i => (s"n#$i", "t", Seq(s"o-$i")))
+      .toDF("name", "entity_type", "observations"))
+    val before = last(sp, "entities")
+    sp.splitBucket("entities", sp.liveBuckets("entities").head)
+    assert(assertOneSortedFilePerVersion(sp, "entities", "name", before, last(sp, "entities")) == 2)
+
+    // a one-bucket deleteRelation that leaves an edge in both buckets
+    st.createRelations(Seq(Relation("m1", "m2", "a"), Relation("m1", "m2", "b"),
+      Relation("m1", "m3", "c")))
+    val (r0, rr0) = (last(st, "relations"), last(st, "relations_rev"))
+    st.deleteRelation("m1", "m2", "a")
+    assert(assertOneSortedFilePerVersion(st, "relations", "source", r0, last(st, "relations")) == 1)
+    assert(assertOneSortedFilePerVersion(st, "relations_rev", "target", rr0,
+      last(st, "relations_rev")) == 1)
+    assertRevMirror(st)
+  }
+
+  test("a commit whose content holds a row of an untouched bucket fails loudly and commits nothing") {
+    import spark.implicits._
+    val st = freshStore()
+    def b(n: String) = GraphStore.Bucket(0, GraphStore.bucketFor(n, 16))
+    val names = (1 to 40).map(i => s"s$i").groupBy(b).values.map(_.min).toSeq.sorted.take(3)
+    st.createEntities(names.map(n => Entity(n, "t", Seq("o"))))
+    val before = st.tableVersions("entities").last
+    val rows = names.map(n => (n, "t", new java.sql.Timestamp(0L))).toDF("name", "entity_type", "created_at")
+    // one touched bucket (one task, no shuffle) and two (one task per bucket)
+    for (touched <- Seq(names.take(1), names.take(2))) {
+      val err = intercept[IllegalArgumentException](st.withWriteLock(st.commitBuckets(
+        Map("entities" -> st.BucketWrite(touched.map(b).toSet, rows)))))
+      assert(err.getMessage.contains("staged rows for untouched buckets"), err.getMessage)
+    }
+    assert(st.tableVersions("entities").last == before)
+    assert(st.entities.count() == 3)
+  }
+
   test("splitBucket: parent's rows partition exactly into two children; mixed generations read/write/lookup correctly") {
     import spark.implicits._
     import GraphStore.Bucket
@@ -1078,7 +1153,7 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     // read from the manifest — no max(id) job over the empty table
     val st = freshStore()
     val (_, entityJobs) = jobsDuring(seed(st))
-    assert(entityJobs == 11, s"first createEntities ran $entityJobs jobs")
+    assert(entityJobs == 9, s"first createEntities ran $entityJobs jobs")
     val (_, relationJobs) = jobsDuring(st.createRelations(Seq(
       Relation("Alice", "Bob", "knows"),
       Relation("Bob", "Acme Corp", "works_at"))))
@@ -1114,7 +1189,7 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     // the cascade rewrites three relations and three rev buckets
     val (_, deleteEntity) = jobsDuring(st.deleteEntity(hub))
     val (_, deleteRelation) = jobsDuring(st.deleteRelation(spread(5), spread(6), "side"))
-    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((11, 6, 15, 6)))
+    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((9, 4, 11, 4)))
     assert(st.getEntity(spread(7)) == Entity(spread(7), "t2", Seq("p", "q")))
     assert(st.getEntity("new-b") == Entity("new-b", "t", Seq("s")))
     intercept[NoSuchElementException](st.getEntity(hub))
