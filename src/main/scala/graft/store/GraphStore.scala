@@ -359,13 +359,14 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     val inserted = incoming.join(existing, Seq("name"), "left_anti")
       .select(col("name"), col("in_type").as("entity_type"), now.as("created_at"))
 
-    val newObs = cleaned.flatMap(e => e.observations.map(o => (e.name, o)))
-      .toDF("entity_name", "content")
     val survivors = readTable(s, "observations", touchedO)
       .filter(!col("entity_name").isin(names: _*))
+    // dense ids base+1 … base+n in batch order, assigned driver-side (the
+    // batch is capped), so the new mark is known without a max(id) job
     val base = s.nextIdBase("observations")
-    val fresh = newObs
-      .withColumn("id", monotonically_increasing_id() + lit(base + 1))
+    val newObs = cleaned.flatMap(e => e.observations.map(o => (e.name, o)))
+    val fresh = newObs.zipWithIndex.map { case ((n, o), i) => (base + 1 + i, n, o) }
+      .toDF("id", "entity_name", "content")
       .withColumn("created_at", now)
     // one manifest flip covers both tables — W3's "per-entity transaction"
     // becomes per-batch cross-table atomicity
@@ -375,7 +376,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       "observations" -> BucketWrite(touchedO,
         alignTo(ObservationsSchema,
           survivors.unionByName(alignTo(ObservationsSchema, fresh))))),
-      Map("observations" -> maxIdOf(fresh, base)))
+      Map("observations" -> (base + newObs.size)))
   }
 
   /** Bulk DataFrame upsert — the 100 TB ingest path (the Seq-based API above

@@ -213,6 +213,28 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     assert(ids.forall(_ <= mark))
   }
 
+  test("createEntities assigns dense observation ids base+1 … base+n in batch order, whatever the batch's partition count") {
+    val batch = (1 to 50).map(i => Entity(f"d$i%02d", "t", Seq(s"first $i", s"second $i")))
+    val want = batch.flatMap(e => e.observations.map(o => (e.name, o))).zipWithIndex
+      .map { case ((n, o), i) => (4L + i, n, o) }
+    // a local batch is split over this many scan partitions
+    val leaf = "spark.sql.leafNodeDefaultParallelism"
+    for (parallelism <- Seq(1, 8)) {
+      val dir = Files.createTempDirectory("graft-store-").toString
+      val st = new GraphStore(spark, dir)
+      st.initialize()
+      st.createEntities(Seq(Entity("base", "t", Seq("a", "b", "c")))) // ids 1..3
+      spark.conf.set(leaf, parallelism.toString)
+      try st.createEntities(batch) finally spark.conf.unset(leaf)
+      val got = st.observations.filter("entity_name != 'base'").orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+      assert(got == want, s"at $parallelism partitions")
+      val mark = new String(Files.readAllBytes(java.nio.file.Paths.get(dir, "_MANIFEST")))
+        .linesIterator.find(_.startsWith("maxid.observations=")).get.split("=")(1).toLong
+      assert(mark == 3L + want.size)
+    }
+  }
+
   test("searchNodes returns entities in relevance rank order (client.ts:241-246)") {
     val st = freshStore()
     st.createEntities(Seq(
@@ -1153,7 +1175,7 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     // read from the manifest — no max(id) job over the empty table
     val st = freshStore()
     val (_, entityJobs) = jobsDuring(seed(st))
-    assert(entityJobs == 9, s"first createEntities ran $entityJobs jobs")
+    assert(entityJobs == 7, s"first createEntities ran $entityJobs jobs")
     val (_, relationJobs) = jobsDuring(st.createRelations(Seq(
       Relation("Alice", "Bob", "knows"),
       Relation("Bob", "Acme Corp", "works_at"))))
@@ -1189,7 +1211,7 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     // the cascade rewrites three relations and three rev buckets
     val (_, deleteEntity) = jobsDuring(st.deleteEntity(hub))
     val (_, deleteRelation) = jobsDuring(st.deleteRelation(spread(5), spread(6), "side"))
-    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((9, 4, 11, 4)))
+    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((7, 4, 11, 4)))
     assert(st.getEntity(spread(7)) == Entity(spread(7), "t2", Seq("p", "q")))
     assert(st.getEntity("new-b") == Entity("new-b", "t", Seq("s")))
     intercept[NoSuchElementException](st.getEntity(hub))
