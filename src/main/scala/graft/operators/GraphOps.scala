@@ -149,8 +149,4 @@ object GraphOps {
     validateQuery(query)
     relationsForEntities(relations, searchEntities(entities, observations, query, limit))
   }
-
-  /** R11 existence check — client.ts:343-349. */
-  def entityExists(entities: DataFrame, name: String): Boolean =
-    !entities.filter(col("name") === lit(name)).limit(1).isEmpty
 }

@@ -518,29 +518,36 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     * point lookup, so discovery reads O(1 file) instead of a full
     * projected scan of relations. Symmetrically, the rev rows of
     * `name`'s OUT-edges live in their targets' rev buckets, discovered
-    * from fwd-bucket(name) (also one pruned read). Both discovery probes
-    * collect only distinct bucket tokens (≤B rows), and the REWRITE stays
-    * O(touched buckets) across both tables under the same manifest flip.
+    * from fwd-bucket(name) (also one pruned read). The existence check and
+    * both discovery reads are one union collected in ONE Spark job; the
+    * collected edge rows are bounded by the entity's degree (those edges
+    * sit in the buckets this call rewrites anyway) and their owners are
+    * resolved on the driver. The REWRITE stays O(touched buckets) across
+    * both tables under the same manifest flip: one write job per
+    * one-bucket table, a shuffle-map job plus the write per multi-bucket
+    * table (see [[commitBuckets]]).
     */
   def deleteEntity(name: String): Unit = withWriteLock {
     val s = state()
     val nbE = s.owner("entities", name)
     val nbO = s.owner("observations", name)
-    val entBucket = readTable(s, "entities", Set(nbE))
-    // existence probe on the file-pruned read; the rewrite keeps the bucket
-    if (!GraphOps.entityExists(readTableKeys(s, "entities", Seq(name)), name))
+    // one probe job over three file-pruned reads: the entity's own row, its
+    // in-edges' sources (from rev-bucket(name)) and its out-edges' targets
+    // (from fwd-bucket(name)); the edge rows are bounded by its degree
+    def side(tag: Int, t: String, self: String, other: String) =
+      readTableKeys(s, t, Seq(name)).filter(col(self) === name)
+        .select(lit(tag).as("tag"), col(other).as("key"))
+    val probe = side(0, "entities", "name", "name")
+      .union(side(1, "relations_rev", "target", "source"))
+      .union(side(2, "relations", "source", "target"))
+      .collect()
+    if (!probe.exists(_.getInt(0) == 0))
       throw new NoSuchElementException(s"Entity not found: $name")
-    // the bucket tokens of the `other` side of `name`'s edges in `table`,
-    // probed through ONE pruned file of `probe` (never a scan): in-edge
-    // discovery reads rev-bucket(name), out-edge rev cleanup fwd-bucket(name)
-    def sideBuckets(probe: String, self: String, other: String, table: String) =
-      readTableKeys(s, probe, Seq(name)).filter(col(self) === name)
-        .select(s.tokenCol(s.snap(table).keySet, col(other)).as("b")).distinct()
-        .collect().map(r => Bucket.fromToken(r.getString(0))).toSet
-    val relTouched =
-      sideBuckets("relations_rev", "target", "source", "relations") + s.owner("relations", name)
-    val revTouched =
-      sideBuckets("relations", "source", "target", "relations_rev") + s.owner("relations_rev", name)
+    def owners(tag: Int, t: String) = probe.collect {
+      case r if r.getInt(0) == tag => s.owner(t, r.getString(1))
+    }.toSet + s.owner(t, name)
+    val relTouched = owners(1, "relations")
+    val revTouched = owners(2, "relations_rev")
     val keep = !(col("source") === name || col("target") === name)
     commitBuckets(Map(
       "observations" -> BucketWrite(Set(nbO),
@@ -551,7 +558,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       "relations_rev" -> BucketWrite(revTouched,
         readTable(s, "relations_rev", revTouched).filter(keep)),
       "entities" -> BucketWrite(Set(nbE),
-        entBucket.filter(col("name") =!= name))))
+        readTable(s, "entities", Set(nbE)).filter(col("name") =!= name))))
   }
 
   /** W6 conditional delete with affected-count check (client.ts:382-405).

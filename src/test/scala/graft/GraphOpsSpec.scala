@@ -85,11 +85,6 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(out(1).getString(0) == "Nobody" && out(1).getSeq[String](2).isEmpty)
   }
 
-  test("R11: existence check") {
-    assert(GraphOps.entityExists(entities, "Alice"))
-    assert(!GraphOps.entityExists(entities, "Nobody"))
-  }
-
   test("property: search invariants over generated graphs (SURVEY §5.2)") {
     val rnd = new scala.util.Random(11)
     val words = Vector("alpha", "beta", "gamma", "delta", "omega", "zeta")
