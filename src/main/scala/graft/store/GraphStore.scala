@@ -562,7 +562,9 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
   }
 
   /** W6 conditional delete with affected-count check (client.ts:382-405).
-    * The probe and the rewrite both touch only bucket(from).
+    * The probe and the rewrite touch only bucket(from), plus the rev
+    * index's bucket(to): three Spark jobs, the probe and one write per
+    * table.
     */
   def deleteRelation(from: String, to: String, relationType: String): Unit = withWriteLock {
     val cond = col("source") === from && col("target") === to &&
@@ -572,11 +574,11 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
     val bRev = Set(s.owner("relations_rev", to))
     val bucket = readTable(s, "relations", b)
     // the existence probe prunes to the file(s) whose source range can hold
-    // `from`; the rewrite below still reads the whole (one) bucket — plus
-    // the ONE rev bucket keyed by `to`, under the same manifest flip
-    val n = readTableKeys(s, "relations", Seq(from)).filter(cond).limit(1).count()
-    if (n == 0) throw new NoSuchElementException(
-      s"Relation not found: $from -$relationType-> $to")
+    // `from` and runs one job (`isEmpty`; limit(1).count() runs two); the
+    // rewrite below still reads the whole (one) bucket — plus the ONE rev
+    // bucket keyed by `to`, under the same manifest flip
+    if (readTableKeys(s, "relations", Seq(from)).filter(cond).isEmpty)
+      throw new NoSuchElementException(s"Relation not found: $from -$relationType-> $to")
     commitBuckets(Map(
       "relations" -> BucketWrite(b, bucket.filter(!cond)),
       "relations_rev" -> BucketWrite(bRev,

@@ -1211,7 +1211,7 @@ class GraphStoreSpec extends AnyFunSuite with SparkTestBase {
     // the cascade rewrites three relations and three rev buckets
     val (_, deleteEntity) = jobsDuring(st.deleteEntity(hub))
     val (_, deleteRelation) = jobsDuring(st.deleteRelation(spread(5), spread(6), "side"))
-    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((7, 4, 7, 4)))
+    assert((createEntities, createRelations, deleteEntity, deleteRelation) == ((7, 4, 7, 3)))
     assert(st.getEntity(spread(7)) == Entity(spread(7), "t2", Seq("p", "q")))
     assert(st.getEntity("new-b") == Entity("new-b", "t", Seq("s")))
     intercept[NoSuchElementException](st.getEntity(hub))
