@@ -953,9 +953,9 @@ object SparkEntry {
     * `customer`, a %3 retype wave (2 observations each — upsert REPLACES
     * children), one ≤100-edge relations batch (the storeDiffSetup chain +
     * victim edges), then for entities AND observations the BYTE GATE
-    * trips (`bucketBytes` max is over the 2/3-of-max threshold by
-    * construction), `splitOversized` heals one bucket-sized commit at a
-    * time, and the gate RE-ARMS (both require'd). Cascade deletes then run
+    * trips (the upper half of the buckets is over the median bucket's
+    * bytes by construction), `splitOversized` heals one bucket-sized
+    * commit at a time, and the gate RE-ARMS (both require'd). Cascade deletes then run
     * against the SPLIT store — per-key ownership must resolve through the
     * new generation structure — and `mergeUndersized` reclaims sibling
     * pairs the deletes shrank under the gate. The `store_maintain` read
@@ -986,8 +986,15 @@ object SparkEntry {
         graft.store.Relation(f"Customer#$k%09d", f"Customer#${k + 1}%09d", "victim_out"),
         graft.store.Relation(f"Customer#${k + 1}%09d", f"Customer#$k%09d", "victim_in")))
       st.createRelations(chain ++ victimEdges)
+      // the gate is the median bucket's bytes: the upper half of the
+      // buckets trips it, and a split child (about half its parent's rows)
+      // falls under it. A fraction of the largest bucket never re-arms at
+      // small scale: per-file overhead dominates every bucket's bytes, so
+      // each child is barely smaller than its parent and the policy splits
+      // every bucket until its round cap.
       for (t <- Seq("entities", "observations")) {
-        val maxB = math.max(st.bucketBytes(t).values.max * 2 / 3, 1024L)
+        val sizes = st.bucketBytes(t).values.toSeq.sorted
+        val maxB = sizes(sizes.size / 2)
         require(st.splitOversized(t, maxB) > 0,
           s"the upsert waves must trip $t's byte gate")
         require(st.splitOversized(t, maxB) == 0,
