@@ -827,17 +827,17 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
           // into one task:
           //  - one file in all: no shuffle, one task writes it;
           //  - one file per bucket: each row goes to the partition of its
-          //    bucket's index in the sorted touched list (no sample, no
-          //    hash collisions — hash partitioning on `_bucket` would put
-          //    two buckets in one task and write two files per task);
+          //    bucket's index in the sorted touched list (no sample, and
+          //    no hash collisions: hash partitioning on `_bucket` can put
+          //    two buckets in one task and leave another task idle);
           //  - several files per bucket: range-partition on (bucket, key),
           //    the one layout that needs key bounds (a sampling job).
-          val tokens = touched.toSeq.sortBy(b => (b.gen, b.id)).map(_.token)
+          val ordered = touched.toSeq.sortBy(b => (b.gen, b.id))
           val parts =
-            if (filesPerBucket * tokens.size == 1) bucketed.coalesce(1)
-            else if (filesPerBucket == 1) bucketed.repartitionById(tokens.size,
-              array_position(lit(tokens.toArray), col("_bucket")).cast("int") - 1)
-            else bucketed.repartitionByRange(filesPerBucket * tokens.size,
+            if (filesPerBucket * ordered.size == 1) bucketed.coalesce(1)
+            else if (filesPerBucket == 1) bucketed.repartitionById(ordered.size,
+              array_position(lit(ordered.map(_.token).toArray), col("_bucket")).cast("int") - 1)
+            else bucketed.repartitionByRange(filesPerBucket * ordered.size,
               col("_bucket"), col(key))
           val split = parts.sortWithinPartitions(col("_bucket"), col(key))
           split.write.partitionBy("_bucket").parquet(stage.toString)
@@ -850,7 +850,7 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
           require(strays.isEmpty,
             s"commit to $t staged rows for untouched buckets " +
               strays.map(_.dirName).sorted.mkString("[", ",", "]"))
-          val out = touched.toSeq.sortBy(b => (b.gen, b.id)).map { k =>
+          val out = ordered.map { k =>
             Files.createDirectories(bucketVersionDir(t, k, 1).getParent)
             val src = stage.resolve(s"_bucket=${k.token}")
             // a bucket rewritten to EMPTY still stages a real dir (with an
@@ -1272,11 +1272,12 @@ class GraphStore(spark: SparkSession, val root: String, numBuckets: Int = 16,
       merges
     }
 
-  /** Compaction: rewrite every non-empty bucket of `table`'s current
-    * snapshot (the commit path's repartition-by-bucket already yields
-    * `filesPerBucket` files per bucket, so compaction is just a
-    * whole-table self-commit — then `vacuum` once reader horizons pass).
-    * File count per bucket is governed by `filesPerBucket`.
+  /** Compaction: rewrite every bucket of `table`'s current snapshot — a
+    * whole-table self-commit, then `vacuum` once reader horizons pass. The
+    * commit path already lays each bucket out as its target files: at
+    * `filesPerBucket = 1` one key-sorted file per bucket (partitioned by
+    * bucket index, no sampling job), above it `filesPerBucket`
+    * range-disjoint files (range-partitioned, one sampling job).
     */
   def compact(table: String): Unit = withWriteLock {
     val s = state()
